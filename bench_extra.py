@@ -17,6 +17,7 @@ Usage::
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -31,17 +32,31 @@ from bench import build_spark  # noqa: E402
 PLANS_DIR = REPO / "plans" / "r07"
 
 
+def _parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Time registered queries one at a time (best of "
+        "SPARK_GRAFT_BENCH_REPS reps, default 3)."
+    )
+    ap.add_argument("queries", nargs="*", help="registered query names")
+    ap.add_argument(
+        "--plans",
+        metavar="SUFFIX",
+        help="also write plans/r07/<query>_<SUFFIX>.txt",
+    )
+    ap.add_argument(
+        "--noop", action="store_true", help="noop sink instead of collect"
+    )
+    ap.add_argument(
+        "--all", action="store_true", help="every registered query"
+    )
+    opts = ap.parse_intermixed_args(argv)
+    if not opts.queries and not opts.all:
+        ap.error("give query names or --all")
+    return opts
+
+
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
-    suffix = None
-    if "--plans" in args:
-        i = args.index("--plans")
-        suffix = args[i + 1]
-        del args[i : i + 2]
-    use_noop = "--noop" in args
-    args = [a for a in args if a != "--noop"]
-    run_all = "--all" in args
-    args = [a for a in args if a != "--all"]
+    opts = _parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -50,7 +65,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     qmap = entrymod.queries()
-    names = list(qmap) if run_all else args
+    names = list(qmap) if opts.all else opts.queries
     unknown = [n for n in names if n not in qmap]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
@@ -61,19 +76,19 @@ def main() -> None:
     out: dict[str, float] = {}
     for name in names:
         fn = qmap[name]
-        if suffix is not None:
+        if opts.plans is not None:
             PLANS_DIR.mkdir(parents=True, exist_ok=True)
             df = fn(spark, sf_dir)
             plan = spark._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            (PLANS_DIR / f"{name}_{suffix}.txt").write_text(plan)
+            (PLANS_DIR / f"{name}_{opts.plans}.txt").write_text(plan)
         best = float("inf")
         for _ in range(reps):
             spark.sparkContext.setJobDescription(f"bench_extra: {name}")
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
-            if use_noop:
+            if opts.noop:
                 df.write.format("noop").mode("overwrite").save()
             else:
                 df.collect()

@@ -34,8 +34,10 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from pdftotext_spark.operators.materialize import (
     materialize,
@@ -912,22 +914,88 @@ FROM selected GROUP BY doc_id
 """
 
 
+# Driver-side connected-components cap: a candidate graph of at most
+# this many pair rows is collected and labelled by union-find on the
+# driver (a few hundred bytes of Python objects per edge, so the cap
+# bounds driver memory to a few hundred MB); a larger graph runs the
+# pointer-jumping loop on the cluster. Tests monkeypatch it to force
+# either path.
+DRIVER_CC_MAX_EDGES = 1_000_000
+
+
+def _union_find_labels(edges) -> dict:
+    """Union-find over ``(a, b)`` edges with path compression: maps
+    every endpoint to its component's minimum id. The smaller root
+    always wins a union, so every root IS its component's minimum —
+    the same canonical label the pointer-jumping loop converges to."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if ra < rb:
+                parent[rb] = ra
+            else:
+                parent[ra] = rb
+    return {x: find(x) for x in parent}
+
+
 def dedup_groups(pairs: DataFrame, max_iterations: int = 10) -> DataFrame:
     """Connected components over near-dup pairs: every doc maps to its
     group's minimum doc id (the canonical representative), transitive
     closure included — ``apply_dedup``'s one-pass policy upgraded to
-    full groups.
+    full groups. Returns (doc_id, group_id) for every doc in a pair,
+    typed like the pair columns.
 
-    Iterated label propagation with pointer jumping: every node adopts
-    the minimum label among itself and its neighbours, then labels
-    compress (``group_id := label(group_id)``) — O(log n) rounds
-    instead of O(diameter) (the standard Spark CC-without-GraphX
-    shape). Each *materialized* round fuses two propagate+compress
-    cycles into a single Spark job whose action is the convergence
-    count itself (lazy materialize), because per-round fixed cost
-    dominates at small scale; the first propagation is fused into the
-    label initialization as a plain groupBy. Returns (doc_id,
-    group_id) for every doc in a pair.
+    Size-adaptive. One bounded action fetches up to
+    :data:`DRIVER_CC_MAX_EDGES` + 1 pair rows. At or below the cap the
+    graph is labelled by union-find on the driver
+    (:func:`_union_find_labels`) and returned as a local frame: one
+    Spark action in total, where the loop spends one checkpoint job
+    per round plus two eager cuts — after LSH banding the
+    candidate graph is small even when the corpus is not, the same
+    split as ``bpe_merges_driver`` (Spark aggregates, the driver
+    loops). Above the cap the pairs are recomputed and labelled by
+    :func:`_dedup_groups_spark`; both paths emit identical rows
+    (pinned by a differential test)."""
+    # the Spark path's labels carry the union type of both endpoints
+    id_type = (
+        pairs.select("doc_a").union(pairs.select("doc_b")).schema[0].dataType
+    )
+    rows = pairs.select("doc_a", "doc_b").limit(DRIVER_CC_MAX_EDGES + 1).collect()
+    if len(rows) > DRIVER_CC_MAX_EDGES:
+        return _dedup_groups_spark(pairs, max_iterations)
+    schema = StructType(
+        [StructField("doc_id", id_type), StructField("group_id", id_type)]
+    )
+    labels = _union_find_labels(rows)
+    return pairs.sparkSession.createDataFrame(
+        pd.DataFrame({"doc_id": list(labels), "group_id": list(labels.values())}),
+        schema,
+    )
+
+
+def _dedup_groups_spark(pairs: DataFrame, max_iterations: int) -> DataFrame:
+    """The above-cap path of :func:`dedup_groups`: iterated label
+    propagation with pointer jumping. Every node adopts the minimum
+    label among itself and its neighbours, then labels compress
+    (``group_id := label(group_id)``) — O(log n) rounds instead of
+    O(diameter) (the standard Spark CC-without-GraphX shape). Each
+    *materialized* round fuses two propagate+compress cycles into a
+    single Spark job whose action is the convergence count itself
+    (lazy materialize), because per-round fixed cost dominates at
+    small scale; the first propagation is fused into the label
+    initialization as a plain groupBy.
 
     (Measured dead ends: explicitly repartitioning edges/labels to an
     edge-count-sized partition count made sf0.1 *slower* — 10.2s →
@@ -1018,8 +1086,8 @@ def dedup_groups_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     — A~B, B~C ⇒ all three share a group even if A and C never paired).
 
     The DuckDB oracle expresses the same closure as a recursive CTE,
-    so the iterative Spark CC gets a *full* value-hash check, not just
-    a rows-only one."""
+    so the connected components get a *full* value-hash check, not
+    just a rows-only one."""
     pairs = minhash_lsh_pairs(spark, sf_dir)
     return dedup_groups(pairs).select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -1295,7 +1363,7 @@ JOIN c cb ON cb.doc_id = est.doc_b
 
 def dedup_groups_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the SimHash near-dup graph — the same
-    iterative CC engine as :func:`dedup_groups_minhash` driven by the
+    CC engine as :func:`dedup_groups_minhash` driven by the
     second candidate family (banded Hamming-distance pairs), so both
     sketch families feed the identical grouping machinery. Checked
     against a recursive-CTE transitive closure in DuckDB."""
@@ -2099,10 +2167,10 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of ``apply_dedup``'s keep-first. Singleton docs form their
     own group and are always kept.
 
-    100 TB shape: the detect→group chain (banded LSH + pointer-jumping
-    CC) plus one window over groups — partitioned by group_id, so no
-    global sort; group sizes are near-dup cluster sizes (small by
-    construction after banding)."""
+    100 TB shape: the detect→group chain (banded LSH + connected
+    components, :func:`dedup_groups`) plus one window over groups —
+    partitioned by group_id, so no global sort; group sizes are
+    near-dup cluster sizes (small by construction after banding)."""
     from pyspark.sql.window import Window
 
     docs = _read(spark, sf_dir, "documents")
@@ -2154,8 +2222,8 @@ FROM membered
 # ids are offset by k * FUSED_NS; ids must stay below the stride (2^40 ≈
 # 1.1e12 — far above any doc/vec id in the data contract) so the three
 # subgraphs are disjoint and min-label arithmetic per family is the
-# monotonic shift id -> k*FUSED_NS + id, preserving every comparison the
-# pointer-jumping loop makes.
+# monotonic shift id -> k*FUSED_NS + id, preserving every comparison
+# union-find or the pointer-jumping loop makes.
 FUSED_NS = 1 << 40
 
 
@@ -2195,9 +2263,11 @@ def dedup_groups_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Edges never cross families (ids are namespaced by ``k*FUSED_NS``),
     so the union graph is three disjoint subgraphs and a single
-    pointer-jumping fixed point computes all three label tables at
-    once: the per-round job overhead that dominates the iterative CC
-    cost (VERDICT r3) is paid once, not three times.  Per-family
+    :func:`dedup_groups` call labels all three at once: one bounded
+    edge fetch instead of three, and, for a graph above
+    :data:`DRIVER_CC_MAX_EDGES`, one pointer-jumping fixed point whose
+    per-round job overhead (VERDICT r3) is paid once, not three
+    times.  Per-family
     labels recover exactly — ``family = id >> 40``,
     ``doc_id = id & (FUSED_NS-1)`` — and equal the standalone
     :func:`dedup_groups_minhash` / :func:`dedup_groups_simhash` /

@@ -1,8 +1,12 @@
 """Cluster-safe DataFrame materialization for iterative operators.
 
-The pointer-jumping connected-components loops (dedup/similarity) and
-the LSH signature-reuse points must cut lineage every round or each
-iteration re-derives its whole upstream (measured 34s → 10s at sf0.1).
+Iterative loops and multi-consumer frames must cut lineage or each
+consumer re-derives its whole upstream: the unrolled trainers (BPE,
+Lloyd, ``quality_lr``), the LSH signature-reuse points, and the
+pointer-jumping connected-components loop, which runs only for a
+candidate graph above ``dedup.DRIVER_CC_MAX_EDGES`` (smaller graphs
+are labelled by union-find on the driver and need no cut) — there a
+per-round cut measured 34s → 10s at sf0.1.
 ``localCheckpoint`` does that cheaply but stores blocks on executor
 local disk/memory only — on a real cluster a single lost executor
 aborts a 100 TB job mid-iteration (VERDICT r3 §wrong #1).
@@ -18,8 +22,9 @@ Usage keeps chains readable::
 
     df.transform(materialize)           # eager
     df.transform(materialize_lazy)      # lazy (materializes under the
-                                        # next action, e.g. the CC
-                                        # convergence count)
+                                        # next action, e.g. the
+                                        # pointer-jumping convergence
+                                        # count)
 """
 
 from __future__ import annotations

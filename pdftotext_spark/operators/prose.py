@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pdftotext_spark.operators import curation, dedup
-from pdftotext_spark.operators.materialize import materialize
+from pdftotext_spark.operators.materialize import materialize, materialize_lazy
 
 # words per planted sentence (one sentence per line in the body)
 PROSE_SENT_W = 8
@@ -170,11 +170,15 @@ def quality_vote_prose(spark: SparkSession, sf_dir: str) -> DataFrame:
     FIVE panel consumers, so the pipelined map would re-run the
     sentence regexp per panel (the two-consumer lineage rule, times
     five — measured: best 2.57→2.31 s and spread 2.6–4.8→2.3–3.0 s at
-    sf0.1). Single-consumer users of :func:`prose_frame` (the
-    boilerplate miners) keep the zero-shuffle pipelined form."""
+    sf0.1). The cut is lazy: it fills under the vote's own action, so
+    construction runs no scan and the five panels still share one
+    lineage cut (interleaved A/B against the eager cut, same rows:
+    median 4.65→4.48 s at sf0.1, 1.57→1.49 s on 500 docs, local[4]
+    on a 4-core host). Single-consumer users of :func:`prose_frame`
+    (the boilerplate miners) keep the zero-shuffle pipelined form."""
     return curation.quality_vote_for(
         prose_frame(_read(spark, sf_dir, "documents")).transform(
-            materialize
+            materialize_lazy
         )
     )
 

@@ -618,9 +618,18 @@ _BATCH_TERMS_SQL = ", ".join(
     f"'{t}'"
     for t in sorted({t for _, ts in BM25_BATCH_QUERIES for t in ts})
 )
-_BATCH_VALUES_SQL = ", ".join(
-    f"('{qid}', '{t}')" for qid, ts in BM25_BATCH_QUERIES for t in ts
-)
+
+
+def _batch_values_sql(queries: tuple[tuple[str, tuple[str, ...]], ...]) -> str:
+    """The oracle's (query_id, term) VALUES rows, terms deduped per
+    query by the same order-preserving ``dict.fromkeys`` as the Spark
+    map in :func:`bm25_batch_topk_for`."""
+    return ", ".join(
+        f"('{qid}', '{t}')" for qid, ts in queries for t in dict.fromkeys(ts)
+    )
+
+
+_BATCH_VALUES_SQL = _batch_values_sql(BM25_BATCH_QUERIES)
 
 BM25_BATCH_TOPK_SQL = f"""
 WITH {_postings_ctes()},

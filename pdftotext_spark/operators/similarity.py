@@ -1047,7 +1047,7 @@ SELECT * FROM (
 def dedup_groups_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the embedding-space SRP near-dup
     graph — the third candidate family (after MinHash and SimHash)
-    feeding the shared iterative CC engine
+    feeding the shared CC engine
     (:func:`pdftotext_spark.operators.dedup.dedup_groups`), so
     text-shingle, token-bit and embedding near-dups all group through
     identical machinery. Checked against a recursive-CTE transitive

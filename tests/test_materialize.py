@@ -43,12 +43,20 @@ def test_materialize_routes_by_checkpoint_dir(spark, tmp_path):
     assert spark.sparkContext.getCheckpointDir() is None
 
 
-def test_dedup_groups_identical_under_reliable_checkpointing(spark, tmp_path):
+def test_dedup_groups_identical_under_reliable_checkpointing(
+    spark, tmp_path, monkeypatch
+):
     """The full detect→CC chain with a checkpoint dir configured must
     produce byte-identical groups to the localCheckpoint run (and
-    actually write reliable checkpoints)."""
+    actually write reliable checkpoints). The cap is set to zero so
+    the chain takes the pointer-jumping loop, the only CC path that
+    cuts lineage; the driver union-find path must agree with both."""
     from pdftotext_spark.operators import dedup
 
+    driver = sorted(
+        tuple(r) for r in dedup.dedup_groups_minhash(spark, SF_DIR).collect()
+    )
+    monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", 0)
     baseline = sorted(
         tuple(r) for r in dedup.dedup_groups_minhash(spark, SF_DIR).collect()
     )
@@ -63,5 +71,5 @@ def test_dedup_groups_identical_under_reliable_checkpointing(spark, tmp_path):
         assert rdd_dirs, "reliable checkpoint dir unused — still localCheckpoint?"
     finally:
         _unset_checkpoint_dir(spark)
-    assert baseline == reliable
+    assert baseline == reliable == driver
     assert len(baseline) > 0

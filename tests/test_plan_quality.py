@@ -775,4 +775,13 @@ def test_perplexity_rank_window_is_tie_bounded(spark):
     ]
     assert rn_lines, "rank window missing"
     for ln in rn_lines:
-        assert "logloss_bits" in ln.split("windowspecdefinition", 1)[1]
+        assert "windowspecdefinition" in ln, f"no window spec in: {ln}"
+        spec = ln.split("windowspecdefinition", 1)[1]
+        # windowspecdefinition(<partition keys>, <order keys> ASC ...):
+        # the text before the first " ASC" ends with the first ORDER
+        # key, so drop it to leave the partition keys alone
+        keys = spec.split(" ASC", 1)[0].lstrip("(").split(", ")[:-1]
+        assert any(k.startswith("logloss_bits#") for k in keys), (
+            f"rank window partitions by {keys}: logloss_bits must be a "
+            "partition key, not only an order key"
+        )

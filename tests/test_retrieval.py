@@ -367,13 +367,20 @@ def test_bm25_batch_matches_single_query_paths(spark):
     queries = (
         ("qa", ("spark", "join")),
         ("qb", ("join", "window")),   # 'join' shared with qa
+        ("qd", ("filter", "stream", "filter")),  # duplicated term
         ("qc", ("absentterm",)),      # no postings at all
     )
     df = retrieval.bm25_batch_topk_for(_frame(spark, texts), queries=queries, k=3)
     rows = df.collect()
     assert not [r for r in rows if r.query_id == "qc"]
+    # a duplicated term counts once, as in the single-query isin()
+    assert max(r.n_terms for r in rows if r.query_id == "qd") == 2
+    # the oracle's VALUES rows dedup the same way
+    assert retrieval._batch_values_sql(queries[2:3]) == (
+        "('qd', 'filter'), ('qd', 'stream')"
+    )
     postings, stats = retrieval.bm25_index_for(_frame(spark, texts))
-    for qid, terms in queries[:2]:
+    for qid, terms in queries[:3]:
         single = [
             (r.doc_id, r.n_terms, r.bm25_micro)
             for r in retrieval.bm25_topk_indexed_for(
@@ -387,6 +394,6 @@ def test_bm25_batch_matches_single_query_paths(spark):
         ]
         assert got == single and 1 <= len(got) <= 3
     # ranks are contiguous from 1 within each query
-    for qid in ("qa", "qb"):
+    for qid in ("qa", "qb", "qd"):
         ranks = sorted(r.q_rank for r in rows if r.query_id == qid)
         assert ranks == list(range(1, len(ranks) + 1))
