@@ -916,10 +916,18 @@ FROM selected GROUP BY doc_id
 
 # Driver-side connected-components cap: a candidate graph of at most
 # this many pair rows is collected and labelled by union-find on the
-# driver (a few hundred bytes of Python objects per edge, so the cap
-# bounds driver memory to a few hundred MB); a larger graph runs the
-# pointer-jumping loop on the cluster. Tests monkeypatch it to force
-# either path.
+# driver; a larger graph runs the pointer-jumping loop on the cluster.
+# Tests monkeypatch it to force either path.
+#
+# Set by driver memory, measured with scripts/cc_crossover.py (random
+# trees of 6 docs, local[4] on a 4-core Xeon): the driver path grows
+# the Python peak by ~340 bytes per edge, linearly (108 MB at 300k
+# edges, 337 MB at 1M, 730 MB at 2M). The cap keeps that near 350 MB,
+# about a third of Spark's default 1 GB driver heap. Time does not set
+# it there: union-find beat the loop 3-6x at every size from 10k to
+# 1M edges (14.8 s vs 45.7 s at 1M), and the JVM peaked lower too.
+# Where the loop starts to win on a many-executor cluster is not
+# measured.
 DRIVER_CC_MAX_EDGES = 1_000_000
 
 
@@ -957,22 +965,30 @@ def dedup_groups(pairs: DataFrame, max_iterations: int = 10) -> DataFrame:
     full groups. Returns (doc_id, group_id) for every doc in a pair,
     typed like the pair columns.
 
-    Size-adaptive. One bounded action fetches up to
-    :data:`DRIVER_CC_MAX_EDGES` + 1 pair rows. At or below the cap the
+    Size-adaptive. The pair rows are cut once (:func:`materialize`),
+    then one bounded action fetches up to
+    :data:`DRIVER_CC_MAX_EDGES` + 1 of them. At or below the cap the
     graph is labelled by union-find on the driver
-    (:func:`_union_find_labels`) and returned as a local frame: one
-    Spark action in total, where the loop spends one checkpoint job
-    per round plus two eager cuts — after LSH banding the
+    (:func:`_union_find_labels`) and returned as a local frame: two
+    Spark jobs in total, where the loop spends one checkpoint job
+    per round plus two more eager cuts — after LSH banding the
     candidate graph is small even when the corpus is not, the same
     split as ``bpe_merges_driver`` (Spark aggregates, the driver
-    loops). Above the cap the pairs are recomputed and labelled by
-    :func:`_dedup_groups_spark`; both paths emit identical rows
-    (pinned by a differential test)."""
+    loops). Above the cap :func:`_dedup_groups_spark` labels the
+    graph; once its loop converges, both paths emit identical rows
+    (pinned by a differential test).
+
+    The cut comes before the fetch so that above the cap the loop
+    reads the pairs back instead of re-running the pair detection
+    (the LSH self-join, the costly part at scale). A ``persist`` in
+    its place made the fused three-family query about 20% slower on
+    the driver path; the cut was no slower than no cut at all."""
     # the Spark path's labels carry the union type of both endpoints
     id_type = (
         pairs.select("doc_a").union(pairs.select("doc_b")).schema[0].dataType
     )
-    rows = pairs.select("doc_a", "doc_b").limit(DRIVER_CC_MAX_EDGES + 1).collect()
+    pairs = pairs.select("doc_a", "doc_b").transform(materialize)
+    rows = pairs.limit(DRIVER_CC_MAX_EDGES + 1).collect()
     if len(rows) > DRIVER_CC_MAX_EDGES:
         return _dedup_groups_spark(pairs, max_iterations)
     schema = StructType(
@@ -1010,8 +1026,7 @@ def _dedup_groups_spark(pairs: DataFrame, max_iterations: int) -> DataFrame:
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .distinct()
         # materialize once: edges feed two joins per round, and a lazy
-        # plan would re-derive the (possibly expensive) pair detection
-        # every iteration — measured 34.2s → 10.2s at sf0.1 on LSH pairs
+        # plan would re-derive the union and distinct every iteration
         .transform(materialize)
     )
     # round 0 fused into initialization: with identity labels the

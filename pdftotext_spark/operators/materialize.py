@@ -5,8 +5,8 @@ consumer re-derives its whole upstream: the unrolled trainers (BPE,
 Lloyd, ``quality_lr``), the LSH signature-reuse points, and the
 pointer-jumping connected-components loop, which runs only for a
 candidate graph above ``dedup.DRIVER_CC_MAX_EDGES`` (smaller graphs
-are labelled by union-find on the driver and need no cut) — there a
-per-round cut measured 34s → 10s at sf0.1.
+are labelled by union-find on the driver after a single cut of the
+pair rows) — there a per-round cut measured 34s → 10s at sf0.1.
 ``localCheckpoint`` does that cheaply but stores blocks on executor
 local disk/memory only — on a real cluster a single lost executor
 aborts a 100 TB job mid-iteration (VERDICT r3 §wrong #1).

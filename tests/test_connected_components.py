@@ -3,9 +3,11 @@
 A candidate graph of at most ``DRIVER_CC_MAX_EDGES`` pair rows is
 labelled by union-find on the driver; a larger one by the Spark
 pointer-jumping loop (``_dedup_groups_spark``). Every test forces each
-path by monkeypatching the cap, checks through a spy that the intended
-path really ran, and asserts both paths emit the same rows as a
-hand-computed labelling: every doc maps to its component's minimum id.
+path by monkeypatching the cap (the ``cc_under_cap`` fixture), checks
+through a spy that the intended path really ran, and asserts both
+paths emit the same rows as a hand-computed labelling: every doc maps
+to its component's minimum id. The boundary itself and the ``FUSED_NS``
+namespacing are covered the same way in ``test_spark_pipeline.py``.
 """
 
 from __future__ import annotations
@@ -15,27 +17,10 @@ import random
 import pytest
 
 from pdftotext_spark.operators import dedup
-from pdftotext_spark.operators.dedup import FUSED_NS
 
 pytestmark = pytest.mark.spark
 
 _SCHEMA = "doc_a long, doc_b long"
-
-
-def _run(pairs, monkeypatch, cap, max_iterations=10):
-    """Rows of ``dedup_groups`` under ``cap``, and whether the Spark
-    loop ran."""
-    calls = []
-    spark_cc = dedup._dedup_groups_spark
-
-    def spy(p, n):
-        calls.append(n)
-        return spark_cc(p, n)
-
-    monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", cap)
-    monkeypatch.setattr(dedup, "_dedup_groups_spark", spy)
-    rows = dedup.dedup_groups(pairs, max_iterations).collect()
-    return sorted(tuple(r) for r in rows), bool(calls)
 
 
 def _expected(edges) -> list[tuple[int, int]]:
@@ -59,11 +44,11 @@ def _expected(edges) -> list[tuple[int, int]]:
     return sorted(label.items())
 
 
-def _assert_paths_agree(spark, monkeypatch, edges):
+def _assert_paths_agree(spark, cc_under_cap, edges):
     pairs = spark.createDataFrame(edges, _SCHEMA)
-    driver, ran_spark = _run(pairs, monkeypatch, cap=len(edges))
+    driver, ran_spark = cc_under_cap(pairs, cap=len(edges))
     assert not ran_spark, "driver path expected at the cap"
-    looped, ran_spark = _run(pairs, monkeypatch, cap=0)
+    looped, ran_spark = cc_under_cap(pairs, cap=0)
     assert ran_spark, "Spark path expected above the cap"
     assert driver == looped == _expected(edges)
     return driver
@@ -76,57 +61,48 @@ _CHAIN_IDS = random.Random(11).sample(range(100, 140), 40)
 _CHAIN = [(_CHAIN_IDS[i], _CHAIN_IDS[i + 1]) for i in range(39)]
 
 
-def test_chain_needs_more_than_two_rounds(spark, monkeypatch):
-    rows = _assert_paths_agree(spark, monkeypatch, _CHAIN)
+def test_chain_needs_more_than_two_rounds(spark, cc_under_cap, monkeypatch):
+    rounds = []
+    lazy_cut = dedup.materialize_lazy
+
+    def count_round(df):
+        rounds.append(1)
+        return lazy_cut(df)
+
+    # the loop cuts each round's labels lazily, once per round
+    monkeypatch.setattr(dedup, "materialize_lazy", count_round)
+    rows = _assert_paths_agree(spark, cc_under_cap, _CHAIN)
     assert {g for _, g in rows} == {100}
-    # the case is deep enough to exercise the loop: two rounds do not
-    # reach the fixed point
-    pairs = spark.createDataFrame(_CHAIN, _SCHEMA)
-    two_rounds, _ = _run(pairs, monkeypatch, cap=0, max_iterations=2)
-    assert two_rounds != rows
+    # deep enough to exercise the loop: more than two rounds change
+    # labels before the round that sees no change
+    assert len(rounds) - 1 > 2, f"loop converged in {len(rounds)} rounds"
 
 
-def test_star_with_small_leaf(spark, monkeypatch):
+def test_star_with_small_leaf(spark, cc_under_cap):
     # the centre is not the minimum: leaf 3 labels the whole star
     edges = [(50, leaf) for leaf in range(51, 61)] + [(3, 50)]
-    rows = _assert_paths_agree(spark, monkeypatch, edges)
+    rows = _assert_paths_agree(spark, cc_under_cap, edges)
     assert {g for _, g in rows} == {3}
 
 
-def test_self_loops(spark, monkeypatch):
-    rows = _assert_paths_agree(spark, monkeypatch, [(5, 5), (7, 7), (8, 7)])
+def test_self_loops(spark, cc_under_cap):
+    rows = _assert_paths_agree(spark, cc_under_cap, [(5, 5), (7, 7), (8, 7)])
     assert rows == [(5, 5), (7, 7), (8, 7)]
 
 
-def test_duplicated_and_mirrored_pairs(spark, monkeypatch):
+def test_duplicated_and_mirrored_pairs(spark, cc_under_cap):
     edges = [(2, 1), (1, 2), (1, 2), (3, 2), (2, 3), (9, 10), (10, 9)]
-    rows = _assert_paths_agree(spark, monkeypatch, edges)
+    rows = _assert_paths_agree(spark, cc_under_cap, edges)
     assert rows == [(1, 1), (2, 1), (3, 1), (9, 9), (10, 9)]
 
 
-def test_minimum_not_first_seen(spark, monkeypatch):
+def test_minimum_not_first_seen(spark, cc_under_cap):
     # each component's minimum arrives last, after two larger roots
     # have already merged
     edges = [(9, 6), (20, 15), (6, 4), (15, 11)]
-    rows = _assert_paths_agree(spark, monkeypatch, edges)
+    rows = _assert_paths_agree(spark, cc_under_cap, edges)
     assert rows == [
         (4, 4), (6, 4), (9, 4), (11, 11), (15, 11), (20, 11)
-    ]
-
-
-def test_fused_namespace_ids(spark, monkeypatch):
-    # id 2 occurs in families 0 and 1; the namespaces must not merge
-    ns1, ns2 = FUSED_NS, 2 * FUSED_NS
-    edges = [
-        (2, 3), (1, 2),
-        (ns1 + 9, ns1 + 2),
-        (ns2 + 5, ns2 + 4), (ns2 + 4, ns2 + 7),
-    ]
-    rows = _assert_paths_agree(spark, monkeypatch, edges)
-    assert rows == [
-        (1, 1), (2, 1), (3, 1),
-        (ns1 + 2, ns1 + 2), (ns1 + 9, ns1 + 2),
-        (ns2 + 4, ns2 + 4), (ns2 + 5, ns2 + 4), (ns2 + 7, ns2 + 4),
     ]
 
 
@@ -147,26 +123,35 @@ def test_id_type_follows_input(spark, monkeypatch):
             ]
 
 
-def test_empty_pairs(spark, monkeypatch):
+def test_empty_pairs(spark, cc_under_cap):
     pairs = spark.createDataFrame([], _SCHEMA)
-    rows, ran_spark = _run(pairs, monkeypatch, cap=dedup.DRIVER_CC_MAX_EDGES)
+    rows, ran_spark = cc_under_cap(pairs, cap=dedup.DRIVER_CC_MAX_EDGES)
     assert rows == [] and not ran_spark
 
 
-def test_cap_boundary_switches_to_spark_loop(spark, monkeypatch):
-    """One row past the cap runs the pointer-jumping loop; exactly at
-    the cap stays on the driver. Registered queries take the driver
-    path at their sizes, so this keeps the fallback covered."""
-    edges = [(1, 2), (2, 3), (3, 4), (10, 11)]
-    pairs = spark.createDataFrame(edges, _SCHEMA)
-    at_cap, ran_spark = _run(pairs, monkeypatch, cap=len(edges))
-    assert not ran_spark
-    over_cap, ran_spark = _run(pairs, monkeypatch, cap=len(edges) - 1)
-    assert ran_spark
-    assert at_cap == over_cap == _expected(edges)
+def test_pairs_evaluated_once_on_either_path(spark, cc_under_cap):
+    """The pair detection upstream runs once: the loop above the cap
+    reads the rows the bounded fetch already produced instead of
+    recomputing them. A counting UDF stands in for the upstream."""
+    from pyspark.sql import functions as F
+
+    edges = [(1, 2), (2, 3), (5, 6)]
+    for cap in (len(edges), 0):
+        seen = spark.sparkContext.accumulator(0)
+
+        def count(x):
+            seen.add(1)
+            return x
+
+        pairs = spark.createDataFrame(edges, _SCHEMA).withColumn(
+            "doc_a", F.udf(count, "long")("doc_a")
+        )
+        rows, _ = cc_under_cap(pairs, cap=cap)
+        assert rows == _expected(edges)
+        assert seen.value == len(edges), f"cap={cap}: {seen.value} evaluations"
 
 
-def test_longdocs_candidate_graph(spark, monkeypatch, tmp_path):
+def test_longdocs_candidate_graph(spark, cc_under_cap, tmp_path):
     """The MinHash-LSH candidate graph of the planted-truth long-doc
     corpus: both paths agree, and every planted exact pair shares the
     smaller member's group."""
@@ -179,7 +164,7 @@ def test_longdocs_candidate_graph(spark, monkeypatch, tmp_path):
     lsh = dedup.minhash_lsh_pairs(spark, str(tmp_path)).select("doc_a", "doc_b")
     edges = [tuple(r) for r in lsh.collect()]
     assert edges
-    rows = _assert_paths_agree(spark, monkeypatch, edges)
+    rows = _assert_paths_agree(spark, cc_under_cap, edges)
     label = dict(rows)
     for a, b in truth.pairs_of("exact"):
         assert label[a] == label[b] <= a

@@ -49,8 +49,8 @@ def test_dedup_groups_identical_under_reliable_checkpointing(
     """The full detect→CC chain with a checkpoint dir configured must
     produce byte-identical groups to the localCheckpoint run (and
     actually write reliable checkpoints). The cap is set to zero so
-    the chain takes the pointer-jumping loop, the only CC path that
-    cuts lineage; the driver union-find path must agree with both."""
+    the chain takes the pointer-jumping loop, which cuts lineage every
+    round; the driver union-find path must agree with both."""
     from pdftotext_spark.operators import dedup
 
     driver = sorted(

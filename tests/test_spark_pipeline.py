@@ -513,17 +513,17 @@ def test_apply_dedup_end_to_end(spark):
     assert sorted(r.doc_id for r in kept.collect()) == [1, 3]
 
 
-def test_dedup_groups_transitive_closure(spark):
+def test_dedup_groups_transitive_closure(spark, cc_under_cap):
     """Connected components: chains collapse to one group id (the
-    minimum member), across multiple hops."""
-    from pdftotext_spark.operators.dedup import dedup_groups
-
+    minimum member), across multiple hops — on both paths: union-find
+    on the driver exactly at the cap, the pointer-jumping loop one pair
+    past it."""
     # two chains: 1-2-3-4 (via consecutive pairs) and 10-11; 20 isolated-pairless
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11)], "doc_a long, doc_b long"
-    )
-    groups = {r.doc_id: r.group_id for r in dedup_groups(pairs).collect()}
-    assert groups == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    edges = [(1, 2), (2, 3), (3, 4), (10, 11)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    want = [(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)]
+    assert cc_under_cap(pairs, cap=len(edges)) == (want, False)
+    assert cc_under_cap(pairs, cap=len(edges) - 1) == (want, True)
 
 
 def test_dedup_groups_multi_equals_standalone_families(spark):
@@ -553,11 +553,11 @@ def test_dedup_groups_multi_equals_standalone_families(spark):
     assert all(by_fam.values())
 
 
-def test_dedup_groups_multi_constructed_namespacing(spark):
+def test_dedup_groups_multi_constructed_namespacing(spark, cc_under_cap):
     """Constructed input: same doc ids in two families must NOT merge
     across families, and per-family representatives stay the numeric
-    min (the shift preserves ordering)."""
-    from pdftotext_spark.operators.dedup import FUSED_NS, dedup_groups
+    min (the shift preserves ordering) — on both CC paths."""
+    from pdftotext_spark.operators.dedup import FUSED_NS
 
     # family 0: chain 1-2-3; family 1: pair 2-9 (shares id 2!)
     pairs = spark.createDataFrame(
@@ -568,14 +568,15 @@ def test_dedup_groups_multi_constructed_namespacing(spark):
         ],
         "doc_a long, doc_b long",
     )
-    groups = {r.doc_id: r.group_id for r in dedup_groups(pairs).collect()}
-    assert groups == {
-        1: 1,
-        2: 1,
-        3: 1,
-        FUSED_NS + 2: FUSED_NS + 2,
-        FUSED_NS + 9: FUSED_NS + 2,
-    }
+    want = [
+        (1, 1),
+        (2, 1),
+        (3, 1),
+        (FUSED_NS + 2, FUSED_NS + 2),
+        (FUSED_NS + 9, FUSED_NS + 2),
+    ]
+    assert cc_under_cap(pairs, cap=3) == (want, False)
+    assert cc_under_cap(pairs, cap=0) == (want, True)
 
 
 def test_ns_shift_guard_raises_on_out_of_stride_ids(spark):
