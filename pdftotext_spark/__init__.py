@@ -20,3 +20,14 @@ re-expressed Spark-first:
 """
 
 __version__ = "0.1.0"
+
+import sys as _sys
+
+# On a Spark Python worker (a task is running: unpickling a UDF imports
+# this package), stop PySpark's per-task ``importlib.invalidate_caches()``
+# from re-reading every unchanged zip on sys.path. The driver and
+# core-only imports never reach this branch and stay pyspark-free.
+if "pyspark" in _sys.modules and _sys.modules["pyspark"].TaskContext.get() is not None:
+    from pdftotext_spark.sources.shipping import install_zip_guard
+
+    install_zip_guard()

@@ -78,7 +78,11 @@ def extract_batches(
     per-batch timing lines ``{pid, rows, arrow_read_us, parse_us,
     frame_build_us, emit_gap_us}`` — the floor-instrumentation view of
     where a task's wall time goes (Arrow ingest vs Python parse vs
-    result construction vs post-yield serialization).
+    result construction vs post-yield serialization). A task's wall
+    time also includes PySpark's worker set-up before the first batch
+    (reading the task, unpickling this function, refreshing import
+    caches), which no ``parse_us`` covers; ``shipping.install_zip_guard``
+    keeps its import-cache part near zero.
     """
     import os
 

@@ -975,8 +975,9 @@ def dedup_groups(pairs: DataFrame, max_iterations: int = 10) -> DataFrame:
     candidate graph is small even when the corpus is not, the same
     split as ``bpe_merges_driver`` (Spark aggregates, the driver
     loops). Above the cap :func:`_dedup_groups_spark` labels the
-    graph; once its loop converges, both paths emit identical rows
-    (pinned by a differential test).
+    graph; both paths emit identical rows (pinned by a differential
+    test), and the loop raises if it has not converged within
+    ``max_iterations`` rounds.
 
     The cut comes before the fetch so that above the cap the loop
     reads the pairs back instead of re-running the pair detection
@@ -1020,6 +1021,10 @@ def _dedup_groups_spark(pairs: DataFrame, max_iterations: int) -> DataFrame:
     And THREE fused cycles per round did not cut the round count on
     the sf0.1 LSH graph — still 3 rounds, 6.6s → 11-22s from the
     deeper per-round plans. Two cycles is the measured optimum.)
+
+    Raises ``RuntimeError`` when ``max_iterations`` rounds pass and the
+    last one still changed labels, rather than return labels that may
+    not be the component minima.
     """
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -1075,8 +1080,12 @@ def _dedup_groups_spark(pairs: DataFrame, max_iterations: int) -> DataFrame:
         changed = updated.filter(F.col("group_id") != F.col("prev")).count()
         labels = updated.drop("prev")
         if changed == 0:
-            break
-    return labels
+            return labels
+    # the last round still moved labels: they may not be component minima
+    raise RuntimeError(
+        f"dedup_groups: labels still changing after max_iterations="
+        f"{max_iterations} rounds; raise max_iterations"
+    )
 
 
 def apply_dedup(

@@ -78,6 +78,14 @@ def test_chain_needs_more_than_two_rounds(spark, cc_under_cap, monkeypatch):
     assert len(rounds) - 1 > 2, f"loop converged in {len(rounds)} rounds"
 
 
+def test_unconverged_loop_raises(spark, cc_under_cap):
+    # one round cannot settle the chain: the loop fails loudly instead
+    # of returning labels that are not the component minima
+    pairs = spark.createDataFrame(_CHAIN, _SCHEMA)
+    with pytest.raises(RuntimeError, match="max_iterations=1 rounds"):
+        cc_under_cap(pairs, cap=0, max_iterations=1)
+
+
 def test_star_with_small_leaf(spark, cc_under_cap):
     # the centre is not the minimum: leaf 3 labels the whole star
     edges = [(50, leaf) for leaf in range(51, 61)] + [(3, 50)]

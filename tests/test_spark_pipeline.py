@@ -286,6 +286,58 @@ def test_cid_override_tables_reach_executors(spark, tmp_path):
     assert bare_after[0].extracted_text == ""
 
 
+def test_worker_zip_guard_skips_unchanged_archives(spark, transcripts_dir):
+    """Once a Python worker has imported the package, no task re-reads
+    its unchanged zips (pyspark.zip, the Spark jar, py4j, the shipped
+    package) in PySpark's per-task ``importlib.invalidate_caches()``:
+    installing the guard reads each archive once, so even the task that
+    installs it reads nothing afterwards. The driver keeps zipimport's
+    original method."""
+    import zipimport
+
+    import pandas as pd
+
+    def count_reads(batches):
+        import importlib
+        import os
+        import sys
+        import zipimport
+
+        # an earlier task in this process imported the package, so the
+        # guard was in place for this task's set-up
+        warm = "pdftotext_spark" in sys.modules
+        import pdftotext_spark  # noqa: F401  (installs the guard)
+
+        for _ in batches:
+            pass
+        read, names = zipimport._read_directory, []
+
+        def counting(path):
+            names.append(os.path.basename(path))
+            return read(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        yield pd.DataFrame({"warm": [warm], "reads": [len(names)], "names": [" ".join(names)]})
+
+    df = spark.read.parquet(f"{transcripts_dir}/transcripts.parquet")
+    extract_turns(df, n_partitions=8).count()  # warm pass, ships the package
+    rows = []
+    for _ in range(3):
+        rows += (
+            df.repartition(8)
+            .mapInPandas(count_reads, "warm boolean, reads int, names string")
+            .collect()
+        )
+    assert len(rows) == 24
+    assert any(r.warm for r in rows), "no task ran on a worker that had imported the package"
+    assert [r.names for r in rows if r.reads] == []
+    assert not hasattr(zipimport.zipimporter.invalidate_caches, "_stamp_guarded")
+
+
 def test_resume_anti_join(spark, transcripts_dir):
     df = spark.read.parquet(f"{transcripts_dir}/transcripts.parquet")
     committed = df.limit(50).select("conv_id", "turn_idx")
