@@ -346,32 +346,35 @@ _ORACLES: dict[str, str] = {
 
 # The driver's CORRECTNESS gate records only the first ~50 registry
 # entries per round (observed cap: r3 registered 70, recorded exactly
-# the first 50).  Rotate so queries with no green driver row yet run
-# first, then queries whose only rows are from older rounds; the tail
-# that falls off the cap this round is the set already verified green
-# in CORRECTNESS_r04.json.  COVERAGE.md records which round checked
-# what.
+# the first 50).  Rotate so queries with no green driver row, or whose
+# code changed since their newest row, run first, then queries whose
+# newest rows are the oldest (CORRECTNESS_r0*.json).  The tail that
+# falls off the cap is green at r5 or later.  COVERAGE.md records
+# which round checked what.
 _DRIVER_GATE_FIRST = [
-    # r7 rotation (VERDICT r6 "Next round" #1, exact list): first the
-    # 4 queries that have NEVER seen a driver row (registered after
-    # the r6 gate ran; mirror-green on the local all-137 DuckDB
-    # sweep), then the 5 queries MODIFIED in r7 (curation_funnel
-    # single-pass rewrite, perplexity_buckets skew-safe rank,
-    # hll_distinct one-scan fusion, bm25_batch_topk qmap dedup,
-    # quality_vote_prose materialized prose frame — all outputs
-    # pinned identical, rows refreshed anyway), then the 40 queries
-    # whose newest driver row is r4.  4 + 5 + 40 = 49, inside the
-    # observed ~50-row cap with 1 slot spare; everything left out is
-    # r5/r6-green and untouched this round.
+    # 5 + 6 + 4 + 34 = 49, inside the ~50-row cap with 1 slot spare:
+    # hll_distinct (newest row r5) and the 4 queries that have NEVER
+    # seen a driver row; the 6 connected-components queries, labelled
+    # by driver-side union-find since their r5 rows; the 4 curation
+    # queries, rewired onto curation._detector_keys (plans and rows
+    # pinned identical); then 34 of the 40 queries whose newest row is
+    # r4.  The other 6 (token_cms .. vocab_richness) lead the next
+    # rotation.
+    "hll_distinct",
     "quality_lr_auc",
     "cosine_batch_topk",
     "pack_manifest",
     "mixture_incremental",
+    "dedup_groups_minhash",
+    "dedup_groups_simhash",
+    "dedup_group_sizes",
+    "dedup_keep_best",
+    "dedup_groups_multi",
+    "dedup_groups_srp",
+    "curation_pipeline",
+    "curation_pipeline_panels",
+    "curation_pipeline_unanimous",
     "curation_funnel",
-    "perplexity_buckets",
-    "hll_distinct",
-    "bm25_batch_topk",
-    "quality_vote_prose",
     "asof_join_events",
     "bpe_token_profile",
     "chunk_documents",
@@ -406,12 +409,6 @@ _DRIVER_GATE_FIRST = [
     "segment_revenue",
     "stratified_sample",
     "tfidf_top_terms",
-    "token_cms",
-    "token_count_by_source",
-    "topn_per_key",
-    "unigram_logloss",
-    "value_quantile_sketch",
-    "vocab_richness",
 ]
 
 

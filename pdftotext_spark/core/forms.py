@@ -27,12 +27,6 @@ from pdftotext_spark.core import filters
 _DATASETS_RE = re.compile(rb"<xfa:datasets[\s>]")
 
 
-def has_form_data(pf: PdfFile, decoded: dict[int, bytes]) -> bool:
-    """``HasFormData`` analog: any decoded object carrying an XFA
-    datasets packet."""
-    return any(_DATASETS_RE.search(body) for body in decoded.values())
-
-
 def _strip_ns(tag: str) -> str:
     return tag.rsplit("}", 1)[-1] if "}" in tag else tag.split(":")[-1]
 

@@ -46,9 +46,6 @@ _PRESTRIP_RES = [
     re.compile(rb"\bEMC\b"),
 ]
 
-_NUM_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
-_WS = b"\x00\t\n\x0c\r "
-
 # operator → M5 statistics family (PDFOPT_ENHANCED_STATISTICS)
 _OP_FAMILIES = {
     "Tj": "show_ops", "TJ": "show_ops", "'": "show_ops", '"': "show_ops",
@@ -197,109 +194,6 @@ def _scan_literal(stream: bytes, i: int) -> tuple[Token, int]:
             depth -= 1
         j += 1
     return ("str", stream[start : j - 1]), j
-
-
-def _tokenize_slow(stream: bytes):
-    """Reference byte-at-a-time scanner kept for differential testing."""
-    i = 0
-    n = len(stream)
-    while i < n:
-        c = stream[i]
-        if c in _WS:
-            i += 1
-            continue
-        if c == 0x28:  # (
-            depth = 1
-            j = i + 1
-            start = j
-            while j < n and depth:
-                cj = stream[j]
-                if cj == 0x5C:
-                    j += 2
-                    continue
-                if cj == 0x28:
-                    depth += 1
-                elif cj == 0x29:
-                    depth -= 1
-                j += 1
-            yield ("str", stream[start : j - 1])
-            i = j
-            continue
-        if c == 0x3C:  # < or <<
-            if i + 1 < n and stream[i + 1] == 0x3C:
-                depth = 1
-                j = i + 2
-                while j < n - 1 and depth:
-                    if stream[j : j + 2] == b"<<":
-                        depth += 1
-                        j += 2
-                    elif stream[j : j + 2] == b">>":
-                        depth -= 1
-                        j += 2
-                    else:
-                        j += 1
-                i = j
-                continue
-            j = stream.find(b">", i + 1)
-            if j == -1:
-                j = n
-            yield ("hex", stream[i + 1 : j])
-            i = j + 1
-            continue
-        if c == 0x5B:  # [
-            depth = 1
-            j = i + 1
-            start = j
-            while j < n and depth:
-                cj = stream[j]
-                if cj == 0x5C:
-                    j += 2
-                    continue
-                if cj == 0x28:  # skip literal string inside array
-                    d2 = 1
-                    j += 1
-                    while j < n and d2:
-                        if stream[j] == 0x5C:
-                            j += 2
-                            continue
-                        if stream[j] == 0x28:
-                            d2 += 1
-                        elif stream[j] == 0x29:
-                            d2 -= 1
-                        j += 1
-                    continue
-                if cj == 0x5B:
-                    depth += 1
-                elif cj == 0x5D:
-                    depth -= 1
-                j += 1
-            yield ("arr", list(tokenize(stream[start : j - 1])))
-            i = j
-            continue
-        if c == 0x5D:
-            i += 1
-            continue
-        if c == 0x2F:  # /Name
-            j = i + 1
-            while j < n and stream[j] not in b"\x00\t\n\x0c\r /<>[]()":
-                j += 1
-            yield ("name", stream[i + 1 : j].decode("latin-1"))
-            i = j
-            continue
-        m = _NUM_RE.match(stream, i)
-        if m and (c in b"+-.0123456789"):
-            yield ("num", float(m.group(0)))
-            i = m.end()
-            continue
-        # keyword/operator
-        j = i
-        while j < n and stream[j] not in b"\x00\t\n\x0c\r /<>[]()":
-            j += 1
-        if j == i:
-            i += 1
-            continue
-        yield ("op", stream[i:j].decode("latin-1"))
-        i = j
 
 
 # ------------------------------------------------------------ string decode

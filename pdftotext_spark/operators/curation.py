@@ -37,21 +37,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdftotext_spark.operators import dedup, textstats
-from pdftotext_spark.operators.materialize import materialize
 
 
-def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The surviving training set: (doc_id, source, n_tokens) after
-    benchmark exclusion, quality gates, exact + near-dup dedup and
-    decontamination (see module docstring)."""
-    docs = dedup._read(spark, sf_dir, "documents")
-    n_words = (textstats._count_occ(F.col("text"), " ") + 1).cast("long")
-    # ONE sampled shingle scan for both shingle-based detectors
-    s = (
-        dedup._shingles(docs.select("doc_id", "text"), distinct=True)
-        .join(docs.select("doc_id", "source"), "doc_id")
-        .transform(materialize)
-    )
+def _detector_keys(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The three corpus-level detectors as slim unique doc_id frames:
+    ``exact_keep`` (canonical copies), ``lsh_losers`` (distinct
+    near-dup losers) and ``decon_keep`` (contamination at or below
+    the threshold).  ONE materialized sampled-shingle cut feeds both
+    shingle-based detectors — the standalone operators would each
+    re-scan and re-hash the corpus; the shared distinct frame is
+    pinned equivalent by the pipeline tests (MinHash min() is
+    duplicate-insensitive)."""
+    s = dedup._source_shingles(docs)
     exact_keep = dedup.dedup_exact(spark, sf_dir).select(
         F.col("canonical_doc_id").alias("doc_id")
     )
@@ -65,6 +64,16 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id")
     )
+    return exact_keep, lsh_losers, decon_keep
+
+
+def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The surviving training set: (doc_id, source, n_tokens) after
+    benchmark exclusion, quality gates, exact + near-dup dedup and
+    decontamination (see module docstring)."""
+    docs = dedup._read(spark, sf_dir, "documents")
+    n_words = (textstats._count_occ(F.col("text"), " ") + 1).cast("long")
+    exact_keep, lsh_losers, decon_keep = _detector_keys(spark, sf_dir, docs)
     return (
         docs.filter(F.col("source") != "src0")
         .filter(textstats.qf_keep_predicate())
@@ -326,8 +335,9 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape (r7 single-pass rewrite): per-document stage flags
     are computed in ONE pass — the corpus scan projects the two
-    row-local predicates, the three keep sets and the loser set
-    arrive as slim unique doc_id frames (each detector subtree
+    row-local predicates, the vote keep set and the three
+    :func:`_detector_keys` frames that :func:`curation_pipeline` joins
+    on arrive as slim unique doc_id frames (each detector subtree
     evaluated exactly once) left-joined as presence markers — then a
     SINGLE aggregate of cumulative-AND ``count_if`` columns produces
     all seven counts, unstacked into rows by a generator.  The old
@@ -349,36 +359,7 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("keep_majority"))
         .select("doc_id", F.lit(1).alias("in_vote"))
     )
-    exact_keep = dedup.dedup_exact(spark, sf_dir).select(
-        F.col("canonical_doc_id").cast("long").alias("doc_id"),
-        F.lit(1).alias("in_exact"),
-    )
-    # ONE materialized sampled-shingle scan feeds BOTH shingle-based
-    # detectors (the curation_pipeline shape) — the standalone
-    # operators would each re-scan and re-hash the corpus; the shared
-    # distinct frame is pinned equivalent by the pipeline tests
-    # (MinHash min() is duplicate-insensitive)
-    s = (
-        dedup._shingles(docs.select("doc_id", "text"), distinct=True)
-        .join(docs.select("doc_id", "source"), "doc_id")
-        .transform(materialize)
-    )
-    lsh_losers = (
-        dedup._lsh_pairs_from_shingles(s.select("doc_id", "sh"))
-        .select(F.col("doc_b").cast("long").alias("doc_id"))
-        .distinct()
-        .select("doc_id", F.lit(1).alias("is_loser"))
-    )
-    decon_keep = (
-        dedup._contamination_scores(s)
-        .filter(
-            F.col("contamination_frac") <= dedup.CONTAMINATION_THRESHOLD
-        )
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.lit(1).alias("in_decon"),
-        )
-    )
+    exact_keep, lsh_losers, decon_keep = _detector_keys(spark, sf_dir, docs)
     base = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         (F.col("source") != "src0").alias("f1"),
@@ -386,9 +367,9 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     flags = (
         base.join(vote_keep, "doc_id", "left")
-        .join(exact_keep, "doc_id", "left")
-        .join(lsh_losers, "doc_id", "left")
-        .join(decon_keep, "doc_id", "left")
+        .join(exact_keep.withColumn("in_exact", F.lit(1)), "doc_id", "left")
+        .join(lsh_losers.withColumn("is_loser", F.lit(1)), "doc_id", "left")
+        .join(decon_keep.withColumn("in_decon", F.lit(1)), "doc_id", "left")
     )
     f1 = F.col("f1")
     f2 = f1 & F.col("qf")

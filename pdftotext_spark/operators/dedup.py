@@ -205,7 +205,7 @@ FROM documents GROUP BY md5(text)
 # synthetic tables are newline-free, so the deterministic proxy is
 # fixed non-overlapping PARA_W-token segments (the segmenting rule is
 # the lever; the dedup algebra below is segmentation-agnostic).
-PARA_W = max(4, int(os.environ.get("SPARK_GRAFT_PARA_W", "40")))
+PARA_W = 40
 
 
 def _doc_segments(docs: DataFrame) -> DataFrame:
@@ -512,9 +512,7 @@ CONTAINMENT_DF_CAP = max(
 # is least(MIN_RARE, n_rare_a, n_rare_b): a document with fewer than
 # MIN_RARE within-cap shingles (a genuinely tiny doc) must still be
 # reachable through ALL the rare shingles it has.
-CONTAINMENT_MIN_RARE = max(
-    1, int(os.environ.get("SPARK_GRAFT_CONTAINMENT_MIN_RARE", "3"))
-)
+CONTAINMENT_MIN_RARE = 3
 
 
 def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1426,10 +1424,9 @@ FROM reach GROUP BY src
 # fan-out at df² — but note the corpus-growth consequence: a near-dup
 # CLUSTER larger than the cap shares only above-cap fingerprints and
 # its pairs are dropped entirely; at sf0.1 the synthetic corpus'
-# clusters outgrow the default and the operator correctly returns 0
-# pairs. Deployment lever, clamped >= 2 like the other env levers —
-# at df < 2 no fingerprint can ever be shared).
-WINNOW_MAX_DF = max(2, int(os.environ.get("SPARK_GRAFT_WINNOW_MAX_DF", "20")))
+# clusters outgrow the cap and the operator correctly returns 0
+# pairs; at df < 2 no fingerprint could ever be shared).
+WINNOW_MAX_DF = 20
 WINNOW_MIN_SHARED = 25  # pairs must share at least this many prints
 
 
@@ -1515,11 +1512,21 @@ def decontamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     it while small, shuffles cleanly when not — and total + hit
     counts come from ONE aggregation over the dominant train set.
     Output: per-doc overlap fraction, exact arithmetic."""
-    docs = _read(spark, sf_dir, "documents")
-    s = _shingles(docs.select("doc_id", "text"), distinct=True).join(
-        docs.select("doc_id", "source"), "doc_id"
-    ).transform(materialize)
-    return _contamination_scores(s)
+    return _contamination_scores(
+        _source_shingles(_read(spark, sf_dir, "documents"))
+    )
+
+
+def _source_shingles(docs: DataFrame) -> DataFrame:
+    """The materialized ``(doc_id, source, sh)`` cut: distinct sampled
+    shingles per doc, tagged with the doc's source.  ONE scan that
+    :func:`_contamination_scores` and the composed curation pipeline's
+    LSH detector share."""
+    return (
+        _shingles(docs.select("doc_id", "text"), distinct=True)
+        .join(docs.select("doc_id", "source"), "doc_id")
+        .transform(materialize)
+    )
 
 
 def contamination_scores_for(

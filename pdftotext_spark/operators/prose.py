@@ -37,7 +37,6 @@ byte-identical and every oracle comparison is exact.
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,9 +72,8 @@ PROSE_PROMO_MOD = 5
 # minimum distinct-document frequency for a line to count as
 # boilerplate (CCNet removes any paragraph seen elsewhere; a df
 # threshold is the production knob that keeps one-off quotes intact).
-# Deployment lever shared by the miner, the stripper, and every
-# oracle below.
-BOILER_MIN_DF = max(2, int(os.environ.get("SPARK_GRAFT_BOILER_MIN_DF", "4")))
+# Shared by the miner, the stripper, and every oracle below.
+BOILER_MIN_DF = 4
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:

@@ -7,9 +7,9 @@ directory (or a Kafka-shaped source at deploy time) → the same
 ``mapInPandas`` extraction → append sink with checkpointing.
 
 Extraction is stateless per turn, so the stream needs no watermark for
-the extraction stage itself; the optional windowed rollup shows the
-watermarked aggregation shape (per-conversation turn counts over event
-time) for late-data-tolerant monitoring.
+the extraction stage itself; the optional session-window rollup shows
+the watermarked aggregation shape (per-conversation activity sessions
+over event time) for late-data-tolerant monitoring.
 """
 
 from __future__ import annotations
@@ -44,20 +44,6 @@ def extract_turns_stream(transcripts: DataFrame) -> DataFrame:
     ship_package(transcripts.sparkSession)
     return transcripts.select(*TRANSCRIPT_COLUMNS).mapInPandas(
         extract_batches, EXTRACT_SCHEMA
-    )
-
-
-def conversation_activity(extracted: DataFrame, window: str = "10 minutes",
-                          watermark: str = "30 minutes") -> DataFrame:
-    """Watermarked per-window conversation rollup (late data dropped
-    after the watermark)."""
-    return (
-        extracted.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), F.col("conv_id"))
-        .agg(
-            F.count("*").alias("turns"),
-            F.sum("decode_failures").alias("decode_failures"),
-        )
     )
 
 

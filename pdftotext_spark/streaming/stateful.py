@@ -78,104 +78,15 @@ def conversation_state_stream(extracted_stream: DataFrame) -> DataFrame:
     )
 
 
-class _ConversationProcessor:
-    """State-API-v2 (Spark 4 ``transformWithStateInPandas``) version of
-    the conversation accumulator: a typed ``ValueState`` per conv_id
-    replaces the packed tuple of ``applyInPandasWithState``. v2 brings
-    composite state types, timers and state-var TTL — this processor
-    only needs one ValueState but demonstrates the API shape the 100 TB
-    job would use (RocksDB state store, per-variable schemas)."""
-
-    def init(self, handle) -> None:
-        from pyspark.sql.types import (
-            LongType,
-            StructField,
-            StructType,
-        )
-
-        self._state = handle.getValueState(
-            "conv_totals",
-            StructType(
-                [
-                    StructField("turns", LongType()),
-                    StructField("chars", LongType()),
-                    StructField("failures", LongType()),
-                    StructField("max_turn", LongType()),
-                ]
-            ),
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        turns, chars, failures, max_turn = (
-            tuple(self._state.get()) if self._state.exists() else (0, 0, 0, -1)
-        )
-        for pdf in rows:
-            turns += len(pdf)
-            chars += int(pdf["extracted_text"].str.len().sum())
-            failures += int(pdf["decode_failures"].sum())
-            if len(pdf):
-                max_turn = max(max_turn, int(pdf["turn_idx"].max()))
-        self._state.update((turns, chars, failures, max_turn))
-        yield pd.DataFrame(
-            {
-                "conv_id": [key[0]],
-                "turns": [turns],
-                "chars": [chars],
-                "failures": [failures],
-                "max_turn": [max_turn],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def make_conversation_processor():
-    """Build the processor with the StatefulProcessor base resolved at
-    call time (keeps module import light on executors)."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    return type(
-        "ConversationProcessor", (_ConversationProcessor, StatefulProcessor), {}
-    )()
-
-
-def conversation_state_stream_v2(extracted_stream: DataFrame) -> DataFrame:
-    """State-API-v2 twin of :func:`conversation_state_stream` —
-    identical output contract, pinned by a pytest that runs both over
-    the same input (skipped where the runtime lacks ``protobuf``,
-    which Spark's transformWithState Python state server requires)."""
-    import importlib.util
-
-    if importlib.util.find_spec("google.protobuf") is None:
-        raise RuntimeError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(Spark's Python state-server protocol); this runtime does "
-            "not ship it — use conversation_state_stream (state API v1)."
-        )
-    from pdftotext_spark.sources.shipping import ship_package
-
-    ship_package(extracted_stream.sparkSession)
-    return extracted_stream.groupBy("conv_id").transformWithStateInPandas(
-        statefulProcessor=make_conversation_processor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def run_stateful_stream_once(
     spark: Any,
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    api: str = "v1",
 ) -> None:
     """Drain available input through extraction + stateful rollup into
     a parquet sink (update-mode rows appended per micro-batch; the
-    latest row per conv_id is the current state). ``api`` picks the
-    state backend: ``v1`` = applyInPandasWithState, ``v2`` =
-    transformWithStateInPandas (Spark 4 state API)."""
+    latest row per conv_id is the current state)."""
     from pdftotext_spark.streaming.pipeline import (
         extract_turns_stream,
         read_transcript_stream,
@@ -183,11 +94,7 @@ def run_stateful_stream_once(
 
     stream = read_transcript_stream(spark, input_dir, max_files_per_trigger=1)
     extracted = extract_turns_stream(stream)
-    rollup = (
-        conversation_state_stream_v2(extracted)
-        if api == "v2"
-        else conversation_state_stream(extracted)
-    )
+    rollup = conversation_state_stream(extracted)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         # update-mode rows land via foreachBatch (a file sink is

@@ -523,21 +523,69 @@ def test_curation_pipeline_panels_disagreement(spark, tmp_path):
     assert panels == base & majority
 
 
-def test_curation_funnel_coherence(spark):
-    """The funnel is monotone non-increasing stage to stage and its
-    final row equals the panels pipeline's survivor count — the
-    cumulative-stage identity."""
-    from pdftotext_spark.operators import curation
+def test_curation_funnel_coherence(spark, sf_dir, tmp_path):
+    """Every funnel stage's count is the size of the intersection of
+    the standalone survivor sets up to that stage, in application
+    order, and the final row equals the panels pipeline's survivor
+    count.  On the sf0.001 corpus the shallow gate and exact dedup drop
+    nothing, so two rows are planted to make every stage drop a doc:
+    a one-line doc the shallow gate rejects, and a higher-id copy of
+    a doc that passes the vote, which exact dedup drops.  A fold that
+    swapped two stage markers then changes some count."""
+    from pyspark.sql import functions as F
 
-    sf = "/root/testdata/sf0.001"
+    from pdftotext_spark.operators import curation, dedup
+
+    base = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    voted = curation.quality_vote(spark, sf_dir).filter(
+        "keep_majority AND keep_shallow"
+    )
+    orig = (
+        base.filter(F.col("source") != "src0")
+        .join(voted, "doc_id", "left_semi")
+        .orderBy("doc_id")
+        .first()
+    )
+    top = base.agg(F.max("doc_id")).first()[0]
+    planted = spark.createDataFrame(
+        [
+            (top + 1, "too short.", "en", "src1", 10),
+            (top + 2, orig.text, orig.lang, "src1", orig.n_chars),
+        ],
+        base.schema,
+    )
+    base.unionByName(planted).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    sf = str(tmp_path)
     rows = sorted(
         curation.curation_funnel(spark, sf).collect(),
         key=lambda r: r.stage_idx,
     )
     assert [r.stage for r in rows] == list(curation._FUNNEL_STAGES)
     counts = [r.n_docs for r in rows]
-    assert counts[0] > 0
-    assert all(a >= b for a, b in zip(counts, counts[1:]))
+
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+
+    def ids(df, col="doc_id"):
+        return {r[0] for r in df.select(col).collect()}
+
+    corpus = ids(docs)
+    lsh_losers = ids(dedup.minhash_lsh_pairs(spark, sf), "doc_b")
+    stages = [
+        ids(docs.filter(F.col("source") != "src0")),
+        ids(docs.filter(ts.qf_keep_predicate())),
+        ids(curation.quality_vote(spark, sf).filter("keep_majority")),
+        ids(dedup.dedup_exact(spark, sf), "canonical_doc_id"),
+        corpus - lsh_losers,
+        ids(dedup.decontaminate_apply(spark, sf)),
+    ]
+    survivors, expected = corpus, [len(corpus)]
+    for keep in stages:
+        survivors = survivors & keep
+        expected.append(len(survivors))
+    assert counts == expected
+    assert all(a > b for a, b in zip(counts, counts[1:])), counts
     final = curation.curation_pipeline_panels(spark, sf).count()
     assert counts[-1] == final
 

@@ -100,52 +100,6 @@ def test_streaming_checkpoint_no_reprocess(spark, transcripts_dir, tmp_path):
     assert spark.read.parquet(out).count() == n1
 
 
-# ------------------------------------------------------ M4 raster decode
-
-
-def test_media_frame_sample_and_audio_windows(spark):
-    """Audio/video plumbing: binary columns fan out to frame/window
-    rows through mapInPandas; sha-dedup collapses identical payloads
-    before decode; every_n thins the sample; strict mode raises."""
-    import pandas as pd
-    import pytest as _pytest
-
-    from pdftotext_spark.operators import media as M
-
-    rows = pd.DataFrame(
-        {
-            "media_id": pd.array([1, 2, 3, 4], dtype="int64"),
-            "kind": ["video", "video", "audio", "video"],
-            "data": [b"v" * 4096, b"v" * 4096, b"a" * 2500, b"w" * 1024],
-        }
-    )
-    rows["sha256"] = [__import__("hashlib").sha256(d).hexdigest() for d in rows["data"]]
-    rows["n_bytes"] = pd.array([len(d) for d in rows["data"]], dtype="int64")
-    df = spark.createDataFrame(rows)
-
-    frames = M.frame_sample(df).collect()
-    # media 1/2 share bytes → decoded once (5 frames); media 4 → 2
-    assert len(frames) == 5 + 2
-    assert {len(f.feature) for f in frames} == {M.FRAME_FEATURE_DIM}
-    thinned = M.frame_sample(df, every_n=2).collect()
-    assert 0 < len(thinned) < len(frames)
-    # deterministic across runs
-    again = M.frame_sample(df).collect()
-    assert {(f.media_id, f.frame_idx, tuple(f.feature)) for f in frames} == {
-        (f.media_id, f.frame_idx, tuple(f.feature)) for f in again
-    }
-
-    windows = M.audio_windows(df).collect()
-    assert len(windows) == 3  # 2500 bytes → 3 windows
-    assert all(0.0 <= w.rms <= 1.0 for w in windows)
-    assert sorted(w.start_ms for w in windows) == [0, 1000, 2000]
-
-    with _pytest.raises(NotImplementedError):
-        M.decode_video_frames(b"x", strict=True)
-    with _pytest.raises(NotImplementedError):
-        M.decode_audio_windows(b"x", strict=True)
-
-
 def test_ahash_noise_invariance_and_discrimination():
     import numpy as np
 
@@ -333,90 +287,6 @@ def test_session_window_rollup(spark, tmp_path):
     assert ("c1", 3) in rows and ("c1", 2) in rows  # 0-2s and 100-101s
     start3, end3 = rows[("c1", 3)]
     assert (end3 - start3).total_seconds() == 2 + 30  # last event + gap
-
-
-def test_v2_processor_accumulates_without_spark():
-    """The v2 StatefulProcessor's fold logic, unit-tested against a
-    fake ValueState (the container lacks protobuf, so the end-to-end
-    v2 stream is skipped — this keeps the logic itself covered)."""
-    import pandas as pd
-
-    from pdftotext_spark.streaming.stateful import _ConversationProcessor
-
-    class FakeState:
-        v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-    p = _ConversationProcessor()
-    p._state = FakeState()
-    batch = pd.DataFrame(
-        {"extracted_text": ["ab", "cde"], "decode_failures": [0, 1], "turn_idx": [0, 1]}
-    )
-    out = list(p.handleInputRows(("c1",), iter([batch]), None))
-    assert p._state.v == (2, 5, 1, 1)
-    assert out[0].iloc[0]["chars"] == 5
-    list(p.handleInputRows(("c1",), iter([batch]), None))
-    assert p._state.v == (4, 10, 2, 1)
-
-
-def test_stateful_v2_matches_v1(spark, tmp_path):
-    """transformWithStateInPandas (state API v2) must produce the same
-    final per-conversation totals as the applyInPandasWithState
-    version over the same input, including state across restart.
-    Requires protobuf (Spark's Python state-server protocol), which
-    this container does not ship — the v2 path is import-gated."""
-    import os
-
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-
-    import pyspark.sql.functions as F
-
-    from pdftotext_spark.sources.transcripts_gen import write_parquet
-    from pdftotext_spark.streaming.stateful import run_stateful_stream_once
-
-    write_parquet(str(tmp_path / "in1"), n_turns=60, seed=9)
-    write_parquet(str(tmp_path / "in2"), n_turns=60, seed=9)
-    src = tmp_path / "src"
-    src.mkdir()
-    os.symlink(tmp_path / "in1" / "transcripts.parquet", src / "a.parquet")
-
-    def run(api: str, tag: str):
-        out, ckpt = str(tmp_path / f"out_{tag}"), str(tmp_path / f"ckpt_{tag}")
-        run_stateful_stream_once(spark, str(src), out, ckpt, api=api)
-        return out
-
-    out1 = run("v1", "v1")
-    out2 = run("v2", "v2")
-    os.symlink(tmp_path / "in2" / "transcripts.parquet", src / "b.parquet")
-    run_stateful_stream_once(spark, str(src), out1, str(tmp_path / "ckpt_v1"), api="v1")
-    run_stateful_stream_once(spark, str(src), out2, str(tmp_path / "ckpt_v2"), api="v2")
-
-    def latest(out):
-        return {
-            r.conv_id: (r.turns, r.chars, r.failures, r.max_turn)
-            for r in spark.read.parquet(out)
-            .groupBy("conv_id")
-            .agg(
-                F.max("turns").alias("turns"),
-                F.max("chars").alias("chars"),
-                F.max("failures").alias("failures"),
-                F.max("max_turn").alias("max_turn"),
-            )
-            .collect()
-        }
-
-    s1, s2 = latest(out1), latest(out2)
-    assert s1 == s2 and len(s1) > 0
 
 
 def test_streaming_neardup_dedup(spark, tmp_path):

@@ -72,8 +72,6 @@ def test_prose_frame_planted_boilerplate_truth(spark):
     {1,2}), promo df=3 (ids 0,5,10), footer df=12. With the default
     BOILER_MIN_DF=4 the miner must report header+footer and must NOT
     report the promo (df 3 < 4) or any unique body sentence."""
-    if prose.BOILER_MIN_DF != 4:
-        pytest.skip("planted truth calibrated for BOILER_MIN_DF=4")
     rows = [
         (i, " ".join(f"d{i}w{j}" for j in range(9)), "s") for i in range(12)
     ]
