@@ -724,6 +724,54 @@ def bands_for(sig: DataFrame, key_cols: list[str]) -> DataFrame:
     ).select(*key_cols, "band.band_idx", "band.band_hash")
 
 
+def bit_bands(
+    df: DataFrame, bits_col: str, n_bands: int, width: int, *carry
+) -> DataFrame:
+    """Explode the integer ``bits_col`` into ``n_bands`` LSH band rows
+    ``(*carry, band_idx, band_bits)``: band i holds bits
+    ``[i*width, (i+1)*width)`` (shift and mask).  The one banding of
+    every bit-signature family (SimHash, SRP).  ``carry`` takes names
+    or aliased columns."""
+    out = df.select(
+        *carry,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("band_idx"),
+                        F.shiftright(bits_col, i * width)
+                        .bitwiseAND(F.lit((1 << width) - 1))
+                        .alias("band_bits"),
+                    )
+                    for i in range(n_bands)
+                ]
+            )
+        ).alias("band"),
+    )
+    return out.select(*out.columns[:-1], "band.band_idx", "band.band_bits")
+
+
+def band_pairs(left: DataFrame, right: DataFrame, on: list[str], pred=None):
+    """Candidate pairs from two band frames: equi-join on ``on`` (the
+    band bucket, plus any non-band key such as ``label``, which stays
+    in the output), keep ``pred``, drop the band columns and emit each
+    pair once however many bands it shares.  Pass each side projected
+    to ``on`` plus one renamed id: only narrow ids cross the join and
+    the ``distinct`` — fetch payloads such as embeddings afterwards."""
+    pairs = left.join(right, on)
+    if pred is not None:
+        pairs = pairs.filter(pred)
+    return pairs.drop("band_idx", "band_hash", "band_bits").distinct()
+
+
+def _minhash_bands_sql(carry: str) -> str:
+    """DuckDB twin of :func:`bands_for` over a ``sig`` CTE."""
+    return " UNION ALL ".join(
+        f"SELECT {carry}, {i} AS band_idx, md5(h{i} || h{i + 4}) AS band_hash FROM sig"
+        for i in range(N_MINHASH // BAND_SIZE)
+    )
+
+
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc MinHash signature: h_k = lexicographic min of a fixed
     32-bit hex slice of md5('a:'||shingle) / md5('b:'||shingle)
@@ -756,26 +804,16 @@ def _lsh_pairs_from_shingles(s: DataFrame) -> DataFrame:
 
 def _lsh_pairs_from_sig(sig: DataFrame) -> DataFrame:
     bands = bands_for(sig, ["doc_id"])
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
+    on = ["band_idx", "band_hash"]
+    return band_pairs(
+        bands.select(F.col("doc_id").alias("doc_a"), *on),
+        bands.select(F.col("doc_id").alias("doc_b"), *on),
+        on,
+        F.col("doc_a") < F.col("doc_b"),
     )
 
 
-_BANDS_SQL = " UNION ALL ".join(
-    f"SELECT doc_id, {i} AS band_idx, md5(h{i} || h{i + 4}) AS band_hash FROM sig"
-    for i in range(N_MINHASH // BAND_SIZE)
-)
+_BANDS_SQL = _minhash_bands_sql("doc_id")
 
 # resolve the {bands} placeholder now that the band SQL exists
 NGRAM_JACCARD_PAIRS_SQL = NGRAM_JACCARD_PAIRS_SQL.format(bands=_BANDS_SQL)
@@ -1207,23 +1245,9 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache: the fingerprint table is tiny but expensive to derive, and
     # the self-join would otherwise compute it twice
     sig = simhash(spark, sf_dir).cache()
-    banded = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.shiftright("simhash", i * _BAND_WIDTH)
-                        .bitwiseAND(F.lit((1 << _BAND_WIDTH) - 1))
-                        .alias("band_bits"),
-                    )
-                    for i in range(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "simhash", "band.band_idx", "band.band_bits")
+    banded = bit_bands(
+        sig, "simhash", SIMHASH_BANDS, _BAND_WIDTH, "doc_id", "simhash"
+    )
     a = banded.select(
         "band_idx", "band_bits",
         F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"),
@@ -2491,56 +2515,51 @@ def incremental_minhash_verdicts(
             F.col("doc_id").cast("long").alias("doc_id"), "source", "text"
         )
 
+    on = ["band_idx", "band_hash"]
     corpus_b = bands_for(
         signatures_for(keyed(corpus), ["doc_id"]), ["doc_id"]
-    ).select(F.col("doc_id").alias("corpus_id"), "band_idx", "band_hash")
+    ).select(F.col("doc_id").alias("corpus_id"), *on)
     inc_docs = keyed(incoming)
     inc_b = bands_for(
         signatures_for(inc_docs, ["doc_id"]), ["doc_id"]
     ).transform(materialize_lazy)
+    prior_b = inc_b.select(F.col("doc_id").alias("prior_id"), *on)
     corpus_hits = (
-        inc_b.join(corpus_b, ["band_idx", "band_hash"])
+        band_pairs(inc_b, corpus_b, on)
         .groupBy("doc_id")
-        .agg(F.countDistinct("corpus_id").alias("n_corpus_dups"))
+        .agg(F.count("*").alias("n_corpus_dups"))
     )
-    a = inc_b.alias("a")
-    p = inc_b.select(
-        F.col("doc_id").alias("prior_id"), "band_idx", "band_hash"
-    ).alias("p")
     batch_hits = (
-        a.join(
-            p,
-            (F.col("a.band_idx") == F.col("p.band_idx"))
-            & (F.col("a.band_hash") == F.col("p.band_hash"))
-            & (F.col("p.prior_id") < F.col("a.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_id"))
-        .agg(F.countDistinct("p.prior_id").alias("n_batch_prior"))
+        band_pairs(inc_b, prior_b, on, F.col("prior_id") < F.col("doc_id"))
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n_batch_prior"))
     )
-    base = inc_docs.select("doc_id", "source")
-    out = (
-        base.join(corpus_hits, "doc_id", "left")
-        .join(batch_hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "source",
-            F.coalesce("n_corpus_dups", F.lit(0))
-            .cast("long")
-            .alias("n_corpus_dups"),
-            F.coalesce("n_batch_prior", F.lit(0))
-            .cast("long")
-            .alias("n_batch_prior"),
-        )
+    return _greedy_verdicts(
+        inc_docs.select("doc_id", "source"), "doc_id", corpus_hits, batch_hits
     )
-    return out.select(
-        "doc_id",
-        "source",
-        "n_corpus_dups",
-        "n_batch_prior",
-        F.when(F.col("n_corpus_dups") > 0, F.lit("corpus_dup"))
-        .when(F.col("n_batch_prior") > 0, F.lit("batch_dup"))
-        .otherwise(F.lit("keep"))
-        .alias("verdict"),
+
+
+def _greedy_verdicts(
+    base: DataFrame, key: str, corpus_hits: DataFrame, batch_hits: DataFrame
+) -> DataFrame:
+    """The incremental family's verdict tail: left-join the per-key
+    ``n_corpus_dups`` / ``n_batch_prior`` counts onto EVERY incoming
+    row of ``base`` (zero-filled), then ``corpus_dup`` before
+    ``batch_dup`` before ``keep``."""
+    counts = [
+        F.coalesce(c, F.lit(0)).cast("long").alias(c)
+        for c in ("n_corpus_dups", "n_batch_prior")
+    ]
+    return (
+        base.join(corpus_hits, key, "left")
+        .join(batch_hits, key, "left")
+        .select(*base.columns, *counts)
+        .withColumn(
+            "verdict",
+            F.when(F.col("n_corpus_dups") > 0, F.lit("corpus_dup"))
+            .when(F.col("n_batch_prior") > 0, F.lit("batch_dup"))
+            .otherwise(F.lit("keep")),
+        )
     )
 
 
@@ -2551,10 +2570,7 @@ sig AS (
   FROM s GROUP BY doc_id, source
 ),
 bands AS (
-  {" UNION ALL ".join(
-    f"SELECT doc_id, source, {i} AS band_idx, md5(h{i} || h{i + 4}) AS band_hash FROM sig"
-    for i in range(N_MINHASH // BAND_SIZE)
-  )}
+  {_minhash_bands_sql("doc_id, source")}
 ),
 corpus AS (
   SELECT doc_id AS corpus_id, band_idx, band_hash FROM bands
@@ -2651,10 +2667,12 @@ def incremental_minhash_verified_verdicts(
     )
     inc_docs = keyed(incoming)
     inc_sig = signatures_for(inc_docs, ["doc_id"]).transform(materialize_lazy)
+    on = ["band_idx", "band_hash"]
     corpus_b = bands_for(corpus_sig, ["doc_id"]).select(
-        F.col("doc_id").alias("corpus_id"), "band_idx", "band_hash"
+        F.col("doc_id").alias("corpus_id"), *on
     )
     inc_b = bands_for(inc_sig, ["doc_id"]).transform(materialize_lazy)
+    prior_b = inc_b.select(F.col("doc_id").alias("prior_id"), *on)
 
     agree = sum(
         (
@@ -2687,26 +2705,10 @@ def incremental_minhash_verified_verdicts(
             F.max("agree").alias("best_agree"),
         )
 
-    corpus_cand = (
-        inc_b.join(corpus_b, ["band_idx", "band_hash"])
-        .select("doc_id", "corpus_id")
-        .distinct()
-    )
+    corpus_cand = band_pairs(inc_b, corpus_b, on)
     corpus_stats = verified_stats(corpus_cand, corpus_sig, "corpus_id")
-
-    a = inc_b.alias("a")
-    p = inc_b.select(
-        F.col("doc_id").alias("prior_id"), "band_idx", "band_hash"
-    ).alias("p")
-    batch_cand = (
-        a.join(
-            p,
-            (F.col("a.band_idx") == F.col("p.band_idx"))
-            & (F.col("a.band_hash") == F.col("p.band_hash"))
-            & (F.col("p.prior_id") < F.col("a.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_id"), "p.prior_id")
-        .distinct()
+    batch_cand = band_pairs(
+        inc_b, prior_b, on, F.col("prior_id") < F.col("doc_id")
     )
     batch_stats = verified_stats(
         batch_cand, inc_sig, "prior_id"
@@ -2759,10 +2761,7 @@ sig AS (
   FROM s GROUP BY doc_id, source
 ),
 bands AS (
-  {" UNION ALL ".join(
-    f"SELECT doc_id, source, {i} AS band_idx, md5(h{i} || h{i + 4}) AS band_hash FROM sig"
-    for i in range(N_MINHASH // BAND_SIZE)
-  )}
+  {_minhash_bands_sql("doc_id, source")}
 ),
 corpus_b AS (
   SELECT doc_id AS corpus_id, band_idx, band_hash FROM bands

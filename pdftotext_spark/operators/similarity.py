@@ -19,6 +19,11 @@ import warnings
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pdftotext_spark.operators.dedup import (
+    _greedy_verdicts,
+    band_pairs,
+    bit_bands,
+)
 from pdftotext_spark.operators.materialize import (
     materialize,
     materialize_lazy,
@@ -413,17 +418,12 @@ def _srp_label_candidates(big_emb: DataFrame) -> DataFrame:
         ),
         "vec_id long, band_idx int, band_bits long, label int",
     ).transform(materialize)
-    a = keys.select(
-        "label", "band_idx", "band_bits", F.col("vec_id").alias("src")
-    )
-    b = keys.select(
-        "label", "band_idx", "band_bits", F.col("vec_id").alias("dst")
-    )
-    return (
-        a.join(b, ["label", "band_idx", "band_bits"])
-        .filter(F.col("src") < F.col("dst"))
-        .select("label", "src", "dst")
-        .distinct()
+    on = ["label", "band_idx", "band_bits"]
+    return band_pairs(
+        keys.select(*on, F.col("vec_id").alias("src")),
+        keys.select(*on, F.col("vec_id").alias("dst")),
+        on,
+        F.col("src") < F.col("dst"),
     )
 
 
@@ -517,29 +517,17 @@ SRP_BANDS = 4
 _SRP_BAND_BITS = SRP_PLANES // SRP_BANDS  # 4 bits per band
 
 
-def _srp_band_keys(frame: DataFrame) -> DataFrame:
-    """``(vec_id, band_idx, band_bits)`` from a frame carrying the
-    16-bit ``srp`` column: :data:`SRP_BANDS` bands of
-    :data:`_SRP_BAND_BITS` bits each — the banded-LSH key frame shared
-    by :func:`srp_neardup_pairs` and the semantic-decontamination
-    family (one definition so the band geometry can't drift between
-    consumers)."""
-    return frame.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.shiftright("srp", i * _SRP_BAND_BITS)
-                        .bitwiseAND(F.lit((1 << _SRP_BAND_BITS) - 1))
-                        .alias("band_bits"),
-                    )
-                    for i in range(SRP_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("vec_id", "b.band_idx", "b.band_bits")
+def _srp_band_keys(frame: DataFrame, *carry) -> DataFrame:
+    """``(*carry, band_idx, band_bits)`` (``carry`` defaults to
+    ``vec_id``) from a frame carrying the 16-bit ``srp`` column:
+    :data:`SRP_BANDS` bands of :data:`_SRP_BAND_BITS` bits each,
+    exploded by :func:`~pdftotext_spark.operators.dedup.bit_bands`.
+    The SRP band geometry lives here alone; :func:`srp_neardup_pairs`,
+    the semantic-decontamination family, :func:`ann_topk_srp` and the
+    incremental SRP verdicts all band through it."""
+    return bit_bands(
+        frame, "srp", SRP_BANDS, _SRP_BAND_BITS, *(carry or ("vec_id",))
+    )
 
 
 def srp_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -550,7 +538,13 @@ def srp_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     this needs no pre-assigned coarse label — the scale path when no
     clustering exists yet. Recall for cosine≈0.3 pairs is ~0.4 by the
     (1-θ/π)^bits band-collision formula — at 100 TB you'd widen to
-    more/bigger bands per the usual LSH tuning."""
+    more/bigger bands per the usual LSH tuning.
+
+    Bands come from :func:`_srp_band_keys`; :func:`~pdftotext_spark.
+    operators.dedup.band_pairs` passes only the vec ids through the
+    band join and its cross-band ``distinct``, and the embeddings join
+    back afterwards: a pair colliding in several bands pays ONE dot
+    product, and the distinct never shuffles 64-float payloads."""
     emb = (
         _read(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
@@ -559,17 +553,13 @@ def srp_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(materialize)  # consumed by the band join AND the two
         # embedding joins — one srp/norm computation
     )
+    on = ["band_idx", "band_bits"]
     banded = _srp_band_keys(emb)
-    # NARROW ids through the banded join + cross-band dedup, then join
-    # the embeddings back: a pair colliding in several bands pays ONE
-    # dot product, and the distinct never shuffles 64-float payloads
-    a = banded.select("band_idx", "band_bits", F.col("vec_id").alias("vec_a"))
-    b = banded.select("band_idx", "band_bits", F.col("vec_id").alias("vec_b"))
-    cand = (
-        a.join(b, ["band_idx", "band_bits"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
+    cand = band_pairs(
+        banded.select(*on, F.col("vec_id").alias("vec_a")),
+        banded.select(*on, F.col("vec_id").alias("vec_b")),
+        on,
+        F.col("vec_a") < F.col("vec_b"),
     )
     ea = emb.select(
         F.col("vec_id").alias("vec_a"),
@@ -606,11 +596,16 @@ SELECT CAST(vec_id AS BIGINT) AS vec_id,
 FROM embeddings
 """
 
-_SRP_BANDS_SQL = " UNION ALL ".join(
-    f"SELECT vec_id, embedding, {i} AS band_idx, "
-    f"(srp // {1 << (i * _SRP_BAND_BITS)}) % {1 << _SRP_BAND_BITS} AS band_bits FROM sig"
-    for i in range(SRP_BANDS)
-)
+def _srp_bands_sql(carry: str) -> str:
+    """DuckDB twin of :func:`_srp_band_keys` over a ``sig`` CTE."""
+    return " UNION ALL ".join(
+        f"SELECT {carry}, {i} AS band_idx, "
+        f"(srp // {1 << (i * _SRP_BAND_BITS)}) % {1 << _SRP_BAND_BITS} AS band_bits FROM sig"
+        for i in range(SRP_BANDS)
+    )
+
+
+_SRP_BANDS_SQL = _srp_bands_sql("vec_id, embedding")
 
 SRP_NEARDUP_PAIRS_SQL = f"""
 WITH sig AS (
@@ -717,14 +712,12 @@ def semantic_decontamination_for(raw: DataFrame) -> DataFrame:
         # computation (the round-6 single-scan rule)
     )
     is_eval = F.col("label") == SEM_DECON_EVAL_LABEL
-    bands_t = _srp_band_keys(emb.filter(~is_eval))
+    on = ["band_idx", "band_bits"]
     bands_e = _srp_band_keys(emb.filter(is_eval)).select(
-        "band_idx", "band_bits", F.col("vec_id").alias("eval_vec_id")
+        *on, F.col("vec_id").alias("eval_vec_id")
     )
-    cand = (
-        bands_t.join(F.broadcast(bands_e), ["band_idx", "band_bits"])
-        .select("vec_id", "eval_vec_id")
-        .distinct()
+    cand = band_pairs(
+        _srp_band_keys(emb.filter(~is_eval)), F.broadcast(bands_e), on
     )
     et = emb.select("vec_id", F.col("embedding").alias("emb_t"), F.col("nrm").alias("nrm_t"))
     ee = emb.filter(is_eval).select(
@@ -774,19 +767,13 @@ def semantic_decontaminate_apply_for(raw: DataFrame) -> DataFrame:
     )
 
 
-_SEM_BANDS_SQL = " UNION ALL ".join(
-    f"SELECT vec_id, label, {i} AS band_idx, "
-    f"(srp // {1 << (i * _SRP_BAND_BITS)}) % {1 << _SRP_BAND_BITS} AS band_bits FROM sig"
-    for i in range(SRP_BANDS)
-)
-
 _SEM_HITS_SQL = f"""
 WITH sig AS (
   SELECT CAST(vec_id AS BIGINT) AS vec_id, embedding, label,
          CAST({_SRP_BUCKET_SQL} AS BIGINT) AS srp
   FROM embeddings
 ),
-bands AS ({_SEM_BANDS_SQL}),
+bands AS ({_srp_bands_sql("vec_id, label")}),
 cand AS (
   SELECT DISTINCT t.vec_id, e.vec_id AS eval_vec_id
   FROM bands t JOIN bands e
@@ -841,23 +828,7 @@ def ann_topk_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checks it end to end. Recall vs the exact
     :func:`cosine_topk` is pinned in tests."""
     emb = _read(spark, sf_dir, "embeddings").withColumn("srp", _srp_bucket_col())
-    banded = emb.select(
-        "vec_id",
-        "embedding",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.shiftright("srp", i * _SRP_BAND_BITS)
-                        .bitwiseAND(F.lit((1 << _SRP_BAND_BITS) - 1))
-                        .alias("band_bits"),
-                    )
-                    for i in range(SRP_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("vec_id", "embedding", "b.band_idx", "b.band_bits")
+    banded = _srp_band_keys(emb, "vec_id", "embedding")
     q = banded.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("band_idx").alias("q_band_idx"),
         F.col("band_bits").alias("q_band_bits"),
@@ -1249,13 +1220,12 @@ def knn_graph_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the cross-band dedup (64-float payloads would make the
     # distinct shuffle 50x wider); undirected so each pair pays ONE
     # dot product, mirrored afterwards for the per-vector lists
-    a = banded.select("band_idx", "band_bits", F.col("vec_id").alias("src"))
-    b = banded.select("band_idx", "band_bits", F.col("vec_id").alias("dst"))
-    cand = (
-        a.join(b, ["band_idx", "band_bits"])
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
+    on = ["band_idx", "band_bits"]
+    cand = band_pairs(
+        banded.select(*on, F.col("vec_id").alias("src")),
+        banded.select(*on, F.col("vec_id").alias("dst")),
+        on,
+        F.col("src") < F.col("dst"),
     )
     ea = emb.select(
         F.col("vec_id").alias("src"),
@@ -2040,9 +2010,9 @@ def dedup_incremental_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     consistent with :func:`srp_neardup_pairs`'s semantics).
 
     100 TB shape: the corpus side is the persisted ``(band_idx,
-    band_bits, vec_id, embedding, nrm)`` band index; both probes are
-    equi-joins on the band key; only banded candidates pay a dot
-    product."""
+    band_bits, vec_id)`` band index; both probes are equi-joins on the
+    band key that carry ids only, and only distinct banded candidates
+    fetch embeddings and pay a dot product."""
     emb = _read(spark, sf_dir, "embeddings").select(
         F.col("vec_id").cast("long").alias("vec_id"), "embedding"
     )
@@ -2056,94 +2026,50 @@ def dedup_incremental_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _srp_banded(emb: DataFrame, prefix: str) -> DataFrame:
-    """(vec_id, embedding, nrm) → exploded band rows with renamed
-    payload columns for an asymmetric probe join."""
-    sig = emb.select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"),
-        _srp_bucket_col().alias("srp"),
-    )
-    return sig.select(
-        F.col("vec_id").alias(f"{prefix}_id"),
-        F.col("embedding").alias(f"{prefix}_emb"),
-        F.col("nrm").alias(f"{prefix}_nrm"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.shiftright("srp", i * _SRP_BAND_BITS)
-                        .bitwiseAND(F.lit((1 << _SRP_BAND_BITS) - 1))
-                        .alias("band_bits"),
-                    )
-                    for i in range(SRP_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select(
-        f"{prefix}_id", f"{prefix}_emb", f"{prefix}_nrm",
-        "b.band_idx", "b.band_bits",
-    )
-
-
 def incremental_srp_verdicts(
     corpus: DataFrame, incoming: DataFrame
 ) -> DataFrame:
     """Core of :func:`dedup_incremental_srp` over arbitrary
-    ``(vec_id, embedding)`` frames (constructed-input surface)."""
+    ``(vec_id, embedding)`` frames (constructed-input surface).  Both
+    probes pass only vec ids through
+    :func:`~pdftotext_spark.operators.dedup.band_pairs`; embeddings and
+    norms join back after its narrow ``distinct``."""
 
-    def hits(inc_b: DataFrame, other_b: DataFrame, pred, out: str):
-        cand = (
-            inc_b.join(other_b, ["band_idx", "band_bits"])
-            .filter(pred)
-            .select("inc_id", "oth_id", "inc_emb", "inc_nrm",
-                    "oth_emb", "oth_nrm")
-            .distinct()
+    def sig(emb: DataFrame) -> DataFrame:
+        return emb.select(
+            "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"),
+            _srp_bucket_col().alias("srp"),
         )
-        cos = _dot(F.col("inc_emb"), F.col("oth_emb")) / (
-            F.col("inc_nrm") * F.col("oth_nrm")
+
+    def payload(s: DataFrame, p: str) -> DataFrame:
+        return s.select(
+            F.col("vec_id").alias(f"{p}_id"),
+            F.col("embedding").alias(f"{p}_emb"),
+            F.col("nrm").alias(f"{p}_nrm"),
         )
+
+    inc = sig(incoming).transform(materialize_lazy)
+    inc_b = _srp_band_keys(inc, F.col("vec_id").alias("inc_id"))
+    cos = _dot(F.col("inc_emb"), F.col("oth_emb")) / (
+        F.col("inc_nrm") * F.col("oth_nrm")
+    )
+
+    def hits(other: DataFrame, pred, out: str) -> DataFrame:
+        oth_b = _srp_band_keys(other, F.col("vec_id").alias("oth_id"))
         return (
-            cand.withColumn("cosine", F.round(cos, 4))
-            .filter(F.col("cosine") >= SRP_COSINE_THRESHOLD)
+            band_pairs(inc_b, oth_b, ["band_idx", "band_bits"], pred)
+            .join(payload(inc, "inc"), "inc_id")
+            .join(payload(other, "oth"), "oth_id")
+            .filter(F.round(cos, 4) >= SRP_COSINE_THRESHOLD)
             .groupBy(F.col("inc_id").alias("vec_id"))
-            .agg(F.countDistinct("oth_id").cast("long").alias(out))
+            .agg(F.count("*").alias(out))
         )
 
-    inc_b = _srp_banded(incoming, "inc").transform(materialize_lazy)
-    corpus_b = _srp_banded(corpus, "oth")
-    prior_b = inc_b.select(
-        F.col("inc_id").alias("oth_id"),
-        F.col("inc_emb").alias("oth_emb"),
-        F.col("inc_nrm").alias("oth_nrm"),
-        "band_idx", "band_bits",
-    )
-    corpus_hits = hits(inc_b, corpus_b, F.lit(True), "n_corpus_dups")
-    batch_hits = hits(
-        inc_b, prior_b, F.col("oth_id") < F.col("inc_id"), "n_batch_prior"
-    )
-    base = incoming.select(F.col("vec_id").cast("long").alias("vec_id"))
-    return (
-        base.join(corpus_hits, "vec_id", "left")
-        .join(batch_hits, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.coalesce("n_corpus_dups", F.lit(0))
-            .cast("long")
-            .alias("n_corpus_dups"),
-            F.coalesce("n_batch_prior", F.lit(0))
-            .cast("long")
-            .alias("n_batch_prior"),
-        )
-        .select(
-            "vec_id",
-            "n_corpus_dups",
-            "n_batch_prior",
-            F.when(F.col("n_corpus_dups") > 0, F.lit("corpus_dup"))
-            .when(F.col("n_batch_prior") > 0, F.lit("batch_dup"))
-            .otherwise(F.lit("keep"))
-            .alias("verdict"),
-        )
+    return _greedy_verdicts(
+        incoming.select(F.col("vec_id").cast("long").alias("vec_id")),
+        "vec_id",
+        hits(sig(corpus), None, "n_corpus_dups"),
+        hits(inc, F.col("oth_id") < F.col("inc_id"), "n_batch_prior"),
     )
 
 

@@ -1786,27 +1786,89 @@ def unigram_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         toks.join(vocab, "tok")
         .crossJoin(F.broadcast(total))
-        .withColumn(
-            "loss_i",
-            F.round(-F.log2(F.col("cnt") / F.col("total")) * 1_000_000, 0)
-            .cast("long"),
-        )
+        .withColumn("loss_i", _micro_bits(F.col("cnt") / F.col("total")))
     )
+    return _logloss_per_doc(docs, scored)
+
+
+def _micro_bits(p: Column) -> Column:
+    """-log2(p) in whole micro-bits (round, not cast: Spark's
+    cast-to-long truncates, DuckDB's rounds)."""
+    return F.round(-F.log2(p) * 1_000_000, 0).cast("long")
+
+
+def _logloss_per_doc(docs: DataFrame, scored: DataFrame) -> DataFrame:
+    """The n-gram loglosses' shared tail: per-doc token count and mean
+    of the integer ``loss_i`` rows (exact in any addition order),
+    left-joined back onto EVERY doc id of ``docs``.  ADVICE r5:
+    zero-token documents vanished from the groupBy, and the oracle
+    dropped them identically — the parity-blind class — so they emit
+    (n_tokens=0, logloss_bits=0) rows, mirroring the dsir_select fix."""
     grouped = scored.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_tokens"),
-        (
-            (F.sum("loss_i") / F.count("*")) / 1_000_000.0
-        ).alias("logloss_bits"),
+        ((F.sum("loss_i") / F.count("*")) / 1_000_000.0).alias("logloss_bits"),
     )
-    # ADVICE r5 (bigram twin): zero-token documents vanished from the
-    # groupBy, and the oracle dropped them identically — the
-    # parity-blind class. Left-join back onto ALL doc ids and emit
-    # (n_tokens=0, logloss_bits=0) rows, mirroring the dsir_select fix.
     return docs.select("doc_id").join(grouped, "doc_id", "left").select(
         "doc_id",
         F.coalesce(F.col("n_tokens"), F.lit(0)).cast("long").alias("n_tokens"),
         F.coalesce(F.col("logloss_bits"), F.lit(0.0)).alias("logloss_bits"),
     )
+
+
+def _bigram_lm(spark: SparkSession, sf_dir: str):
+    """The pieces the bigram and trigram LMs share, each built once:
+    ``(docs, base, vocab, prev_vocab, total, bi, bcounts, first_scored)``
+    — docs keyed by a long doc_id, the per-doc token array ``a``, the
+    materialized unigram and bigram count tables, and the position-1
+    unigram loss rows.  Bigrams come from a per-doc ARRAY slice-zip
+    (no LAG window, so the token stream never shuffles by doc_id
+    before the count aggregations)."""
+    docs = _read(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("long").alias("doc_id"), "text"
+    )
+    base = docs.select(
+        "doc_id",
+        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("a"),
+    )
+    # small-input spread before the token explodes — AQE can't see an
+    # explode multiplier, and a one-file scan serializes the fan-out
+    # on one core; a many-file corpus already exceeds
+    # defaultParallelism and skips this (gopher_repetition rationale).
+    par = spark.sparkContext.defaultParallelism
+    if base.rdd.getNumPartitions() < par:
+        base = base.repartition(par, "doc_id")
+    uni = base.select("doc_id", F.explode("a").alias("tok"))
+    vocab = (
+        uni.groupBy("tok").agg(F.count("*").alias("cnt")).transform(materialize)
+    )
+    prev_vocab = vocab.select(
+        F.col("tok").alias("prev"), F.col("cnt").alias("prev_cnt")
+    )
+    total = vocab.agg(F.sum("cnt").alias("total"))
+    bi = base.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "CASE WHEN size(a) >= 2 THEN "
+                "transform(sequence(1, size(a) - 1), "
+                "i -> struct(a[i-1] AS prev, a[i] AS tok)) "
+                "ELSE array() END"
+            )
+        ).alias("b"),
+    ).select("doc_id", "b.prev", "b.tok")
+    bcounts = (
+        bi.groupBy("prev", "tok")
+        .agg(F.count("*").alias("bcnt"))
+        .transform(materialize)
+    )
+    first_scored = (
+        base.filter(F.expr("size(a) > 0"))
+        .select("doc_id", F.expr("a[0]").alias("tok"))
+        .join(vocab, "tok")
+        .crossJoin(F.broadcast(total))
+        .select("doc_id", _micro_bits(F.col("cnt") / F.col("total")).alias("loss_i"))
+    )
+    return docs, base, vocab, prev_vocab, total, bi, bcounts, first_scored
 
 
 UNIGRAM_LOGLOSS_SQL = """
@@ -1851,77 +1913,18 @@ def bigram_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed and join back AQE-broadcast-style. Portability: the
     same integer micro-bit rounding before the per-doc mean as the
     unigram op (order-proof sums)."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    base = docs.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("a"),
-    )
-    # small-input spread before the token explodes — AQE can't see an
-    # explode multiplier, and a one-file scan serializes the fan-out
-    # on one core; a many-file corpus already exceeds
-    # defaultParallelism and skips this (gopher_repetition rationale).
-    par = spark.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < par:
-        base = base.repartition(par, "doc_id")
-    uni = base.select("doc_id", F.explode("a").alias("tok"))
-    vocab = (
-        uni.groupBy("tok").agg(F.count("*").alias("cnt")).transform(materialize)
-    )
-    total = vocab.agg(F.sum("cnt").alias("total"))
-    firsts = base.filter(F.expr("size(a) > 0")).select(
-        "doc_id", F.expr("a[0]").alias("tok")
-    )
-    bi = base.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(a) >= 2 THEN "
-                "transform(sequence(1, size(a) - 1), "
-                "i -> struct(a[i-1] AS prev, a[i] AS tok)) "
-                "ELSE array() END"
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.prev", "b.tok")
-    bcounts = (
-        bi.groupBy("prev", "tok")
-        .agg(F.count("*").alias("bcnt"))
-        .transform(materialize)
-    )
-    micro = lambda c: F.round(-F.log2(c) * 1_000_000, 0).cast("long")  # noqa: E731
-    first_scored = (
-        firsts.join(vocab, "tok")
-        .crossJoin(F.broadcast(total))
-        .select("doc_id", micro(F.col("cnt") / F.col("total")).alias("loss_i"))
-    )
-    prev_vocab = vocab.select(
-        F.col("tok").alias("prev"), F.col("cnt").alias("prev_cnt")
+    docs, _, _, prev_vocab, _, bi, bcounts, first_scored = _bigram_lm(
+        spark, sf_dir
     )
     bi_scored = (
         bi.join(bcounts, ["prev", "tok"])
         .join(prev_vocab, "prev")
         .select(
-            "doc_id", micro(F.col("bcnt") / F.col("prev_cnt")).alias("loss_i")
+            "doc_id",
+            _micro_bits(F.col("bcnt") / F.col("prev_cnt")).alias("loss_i"),
         )
     )
-    grouped = (
-        first_scored.unionByName(bi_scored)
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_tokens"),
-            ((F.sum("loss_i") / F.count("*")) / 1_000_000.0).alias(
-                "logloss_bits"
-            ),
-        )
-    )
-    # ADVICE r5: zero-token docs vanished from the groupBy AND from
-    # the oracle identically (parity-blind omission) — left-join back
-    # onto ALL doc ids, emitting (n_tokens=0, logloss_bits=0) rows,
-    # the same shape as the dsir_select zero-token fix.
-    return docs.select("doc_id").join(grouped, "doc_id", "left").select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.coalesce(F.col("n_tokens"), F.lit(0)).cast("long").alias("n_tokens"),
-        F.coalesce(F.col("logloss_bits"), F.lit(0.0)).alias("logloss_bits"),
-    )
+    return _logloss_per_doc(docs, first_scored.unionByName(bi_scored))
 
 
 BIGRAM_LOGLOSS_SQL = """
@@ -1995,38 +1998,8 @@ def trigram_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-bit rounded before the per-doc mean (order-proof sums, the
     unigram_logloss convention). Zero-token docs emit
     (n_tokens=0, logloss_bits=0) rows — the bigram_logloss lesson."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    base = docs.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("a"),
-    )
-    # small-input spread before the token explodes — AQE can't see an
-    # explode multiplier, and a one-file scan serializes the fan-out
-    # on one core; a many-file corpus already exceeds
-    # defaultParallelism and skips this (gopher_repetition rationale).
-    par = spark.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < par:
-        base = base.repartition(par, "doc_id")
-    uni = base.select("doc_id", F.explode("a").alias("tok"))
-    vocab = (
-        uni.groupBy("tok").agg(F.count("*").alias("cnt")).transform(materialize)
-    )
-    total = vocab.agg(F.sum("cnt").alias("total"))
-    bi = base.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(a) >= 2 THEN "
-                "transform(sequence(1, size(a) - 1), "
-                "i -> struct(a[i-1] AS prev, a[i] AS tok)) "
-                "ELSE array() END"
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.prev", "b.tok")
-    bcounts = (
-        bi.groupBy("prev", "tok")
-        .agg(F.count("*").alias("bcnt"))
-        .transform(materialize)
+    docs, base, vocab, prev_vocab, total, _, bcounts, p1_scored = _bigram_lm(
+        spark, sf_dir
     )
     tri = base.select(
         "doc_id",
@@ -2044,23 +2017,10 @@ def trigram_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("tcnt"))
         .transform(materialize)
     )
-    micro = lambda c: F.round(-F.log2(c) * 1_000_000, 0).cast("long")  # noqa: E731
-
-    # position 1: pure unigram
-    firsts = base.filter(F.expr("size(a) > 0")).select(
-        "doc_id", F.expr("a[0]").alias("tok")
-    )
-    p1_scored = (
-        firsts.join(vocab, "tok")
-        .crossJoin(F.broadcast(total))
-        .select("doc_id", micro(F.col("cnt") / F.col("total")).alias("loss_i"))
-    )
-    # position 2: renormalized bigram+unigram interpolation
+    # position 1 (pure unigram) is p1_scored; position 2:
+    # renormalized bigram+unigram interpolation
     seconds = base.filter(F.expr("size(a) >= 2")).select(
         "doc_id", F.expr("a[0]").alias("prev"), F.expr("a[1]").alias("tok")
-    )
-    prev_vocab = vocab.select(
-        F.col("tok").alias("prev"), F.col("cnt").alias("prev_cnt")
     )
     l2n = TRIGRAM_L2 / (TRIGRAM_L2 + TRIGRAM_L1)
     l1n = TRIGRAM_L1 / (TRIGRAM_L2 + TRIGRAM_L1)
@@ -2071,7 +2031,7 @@ def trigram_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(total))
         .select(
             "doc_id",
-            micro(
+            _micro_bits(
                 F.lit(l2n) * (F.col("bcnt") / F.col("prev_cnt"))
                 + F.lit(l1n) * (F.col("cnt") / F.col("total"))
             ).alias("loss_i"),
@@ -2100,28 +2060,15 @@ def trigram_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(total))
         .select(
             "doc_id",
-            micro(
+            _micro_bits(
                 F.lit(TRIGRAM_L3) * (F.col("tcnt") / F.col("ctx_cnt"))
                 + F.lit(TRIGRAM_L2) * (F.col("bcnt2") / F.col("p1_cnt"))
                 + F.lit(TRIGRAM_L1) * (F.col("cnt") / F.col("total"))
             ).alias("loss_i"),
         )
     )
-    grouped = (
-        p1_scored.unionByName(p2_scored)
-        .unionByName(p3_scored)
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_tokens"),
-            ((F.sum("loss_i") / F.count("*")) / 1_000_000.0).alias(
-                "logloss_bits"
-            ),
-        )
-    )
-    return docs.select("doc_id").join(grouped, "doc_id", "left").select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.coalesce(F.col("n_tokens"), F.lit(0)).cast("long").alias("n_tokens"),
-        F.coalesce(F.col("logloss_bits"), F.lit(0.0)).alias("logloss_bits"),
+    return _logloss_per_doc(
+        docs, p1_scored.unionByName(p2_scored).unionByName(p3_scored)
     )
 
 

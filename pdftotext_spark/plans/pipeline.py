@@ -146,7 +146,6 @@ def read_transcripts(spark: SparkSession, path_or_table: str) -> DataFrame:
 def extract_turns(
     transcripts: DataFrame,
     n_partitions: int | None = None,
-    salt: int = DEFAULT_SALT,
     options=None,
 ) -> DataFrame:
     """Per-turn extraction via ``mapInPandas`` — shuffle-free by
@@ -161,8 +160,8 @@ def extract_turns(
     Pass ``n_partitions`` to force a salted repartition instead — for
     pathological file layouts (one giant unsplittable file, heavily
     clustered payload sizes) the deterministic turn-level salt
-    ``pmod(xxhash64(conv_id, turn_idx), salt)`` spreads any single
-    conversation across ``salt`` partitions.
+    ``pmod(xxhash64(conv_id, turn_idx), DEFAULT_SALT)`` spreads any
+    single conversation across ``DEFAULT_SALT`` partitions.
 
     Input must carry TRANSCRIPT_COLUMNS; output schema is
     :data:`EXTRACT_SCHEMA`. We select exactly the six input columns so
@@ -175,7 +174,7 @@ def extract_turns(
     if n_partitions is not None:
         df = df.repartition(
             n_partitions,
-            F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt)),
+            F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(DEFAULT_SALT)),
         )
     if options is None:
         return df.mapInPandas(extract_batches, EXTRACT_SCHEMA)
@@ -292,27 +291,13 @@ def run_extraction(
     run_id: str = "run-0",
     resume: bool = True,
     options=None,
-    max_global_seconds: float = 0.0,
 ) -> DataFrame:
     """End-to-end job: read → (resume filter) → extract → write +
     manifest. Returns the extracted DataFrame (lazily if not written).
     ``options`` is an :class:`~pdftotext_spark.core.document.
     ExtractOptions` (or None for defaults) — it rides inside the
-    pickled UDF so the full option surface reaches executors.
-    ``max_global_seconds`` > 0 stamps a job-wide wall deadline into
-    the options (MaxGlobalExecutionTime analog): once spent, executors
-    skip remaining payloads as recorded failures instead of parsing
-    them — the job completes with partial output + honest metrics."""
-    if max_global_seconds > 0:
-        import dataclasses
-        import time as _time
-
-        from pdftotext_spark.core.document import ExtractOptions
-
-        options = dataclasses.replace(
-            options or ExtractOptions(),
-            global_deadline_epoch=_time.time() + max_global_seconds,
-        )
+    pickled UDF so the full option surface reaches executors,
+    ``global_deadline_epoch`` (the job-wide wall deadline) included."""
     transcripts = read_transcripts(spark, input_path)
     if output_path is not None and resume:
         try:

@@ -478,3 +478,82 @@ def test_verified_matches_python_replay_randomized(spark):
             ).collect()
         }
         assert got == expected, f"seed {seed}"
+
+
+# ------------------------------------------------ shared banding layer
+
+
+def test_bit_bands_splits_a_48_bit_value_into_12_bit_bands(spark):
+    """Band i holds bits [12i, 12i+12) of the value, carry columns
+    (names and aliased columns alike) come through unchanged, first."""
+    df = spark.createDataFrame(
+        [(7, "x", 0xABC_DEF_123_456), (8, "y", (1 << 48) - 1)],
+        "doc_id long, tag string, bits long",
+    )
+    out = dedup.bit_bands(df, "bits", 4, 12, "doc_id", F.col("tag").alias("t"))
+    assert out.columns == ["doc_id", "t", "band_idx", "band_bits"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (7, "x", 0, 0x456),
+        (7, "x", 1, 0x123),
+        (7, "x", 2, 0xDEF),
+        (7, "x", 3, 0xABC),
+        (8, "y", 0, 0xFFF),
+        (8, "y", 1, 0xFFF),
+        (8, "y", 2, 0xFFF),
+        (8, "y", 3, 0xFFF),
+    ]
+
+
+def test_band_pairs_self_join_emits_each_planted_pair_once(spark):
+    """Through the MinHash LSH self-join on constructed signatures
+    (band i = md5(h_i || h_{i+4})): docs 1 and 2 share bands 0-2, doc
+    5 shares band 0 with both, doc 3 shares band 3 with doc 2, and doc
+    4's band 1 hashes the same string as docs 1/2's band 0 — a bucket
+    match under a DIFFERENT band index, which is no collision.  Each
+    pair comes out exactly once, as (lower id, higher id)."""
+    base = ["a0", "a1", "a2", "a3", "b0", "b1", "b2", "b3"]
+
+    def sig(doc_id, **over):
+        h = dict(zip([f"h{k}" for k in range(8)], base))
+        h.update(over)
+        return (doc_id, *h.values())
+
+    rows = [
+        sig(1),
+        sig(2, h3="c3", h7="d3"),
+        sig(3, h0="e0", h1="e1", h2="e2", h3="c3", h7="d3"),
+        sig(4, h0="f0", h1="a0", h2="f2", h3="f3", h5="b0"),
+        sig(5, h1="g1", h2="g2", h3="g3"),
+    ]
+    frame = spark.createDataFrame(
+        rows, "doc_id long, " + ", ".join(f"h{k} string" for k in range(8))
+    )
+    got = [tuple(r) for r in dedup._lsh_pairs_from_sig(frame).collect()]
+    assert sorted(got) == [(1, 2), (1, 5), (2, 3), (2, 5)]
+
+
+def test_band_pairs_cross_set_keeps_label_and_dedups(spark):
+    """Cross-set probe with a non-band key in ``on``: ``label`` stays
+    in the output, the band columns go, pairs need the same label AND
+    band index AND bits, and src 1 / dst 10 (three shared bands) come
+    out once.  The broadcast hint on the right side is kept."""
+    schema = "label int, band_idx int, band_bits long, {} long"
+    left = spark.createDataFrame(
+        [(0, 0, 5, 1), (0, 1, 7, 1), (0, 2, 9, 1),
+         (0, 0, 5, 2), (0, 1, 8, 2),
+         (1, 0, 5, 3)],
+        schema.format("src"),
+    )
+    right = spark.createDataFrame(
+        [(0, 0, 5, 10), (0, 1, 7, 10), (0, 2, 9, 10),
+         (1, 0, 5, 11), (1, 1, 7, 11),
+         (0, 1, 5, 12)],
+        schema.format("dst"),
+    )
+    out = dedup.band_pairs(
+        left, F.broadcast(right), ["label", "band_idx", "band_bits"]
+    )
+    assert out.columns == ["label", "src", "dst"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (0, 1, 10), (0, 2, 10), (1, 3, 11),
+    ]
