@@ -349,17 +349,27 @@ _ORACLES: dict[str, str] = {
 # the first 50).  Rotate so queries with no green driver row, or whose
 # code changed since their newest row, run first, then queries whose
 # newest rows are the oldest (CORRECTNESS_r0*.json).  The tail that
-# falls off the cap is green at r5 or later.  COVERAGE.md records
+# falls off the cap is green at r4 or later.  COVERAGE.md records
 # which round checked what.
 _DRIVER_GATE_FIRST = [
-    # 5 + 6 + 4 + 34 = 49, inside the ~50-row cap with 1 slot spare:
-    # hll_distinct (newest row r5) and the 4 queries that have NEVER
-    # seen a driver row; the 6 connected-components queries, labelled
-    # by driver-side union-find since their r5 rows; the 4 curation
-    # queries, rewired onto curation._detector_keys (plans and rows
-    # pinned identical); then 34 of the 40 queries whose newest row is
-    # r4.  The other 6 (token_cms .. vocab_richness) lead the next
-    # rotation.
+    # 4 + 6 + 15 + 24 = 49, inside the ~50-row cap with 1 slot spare:
+    # the 4 BPE queries, now fed by the one driver-side trainer; the 6
+    # r4-era queries the last rotation left out (token_cms ..
+    # vocab_richness); hll_distinct, the 4 queries that have never
+    # seen a driver row, the 6 connected-components queries and the 4
+    # curation queries, as in the last rotation; then 24 of the 34
+    # r4-era queries it carried.  The other 10 (range_join_tiers ..
+    # tfidf_top_terms) lead the next rotation.
+    "bpe_learn_merges",
+    "bpe_apply_stats",
+    "bpe_doc_tokens",
+    "bpe_merges_driver",
+    "token_cms",
+    "token_count_by_source",
+    "topn_per_key",
+    "unigram_logloss",
+    "value_quantile_sketch",
+    "vocab_richness",
     "hll_distinct",
     "quality_lr_auc",
     "cosine_batch_topk",
@@ -399,16 +409,6 @@ _DRIVER_GATE_FIRST = [
     "pricing_summary",
     "quality_filter_by_source",
     "quality_score",
-    "range_join_tiers",
-    "regex_normalize",
-    "regional_revenue",
-    "repetition_signals",
-    "retention_cohorts",
-    "rolling_value_7d",
-    "search_offsets",
-    "segment_revenue",
-    "stratified_sample",
-    "tfidf_top_terms",
 ]
 
 

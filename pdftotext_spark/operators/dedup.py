@@ -1009,8 +1009,8 @@ def dedup_groups(pairs: DataFrame, max_iterations: int = 10) -> DataFrame:
     Spark jobs in total, where the loop spends one checkpoint job
     per round plus two more eager cuts — after LSH banding the
     candidate graph is small even when the corpus is not, the same
-    split as ``bpe_merges_driver`` (Spark aggregates, the driver
-    loops). Above the cap :func:`_dedup_groups_spark` labels the
+    split as the BPE trainer ``textstats._train_bpe_driver`` (Spark
+    aggregates the vocabulary, the driver loops). Above the cap :func:`_dedup_groups_spark` labels the
     graph; both paths emit identical rows (pinned by a differential
     test), and the loop raises if it has not converged within
     ``max_iterations`` rounds.

@@ -1,8 +1,8 @@
 """Cluster-safe DataFrame materialization for iterative operators.
 
 Iterative loops and multi-consumer frames must cut lineage or each
-consumer re-derives its whole upstream: the unrolled trainers (BPE,
-Lloyd, ``quality_lr``), the LSH signature-reuse points, and the
+consumer re-derives its whole upstream: the unrolled trainers
+(Lloyd, ``quality_lr``), the LSH signature-reuse points, and the
 pointer-jumping connected-components loop, which runs only for a
 candidate graph above ``dedup.DRIVER_CC_MAX_EDGES`` (smaller graphs
 are labelled by union-find on the driver after a single cut of the

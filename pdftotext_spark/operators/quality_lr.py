@@ -10,8 +10,8 @@ a pure-Python replay train the IDENTICAL model from first principles
 (no external labels, no model files).
 
 Training is :data:`LR_ROUNDS` rounds of full-batch gradient descent,
-unrolled in-plan exactly like the BPE merge chain and Lloyd-KMeans
-(textstats._bpe_chain): the feature table is materialized ONCE, each
+unrolled in-plan exactly like Lloyd-KMeans
+(similarity._lloyd_final): the feature table is materialized ONCE, each
 round is one map-side-combined aggregate producing the 6-component
 gradient, and the weight update is a broadcast-scalar projection.
 
@@ -29,7 +29,7 @@ Determinism discipline (the unigram_logloss order-proof rules):
 
 100 TB shape: one corpus scan builds the (slim, 8-column) feature
 frame, materialized once; each round then aggregates THAT frame to a
-single row (map-side partial aggregation; the Lloyd/BPE
+single row (map-side partial aggregation; the Lloyd
 broadcast-scalar pattern) — no round ever re-reads the corpus.
 Scoring is a zero-shuffle projection of the feature frame against the
 broadcast final weights.

@@ -61,7 +61,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: one narrow token scan computes per-doc (dl, tf_t);
     corpus stats (N, Σdl, df_t) are ONE single-row aggregation
-    broadcast back via crossJoin (the Lloyd/BPE scalar pattern);
+    broadcast back via crossJoin (the Lloyd scalar pattern);
     scoring is a zero-shuffle map and the top-k is
     TakeOrderedAndProject — no full sort, no wide shuffle. The token
     projection is scanned twice (stats + scoring), both narrow."""
@@ -180,7 +180,7 @@ def bm25_topk_indexed_for(
     filtered postings — not a groupBy+join-back, which would re-run
     the corpus explode lineage a second time (ReusedExchange does NOT
     collapse differently-projected subtrees; the round-6 ExactSubstr
-    lesson) — the corpus stats row is the Lloyd/BPE broadcast-scalar
+    lesson) — the corpus stats row is the Lloyd broadcast-scalar
     pattern, and the final ranking is a groupBy over only matching
     postings + TakeOrderedAndProject — ONE Generate of the corpus at
     index-build, no full-corpus work at query time."""

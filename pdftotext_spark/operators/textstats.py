@@ -2649,20 +2649,31 @@ FROM with_p CROSS JOIN ssum
 """
 
 
-# BPE merge learning (Sennrich et al. 2016): the tokenizer-training
-# loop as FIXED unrolled rounds, the Lloyd-KMeans treatment — each
-# round's argmax pair and fold-applied merge derive from identical
-# deterministic arithmetic in both engines, so the whole chain
-# replays in DuckDB. Rounds after pair exhaustion emit no merge row
-# and leave the vocabulary unchanged (LEFT JOIN on the empty argmax —
-# a cross join would destroy it).
+# BPE merge learning (Sennrich et al. 2016). Spark does the only
+# corpus-sized work: one scan + one groupBy reduce the corpus to the
+# (word, freq) VOCABULARY, which the driver collects — the footprint
+# every production tokenizer trainer (HF tokenizers, SentencePiece)
+# accepts. The merge loop then runs driver-side with incremental
+# pair-count maintenance (learn_bpe's indexed form): a lazy max-heap
+# keyed (count DESC, left ASC, right ASC) and, per merge,
+# subtract-all/add-all pair updates for exactly the words containing
+# the merged pair — bit-for-bit the naive per-round recount (pinned in
+# tests), at O(touched-word chars) per merge instead of O(vocab) per
+# round. That one trainer feeds every BPE query: the merge tables at
+# BPE_MERGE_ROUNDS and BPE_DRIVER_ROUNDS, and the final per-word
+# symbol sequences after BPE_MERGE_ROUNDS merges that the apply side
+# reads. The DuckDB oracles replay the same loop independently as
+# FIXED unrolled rounds: rounds after pair exhaustion emit no merge
+# row and leave the vocabulary unchanged (LEFT JOIN on the empty
+# argmax — a cross join would destroy it).
 BPE_MERGE_ROUNDS = 8
+BPE_DRIVER_ROUNDS = 32  # 4× the apply side's depth, still DuckDB-replayed
 
 # left-to-right non-overlapping merge of (bl, br) over the
 # space-joined symbol string `seq` — a string-accumulator fold seeded
-# with the first symbol (Spark aggregate(slice..) == DuckDB
-# list_reduce). The boundary checks use substr, not LIKE/regex, so
-# symbols may contain any non-space character.
+# with the first symbol (DuckDB list_reduce in the oracle replay). The
+# boundary checks use substr, not LIKE/regex, so symbols may contain
+# any non-space character.
 _BPE_FOLD_CASE = (
     "CASE WHEN x = {br} AND "
     "substr(acc, length(acc) - length({bl}) + 1) = {bl} AND "
@@ -2673,115 +2684,141 @@ _BPE_FOLD_CASE = (
 )
 
 
-def _bpe_chain(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """The shared BPE training chain: per round, count adjacent
-    symbol pairs weighted by word frequency (overlapping positions
-    count, the reference get_stats behavior), take the argmax
-    (count DESC, then left/right symbol ASC — a total deterministic
-    order), and apply the merge leftmost-non-overlapping to every
-    word's symbol sequence via the shared fold. Returns
-    ``(merges, vocab)``: the merge table and the final
-    (word, freq, seq) vocabulary after BPE_MERGE_ROUNDS rounds.
-
-    100 TB shape: everything after the one corpus token scan operates
-    on the VOCABULARY table (words × frequency — orders of magnitude
-    smaller than the corpus, the reason BPE training is tractable at
-    all); per round one explode+groupBy over the vocab (map-side
-    partial agg), one TakeOrdered(1) argmax, one broadcast-scalar
-    fold apply; the vocab frame is materialized per round so the
-    unrolled plan never re-derives earlier rounds."""
-    docs = _read(spark, sf_dir, "documents").select("text")
-    v = (
-        docs.select(
-            F.explode(
-                F.expr("filter(split(lower(text), ' '), x -> x <> '')")
-            ).alias("word")
-        )
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
-        .withColumn(
-            "seq",
-            F.expr(
-                "array_join(transform(sequence(1, length(word)), "
-                "i -> substr(word, i, 1)), ' ')"
-            ),
-        )
-        .transform(materialize)
+def _bpe_words(docs: DataFrame, *keep: str) -> DataFrame:
+    """One row per space-separated word of ``text`` (lower-cased,
+    empty splits dropped), carrying the ``keep`` columns."""
+    return docs.select(
+        *keep,
+        F.explode(
+            F.expr("filter(split(lower(text), ' '), x -> x <> '')")
+        ).alias("word"),
     )
-    fold = _BPE_FOLD_CASE.format(bl="bl", br="br")
-    merges = None
-    for rnd in range(1, BPE_MERGE_ROUNDS + 1):
-        # project the symbol array ONCE per round (Spark does not CSE
-        # inside higher-order-function lambdas — split(seq) would
-        # otherwise re-execute per reference per row)
-        vs = v.withColumn("syms", F.split("seq", " "))
-        pairs = (
-            vs.select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "CASE WHEN size(syms) >= 2 THEN "
-                        "transform(sequence(1, size(syms) - 1), "
-                        "i -> struct(syms[i-1] AS la, syms[i] AS rb)) "
-                        "ELSE array() END"
-                    )
-                ).alias("p"),
-            )
-            .select("freq", F.col("p.la").alias("la"), F.col("p.rb").alias("rb"))
-            .groupBy("la", "rb")
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        best = (
-            pairs.orderBy(F.desc("cnt"), F.asc("la"), F.asc("rb"))
-            .limit(1)
-            .select(
-                F.col("la").alias("bl"),
-                F.col("rb").alias("br"),
-                F.col("cnt").alias("pair_count"),
-            )
-            .transform(materialize)
-        )
-        row = best.select(
-            F.lit(rnd).cast("int").alias("merge_rank"),
-            F.col("bl").alias("left_sym"),
-            F.col("br").alias("right_sym"),
-            F.concat("bl", "br").alias("merged"),
-            F.col("pair_count").cast("long").alias("pair_count"),
-        )
-        merges = row if merges is None else merges.unionByName(row)
-        # LEFT join on TRUE, not crossJoin: when the pairs are
-        # exhausted `best` is EMPTY and a cross join would destroy
-        # the vocabulary (review r5 — the DuckDB twin had the
-        # identical collapse, so the parity gate was blind to it);
-        # with bl NULL every word keeps its sequence
-        v = (
-            vs.join(F.broadcast(best.select("bl", "br")), F.lit(True), "left")
-            .withColumn(
-                "seq",
-                F.expr(
-                    "CASE WHEN bl IS NULL OR size(syms) = 1 THEN seq "
-                    "ELSE aggregate(slice(syms, 2, size(syms) - 1), "
-                    f"syms[0], (acc, x) -> {fold}) END"
-                ),
-            )
-            .select("word", "freq", "seq")
-        )
-        # materialize so the next round's pair scan doesn't re-derive
-        # the chain; the LAST round's vocab has a single consumer (the
-        # apply aggregate) or none (learn), so skip the extra job
-        if rnd < BPE_MERGE_ROUNDS:
-            v = v.transform(materialize)
-    return merges, v
+
+
+def _bpe_vocab(
+    spark: SparkSession, sf_dir: str, max_words: int | None = None
+) -> list[tuple[str, int]]:
+    """The corpus (word, freq) vocabulary, word-sorted, on the driver.
+    ``max_words`` keeps the top-frequency words (word-ASC tie-break)
+    when an open vocabulary outgrows the driver."""
+    docs = _read(spark, sf_dir, "documents").select("text")
+    wf = _bpe_words(docs).groupBy("word").agg(F.count("*").alias("freq"))
+    if max_words is not None:
+        wf = wf.orderBy(F.desc("freq"), F.asc("word")).limit(max_words)
+    return sorted((r.word, int(r.freq)) for r in wf.collect())
+
+
+def _train_bpe_driver(
+    word_freqs: list[tuple[str, int]], n_merges: int
+) -> tuple[list[tuple[int, str, str, str, int]], list[list[str]]]:
+    """Driver-side BPE merge loop over a (word, freq) list. Exact
+    semantics of the reference Sennrich loop: overlapping adjacent
+    pair counts weighted by word frequency, argmax under the
+    (count DESC, left ASC, right ASC) total order, leftmost
+    non-overlapping application, stop on pair exhaustion. Returns
+    ``(merges, seqs)``: [(merge_rank, left_sym, right_sym, merged,
+    pair_count)] and each input word's final symbol sequence, in input
+    order."""
+    import heapq
+    from collections import defaultdict
+
+    words = [list(w) for w, _ in word_freqs]
+    freqs = [f for _, f in word_freqs]
+    counts: dict[tuple[str, str], int] = defaultdict(int)
+    where: dict[tuple[str, str], set[int]] = defaultdict(set)
+    for wi, s in enumerate(words):
+        f = freqs[wi]
+        for i in range(len(s) - 1):
+            p = (s[i], s[i + 1])
+            counts[p] += f
+            where[p].add(wi)
+    heap = [(-c, p) for p, c in counts.items() if c > 0]
+    heapq.heapify(heap)
+    merges: list[tuple[int, str, str, str, int]] = []
+    for rank in range(1, n_merges + 1):
+        # lazy invalidation: pop until the top entry's count is current
+        while heap and counts.get(heap[0][1], 0) != -heap[0][0]:
+            heapq.heappop(heap)
+        if not heap:
+            break
+        c, (a, b) = -heap[0][0], heap[0][1]
+        heapq.heappop(heap)
+        merges.append((rank, a, b, a + b, c))
+        merged = a + b
+        # a merged pair can never re-form (merges only concatenate
+        # adjacent symbols; leftmost application leaves no (a,b)
+        # adjacency), so its index is consumed here. where-sets may
+        # hold stale members (word no longer contains the pair) —
+        # for those the subtract/apply/add below cancels exactly.
+        for wi in where.pop((a, b), ()):
+            s = words[wi]
+            f = freqs[wi]
+            for i in range(len(s) - 1):
+                counts[(s[i], s[i + 1])] -= f
+            out: list[str] = []
+            i = 0
+            while i < len(s):
+                if i < len(s) - 1 and s[i] == a and s[i + 1] == b:
+                    out.append(merged)
+                    i += 2
+                else:
+                    out.append(s[i])
+                    i += 1
+            words[wi] = out
+            for i in range(len(out) - 1):
+                q = (out[i], out[i + 1])
+                counts[q] += f
+                where[q].add(wi)
+            # re-advertise every touched pair at its current count
+            # (old heap entries are stale; the lazy check skips them)
+            for seq in (s, out):
+                for i in range(len(seq) - 1):
+                    q = (seq[i], seq[i + 1])
+                    if counts.get(q, 0) > 0:
+                        heapq.heappush(heap, (-counts[q], q))
+        counts[(a, b)] = 0
+    return merges, words
+
+
+def bpe_learn_merges_driver(
+    spark: SparkSession,
+    sf_dir: str,
+    n_merges: int = 1000,
+    max_words: int | None = None,
+) -> DataFrame:
+    """BPE tokenizer training (see the block comment above): Spark
+    reduces the corpus to the (word, freq) vocabulary (``max_words``
+    caps it, see :func:`_bpe_vocab`), :func:`_train_bpe_driver` runs
+    ``n_merges`` merges driver-side. Output: one row per performed
+    merge (merge_rank, left_sym, right_sym, merged, pair_count); the
+    whole table is pinned equal to the naive pure-Python reference
+    loop in tests."""
+    merges, _ = _train_bpe_driver(
+        _bpe_vocab(spark, sf_dir, max_words), n_merges
+    )
+    return spark.createDataFrame(
+        merges,
+        "merge_rank int, left_sym string, right_sym string, "
+        "merged string, pair_count long",
+    )
 
 
 def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn the first BPE_MERGE_ROUNDS byte-pair-encoding merges
-    (see :func:`_bpe_chain`). Output: one row per performed merge
-    (merge_rank, left_sym, right_sym, merged, pair_count)."""
-    merges, _ = _bpe_chain(spark, sf_dir)
-    return merges
+    (see :func:`bpe_learn_merges_driver`)."""
+    return bpe_learn_merges_driver(spark, sf_dir, n_merges=BPE_MERGE_ROUNDS)
+
+
+def _bpe_final_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (word, freq, seq) vocabulary after BPE_MERGE_ROUNDS merges,
+    ``seq`` the word's final space-joined symbol sequence: a local
+    frame of vocabulary size, built from the trainer's own sequences."""
+    word_freqs = _bpe_vocab(spark, sf_dir)
+    _, seqs = _train_bpe_driver(word_freqs, BPE_MERGE_ROUNDS)
+    return spark.createDataFrame(
+        [(w, f, " ".join(s)) for (w, f), s in zip(word_freqs, seqs)],
+        "word string, freq long, seq string",
+    )
 
 
 def bpe_apply_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2791,10 +2828,9 @@ def bpe_apply_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the final vocabulary (char-level start, so tokens_before =
     chars_total) and the chars-per-token compression ratio.
 
-    100 TB shape: one aggregate over the (already materialized)
-    vocabulary table — see :func:`_bpe_chain`."""
-    _, v = _bpe_chain(spark, sf_dir)
-    agg = v.agg(
+    100 TB shape: one aggregate over the vocabulary-sized local frame
+    of :func:`_bpe_final_vocab`."""
+    agg = _bpe_final_vocab(spark, sf_dir).agg(
         F.count("*").cast("long").alias("n_words"),
         F.sum("freq").cast("long").alias("n_word_occurrences"),
         F.sum(F.col("freq") * F.length("word")).cast("long").alias(
@@ -2816,10 +2852,11 @@ def bpe_apply_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_chain_sql(rounds: int = BPE_MERGE_ROUNDS) -> str:
-    """The DuckDB WITH-body replaying :func:`_bpe_chain` exactly —
-    shared by the learn and apply oracles (``rounds`` parametrized so
-    the driver-side trainer's oracle can replay more rounds than the
-    unrolled-Spark demonstrator). Every CTE is MATERIALIZED: DuckDB
+    """The DuckDB WITH-body replaying :func:`_train_bpe_driver` as
+    unrolled rounds — shared by the learn and apply oracles
+    (``rounds`` parametrized so the BPE_DRIVER_ROUNDS oracle replays
+    more rounds than the BPE_MERGE_ROUNDS ones). Every CTE is
+    MATERIALIZED: DuckDB
     inlines plain CTEs, and each round references the previous vocab
     twice (pair count + fold apply), so un-materialized the base scan
     inlines 2^rounds times — 8 rounds limped, 32 died on file
@@ -2899,26 +2936,20 @@ def bpe_doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final vocabulary's per-word token count). Output: (doc_id,
     n_words, bpe_tokens, n_chars_tok, chars_per_token).
 
-    100 TB shape: one corpus token scan joined (hash, by word) to the
-    vocabulary's final sequences from :func:`_bpe_chain`; per-doc
-    aggregation is map-side-partial. n_chars_tok counts the
+    100 TB shape: one corpus token scan joined (by word) to the
+    vocabulary's final sequences from :func:`_bpe_final_vocab`;
+    per-doc aggregation is map-side-partial. n_chars_tok counts the
     characters the tokenizer saw (word chars, no separators), so
     chars_per_token is comparable across engines and documents."""
-    _, v = _bpe_chain(spark, sf_dir)
-    vtok = v.select(
+    vtok = _bpe_final_vocab(spark, sf_dir).select(
         "word",
         F.size(F.split("seq", " ")).cast("long").alias("word_tokens"),
         F.length("word").cast("long").alias("word_chars"),
     )
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    words = docs.select(
-        "doc_id",
-        F.explode(
-            F.expr("filter(split(lower(text), ' '), x -> x <> '')")
-        ).alias("word"),
-    )
     return (
-        words.join(vtok, "word")
+        _bpe_words(docs, "doc_id")
+        .join(vtok, "word")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_words"),
@@ -2960,134 +2991,11 @@ GROUP BY doc_id
 """
 
 
-# Production-shape BPE training (VERDICT r5 #6): real tokenizer
-# training is ~30k merges, which no per-merge-Spark-job design
-# sustains (the unrolled _bpe_chain is the oracle-checked
-# demonstrator at 8 rounds). The production split: Spark aggregates
-# the (word, freq) VOCABULARY — the only corpus-sized work, one scan
-# + one groupBy — and the merge loop runs driver-side over that table
-# with incremental pair-count maintenance (Sennrich et al. 2016
-# learn_bpe's indexed form): a lazy max-heap keyed (count DESC,
-# left ASC, right ASC) and, per merge, subtract-all/add-all pair
-# updates for exactly the words containing the merged pair — bit-for-
-# bit the naive per-round recount (pinned in tests), at
-# O(touched-word chars) per merge instead of O(vocab) per round.
-BPE_DRIVER_ROUNDS = 32  # the registered, DuckDB-replayed demonstration
-
-
-def _train_bpe_driver(
-    word_freqs: list[tuple[str, int]], n_merges: int
-) -> list[tuple[int, str, str, str, int]]:
-    """Driver-side BPE merge loop over a (word, freq) list. Exact
-    semantics of the reference Sennrich loop: overlapping adjacent
-    pair counts weighted by word frequency, argmax under the
-    (count DESC, left ASC, right ASC) total order, leftmost
-    non-overlapping application, stop on pair exhaustion. Returns
-    [(merge_rank, left_sym, right_sym, merged, pair_count)]."""
-    import heapq
-    from collections import defaultdict
-
-    words = [list(w) for w, _ in word_freqs]
-    freqs = [f for _, f in word_freqs]
-    counts: dict[tuple[str, str], int] = defaultdict(int)
-    where: dict[tuple[str, str], set[int]] = defaultdict(set)
-    for wi, s in enumerate(words):
-        f = freqs[wi]
-        for i in range(len(s) - 1):
-            p = (s[i], s[i + 1])
-            counts[p] += f
-            where[p].add(wi)
-    heap = [(-c, p) for p, c in counts.items() if c > 0]
-    heapq.heapify(heap)
-    merges: list[tuple[int, str, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        # lazy invalidation: pop until the top entry's count is current
-        while heap and counts.get(heap[0][1], 0) != -heap[0][0]:
-            heapq.heappop(heap)
-        if not heap:
-            break
-        c, (a, b) = -heap[0][0], heap[0][1]
-        heapq.heappop(heap)
-        merges.append((rank, a, b, a + b, c))
-        merged = a + b
-        # a merged pair can never re-form (merges only concatenate
-        # adjacent symbols; leftmost application leaves no (a,b)
-        # adjacency), so its index is consumed here. where-sets may
-        # hold stale members (word no longer contains the pair) —
-        # for those the subtract/apply/add below cancels exactly.
-        for wi in where.pop((a, b), ()):
-            s = words[wi]
-            f = freqs[wi]
-            for i in range(len(s) - 1):
-                counts[(s[i], s[i + 1])] -= f
-            out: list[str] = []
-            i = 0
-            while i < len(s):
-                if i < len(s) - 1 and s[i] == a and s[i + 1] == b:
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(s[i])
-                    i += 1
-            words[wi] = out
-            for i in range(len(out) - 1):
-                q = (out[i], out[i + 1])
-                counts[q] += f
-                where[q].add(wi)
-            # re-advertise every touched pair at its current count
-            # (old heap entries are stale; the lazy check skips them)
-            for seq in (s, out):
-                for i in range(len(seq) - 1):
-                    q = (seq[i], seq[i + 1])
-                    if counts.get(q, 0) > 0:
-                        heapq.heappush(heap, (-counts[q], q))
-        counts[(a, b)] = 0
-    return merges
-
-
-def bpe_learn_merges_driver(
-    spark: SparkSession,
-    sf_dir: str,
-    n_merges: int = 1000,
-    max_words: int | None = None,
-) -> DataFrame:
-    """BPE tokenizer training at honest scale (see the block comment
-    above): Spark reduces the corpus to the (word, freq) vocabulary,
-    :func:`_train_bpe_driver` runs ``n_merges`` merges driver-side.
-    The collect is the vocabulary table, not the corpus — the same
-    driver-side footprint every production tokenizer trainer
-    (HF tokenizers, SentencePiece) accepts, and ``max_words`` caps it
-    (top-frequency words, word-ASC tie-break) when a 100 TB corpus'
-    open vocabulary outgrows the driver. Output schema matches
-    :func:`bpe_learn_merges`; the first BPE_MERGE_ROUNDS rows are
-    pinned equal to it, and the whole table is pinned equal to the
-    naive pure-Python reference loop in tests."""
-    docs = _read(spark, sf_dir, "documents").select("text")
-    wf = (
-        docs.select(
-            F.explode(
-                F.expr("filter(split(lower(text), ' '), x -> x <> '')")
-            ).alias("word")
-        )
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
-    )
-    if max_words is not None:
-        wf = wf.orderBy(F.desc("freq"), F.asc("word")).limit(max_words)
-    word_freqs = sorted((r.word, int(r.freq)) for r in wf.collect())
-    merges = _train_bpe_driver(word_freqs, n_merges)
-    return spark.createDataFrame(
-        merges,
-        "merge_rank int, left_sym string, right_sym string, "
-        "merged string, pair_count long",
-    )
-
-
 def bpe_merges_driver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: the driver-side trainer at BPE_DRIVER_ROUNDS
     merges — few enough that the DuckDB oracle replays every round as
     an unrolled CTE (value-checking the trainer end-to-end), 4× the
-    unrolled-Spark demonstrator's depth."""
+    depth of :func:`bpe_learn_merges`."""
     return bpe_learn_merges_driver(spark, sf_dir, n_merges=BPE_DRIVER_ROUNDS)
 
 

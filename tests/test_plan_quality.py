@@ -687,7 +687,7 @@ def test_quality_lr_corpus_never_rescanned(spark):
     materialized ExistingRDDs (feature table + final weights row),
     joins them broadcast-scalar, and projects zero-shuffle; the train
     plan is the union of the 9 materialized 1-row weight frames (the
-    BPE/Lloyd unrolled-round shape)."""
+    Lloyd unrolled-round shape)."""
     from pdftotext_spark.operators import quality_lr
 
     plan = _plan(quality_lr.quality_lr_scores(spark, SF))
@@ -697,6 +697,28 @@ def test_quality_lr_corpus_never_rescanned(spark):
     plan = _plan(quality_lr.quality_lr_train(spark, SF))
     assert plan.count("FileScan parquet") == 0
     assert "SortMergeJoin" not in plan and "Union" in plan
+
+
+def test_bpe_queries_launch_at_most_10_jobs(spark):
+    """BPE training runs on the driver over the collected (word, freq)
+    vocabulary, so build plus collect of each trainer-fed query costs
+    the one vocabulary aggregate and one small final plan, not a Spark
+    job chain per merge round. Jobs are counted per job group."""
+    from pdftotext_spark.operators import textstats
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = {}
+    try:
+        for name in ("bpe_learn_merges", "bpe_apply_stats", "bpe_doc_tokens"):
+            group = f"test-bpe-jobs:{name}"
+            sc.setJobGroup(group, name)
+            getattr(textstats, name)(spark, SF).collect()
+            jobs[name] = len(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert all(0 < n <= 10 for n in jobs.values()), jobs
 
 
 def test_auc_windows_bounded_distinct_score_frame(spark):

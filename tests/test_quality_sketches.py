@@ -821,7 +821,8 @@ def test_bpe_exhaustion_keeps_vocab(spark, tmp_path):
 def _naive_bpe(vocab: dict, k: int):
     """The independent reference Sennrich loop (full per-round recount
     + argmax + leftmost application) — quadratic, used only as the
-    equality pin for the incremental driver-side trainer."""
+    equality pin for the incremental driver-side trainer. Returns the
+    merges and each word's final symbol sequence."""
     seqs = {w: list(w) for w in vocab}
     merges = []
     for rank in range(1, k + 1):
@@ -847,7 +848,7 @@ def _naive_bpe(vocab: dict, k: int):
                     out.append(s[i])
                     i += 1
             seqs[w] = out
-    return merges
+    return merges, seqs
 
 
 def test_bpe_driver_trainer_equals_naive_reference_1000_merges():
@@ -856,7 +857,9 @@ def test_bpe_driver_trainer_equals_naive_reference_1000_merges():
     naive per-round recount at n=1000 merges on a realistic-size
     vocabulary — including the repeated-char words that pin overlap
     counting and leftmost application, and long shared prefixes that
-    force deep merge chains. No Spark: this pins the trainer itself."""
+    force deep merge chains. The final per-word sequences, which feed
+    bpe_apply_stats and bpe_doc_tokens, must equal the reference's
+    too. No Spark: this pins the trainer itself."""
     import hashlib
 
     from pdftotext_spark.operators.textstats import _train_bpe_driver
@@ -867,40 +870,57 @@ def test_bpe_driver_trainer_equals_naive_reference_1000_merges():
         vocab[w] = (i % 17) + 1
     vocab["zzzzzzzz"] = 40           # overlap-counting pin
     vocab["ababababab"] = 33         # alternating leftmost pin
-    expected = _naive_bpe(vocab, 1000)
-    got = _train_bpe_driver(sorted(vocab.items()), 1000)
+    expected, expected_seqs = _naive_bpe(vocab, 1000)
+    word_freqs = sorted(vocab.items())
+    got, seqs = _train_bpe_driver(word_freqs, 1000)
     assert len(got) == 1000          # vocabulary big enough to sustain
     assert got == expected
     assert any(m[1] == "z" and m[2] == "z" for m in got)
+    assert seqs == [expected_seqs[w] for w, _ in word_freqs]
 
 
 def test_bpe_driver_trainer_exhaustion_and_empty():
     from pdftotext_spark.operators.textstats import _train_bpe_driver
 
     # exhaustion: 'ab' merges once, then no pairs remain
-    assert _train_bpe_driver([("ab", 4)], 10) == [(1, "a", "b", "ab", 4)]
+    assert _train_bpe_driver([("ab", 4)], 10) == (
+        [(1, "a", "b", "ab", 4)],
+        [["ab"]],
+    )
     # single-char words have no pairs at all
-    assert _train_bpe_driver([("a", 9), ("b", 3)], 5) == []
-    assert _train_bpe_driver([], 5) == []
+    assert _train_bpe_driver([("a", 9), ("b", 3)], 5) == ([], [["a"], ["b"]])
+    assert _train_bpe_driver([], 5) == ([], [])
 
 
-def test_bpe_merges_driver_prefix_equals_unrolled_spark(spark):
-    """The registered driver trainer's first BPE_MERGE_ROUNDS rows
-    equal the unrolled-Spark demonstrator exactly (same argmax order,
-    same corpus word table) — the two implementations cross-check each
-    other on the real fixture, and the 32-round oracle replay is
-    exercised by the parity mirror."""
+def test_bpe_merges_driver_prefix_equals_unrolled_duckdb(spark):
+    """The driver trainer against an independent engine on the real
+    fixture: the first BPE_MERGE_ROUNDS rows of bpe_merges_driver, and
+    all of bpe_learn_merges, equal DuckDB's unrolled CTE replay of the
+    same loop (BPE_LEARN_MERGES_SQL) exactly. The 32-round oracle
+    replay is exercised by the parity mirror."""
+    import duckdb
+
     sf = "/root/testdata/sf0.001"
-    driver = sorted(
-        (r.merge_rank, r.left_sym, r.right_sym, r.merged, r.pair_count)
-        for r in textstats.bpe_merges_driver(spark, sf).collect()
-        if r.merge_rank <= textstats.BPE_MERGE_ROUNDS
+
+    def merges(df):
+        return sorted(
+            (r.merge_rank, r.left_sym, r.right_sym, r.merged, r.pair_count)
+            for r in df.collect()
+        )
+
+    driver = [
+        m
+        for m in merges(textstats.bpe_merges_driver(spark, sf))
+        if m[0] <= textstats.BPE_MERGE_ROUNDS
+    ]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf}/documents.parquet')"
     )
-    unrolled = sorted(
-        (r.merge_rank, r.left_sym, r.right_sym, r.merged, r.pair_count)
-        for r in textstats.bpe_learn_merges(spark, sf).collect()
-    )
+    unrolled = sorted(con.execute(textstats.BPE_LEARN_MERGES_SQL).fetchall())
     assert driver == unrolled and len(driver) == textstats.BPE_MERGE_ROUNDS
+    assert merges(textstats.bpe_learn_merges(spark, sf)) == unrolled
 
 
 def test_bpe_driver_max_words_cap_is_deterministic(spark, tmp_path):
@@ -930,7 +950,7 @@ def test_bpe_driver_max_words_cap_is_deterministic(spark, tmp_path):
         ).collect()
     ]
     capped = {w: f for w, f in vocab.items() if w in ("aaxx", "bbxx", "ccxx")}
-    assert sorted(got) == _train_bpe_driver(sorted(capped.items()), 50)
+    assert sorted(got) == _train_bpe_driver(sorted(capped.items()), 50)[0]
 
 
 def test_trigram_logloss_python_replay(spark, tmp_path):
