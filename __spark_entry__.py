@@ -352,14 +352,29 @@ _ORACLES: dict[str, str] = {
 # falls off the cap is green at r4 or later.  COVERAGE.md records
 # which round checked what.
 _DRIVER_GATE_FIRST = [
-    # 4 + 6 + 15 + 24 = 49, inside the ~50-row cap with 1 slot spare:
-    # the 4 BPE queries, now fed by the one driver-side trainer; the 6
-    # r4-era queries the last rotation left out (token_cms ..
-    # vocab_richness); hll_distinct, the 4 queries that have never
-    # seen a driver row, the 6 connected-components queries and the 4
-    # curation queries, as in the last rotation; then 24 of the 34
-    # r4-era queries it carried.  The other 10 (range_join_tiers ..
-    # tfidf_top_terms) lead the next rotation.
+    # 3 + 10 + 4 + 6 + 1 + 3 + 6 + 4 + 12 = 49, inside the ~50-row cap
+    # with 1 slot spare: the 3 quality_lr queries, now trained by the
+    # driver loop; the 10 r4-era queries the last rotation left out
+    # (range_join_tiers .. tfidf_top_terms); then the last rotation's
+    # front in its order: the 4 BPE queries, the 6 r4-era queries
+    # token_cms .. vocab_richness, hll_distinct, the 3 other queries
+    # that had never seen a driver row, the 6 connected-components
+    # queries, the 4 curation queries and 12 of its 24 trailing r4-era
+    # queries.  The other 12 (heavy_hitters_exact .. quality_score)
+    # lead the next rotation.
+    "quality_lr_train",
+    "quality_lr_scores",
+    "quality_lr_auc",
+    "range_join_tiers",
+    "regex_normalize",
+    "regional_revenue",
+    "repetition_signals",
+    "retention_cohorts",
+    "rolling_value_7d",
+    "search_offsets",
+    "segment_revenue",
+    "stratified_sample",
+    "tfidf_top_terms",
     "bpe_learn_merges",
     "bpe_apply_stats",
     "bpe_doc_tokens",
@@ -371,7 +386,6 @@ _DRIVER_GATE_FIRST = [
     "value_quantile_sketch",
     "vocab_richness",
     "hll_distinct",
-    "quality_lr_auc",
     "cosine_batch_topk",
     "pack_manifest",
     "mixture_incremental",
@@ -397,18 +411,6 @@ _DRIVER_GATE_FIRST = [
     "doc_length_profile",
     "fragment_sort_topk",
     "funnel_conversion",
-    "heavy_hitters_exact",
-    "json_props_stats",
-    "kmeans_ivf_topk",
-    "lang_id",
-    "lang_id_confusion",
-    "median_value_by_type",
-    "pack_sequences",
-    "parts_by_brand",
-    "pivot_daily_by_type",
-    "pricing_summary",
-    "quality_filter_by_source",
-    "quality_score",
 ]
 
 

@@ -9,11 +9,12 @@ punctuated, stopword-bearing) from its raw form — so both engines and
 a pure-Python replay train the IDENTICAL model from first principles
 (no external labels, no model files).
 
-Training is :data:`LR_ROUNDS` rounds of full-batch gradient descent,
-unrolled in-plan exactly like Lloyd-KMeans
-(similarity._lloyd_final): the feature table is materialized ONCE, each
-round is one map-side-combined aggregate producing the 6-component
-gradient, and the weight update is a broadcast-scalar projection.
+Training is :data:`LR_ROUNDS` rounds of full-batch gradient descent
+driven from the driver: the feature table is materialized ONCE, and
+each round is one Spark aggregate over it with the current six
+weights attached as literal columns. The aggregate evaluates the
+shared gradient, count/sum and update SQL in the same job and returns
+the next six integer weights; the driver only carries those longs.
 
 Determinism discipline (the unigram_logloss order-proof rules):
 - features are INTEGER micro-units derived from integer counts; the
@@ -29,10 +30,10 @@ Determinism discipline (the unigram_logloss order-proof rules):
 
 100 TB shape: one corpus scan builds the (slim, 8-column) feature
 frame, materialized once; each round then aggregates THAT frame to a
-single row (map-side partial aggregation; the Lloyd
-broadcast-scalar pattern) — no round ever re-reads the corpus.
-Scoring is a zero-shuffle projection of the feature frame against the
-broadcast final weights.
+single row (map-side partial aggregation) — no round ever re-reads
+the corpus, and the feature table never leaves Spark. Scoring is a
+zero-shuffle projection of the feature frame against the final
+weights as literals.
 """
 
 from __future__ import annotations
@@ -114,6 +115,9 @@ _Z_SQL = (
     " + w4m * 1e0 * f4m + w5m * 1e0 * f5m) / 1000000e0) / 1000000e0)"
 )
 _SIGMA_SQL = f"(1e0 / (1e0 + exp(-{_Z_SQL})))"
+# the per-row integer micro score: batch scorer, streaming gate and
+# every oracle copy evaluate this one string
+_SCORE_SQL = f"CAST(round({_SIGMA_SQL} * 1000000e0, 0) AS BIGINT)"
 
 
 def _grad_sql(k: int) -> str:
@@ -156,8 +160,8 @@ def lr_features_for(docs: DataFrame) -> DataFrame:
     """The training table: every document twice — raw (label 0,
     ex_id = 2·doc_id) and prose-rendered (label 1, ex_id =
     2·doc_id + 1) — reduced to the five micro-unit features. One
-    corpus scan per rendering, materialized once for the round
-    chain."""
+    corpus scan per rendering, materialized once for the training
+    rounds."""
     raw = docs.select(
         (F.col("doc_id").cast("long") * 2).alias("ex_id"),
         F.lit(0).cast("long").alias("label"),
@@ -172,74 +176,71 @@ def lr_features_for(docs: DataFrame) -> DataFrame:
     return features_over(both).drop("text")
 
 
-def _lr_chain(
+def _with_weights(df: DataFrame, w: tuple[int, ...]) -> DataFrame:
+    """Attach the six micro weights ``w`` to every row of ``df`` as
+    the literal long columns w0m..w5m the shared SQL reads."""
+    return df.select(
+        "*", *[F.lit(v).cast("long").alias(f"w{k}m") for k, v in enumerate(w)]
+    )
+
+
+def _lr_train(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Shared trainer: returns ``(weights_by_round, feats)`` where
-    ``weights_by_round`` is one row per round 0..LR_ROUNDS (round 0 =
-    the zero init) and ``feats`` is the materialized feature table."""
+) -> tuple[list[tuple[int, ...]], DataFrame]:
+    """Shared trainer: returns ``(weights, feats)`` where ``weights``
+    holds the six micro weights of rounds 0..LR_ROUNDS (round 0 = the
+    zero init) and ``feats`` is the materialized feature table. Each
+    round is one ``first()`` over ``feats``: gradient, count/sum and
+    update run in the same job."""
     feats = materialize(
         lr_features_for(_read(spark, sf_dir, "documents"))
     )
-    n = F.count("*").cast("long").alias("n")
-    w = spark.createDataFrame(
-        [tuple([0] * 6)],
-        "w0m long, w1m long, w2m long, w3m long, w4m long, w5m long",
-    )
-    rows = [
-        w.select(F.lit(0).cast("long").alias("round"), "*")
-    ]
-    for rnd in range(1, LR_ROUNDS + 1):
-        g = (
-            feats.join(F.broadcast(w))
+    weights = [(0,) * 6]
+    for _ in range(LR_ROUNDS):
+        grads = (
+            _with_weights(feats, weights[-1])
             .select(
-                *[
-                    F.expr(_grad_sql(k)).alias(f"gc{k}")
-                    for k in range(6)
-                ]
+                *[F.expr(_grad_sql(k)).alias(f"gc{k}") for k in range(6)]
             )
             .agg(
-                n,
+                F.count("*").cast("long").alias("n"),
                 *[
                     F.sum(f"gc{k}").cast("long").alias(f"g{k}")
                     for k in range(6)
                 ],
             )
         )
-        w = materialize(
-            g.join(F.broadcast(w)).select(
-                *[
-                    F.expr(_update_sql(k)).alias(f"w{k}m")
-                    for k in range(6)
-                ]
+        row = (
+            _with_weights(grads, weights[-1])
+            .select(
+                *[F.expr(_update_sql(k)).alias(f"w{k}m") for k in range(6)]
             )
+            .first()
         )
-        rows.append(
-            w.select(F.lit(rnd).cast("long").alias("round"), "*")
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out, feats
+        weights.append(tuple(row))
+    return weights, feats
 
 
 def quality_lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered trainer: weight trajectory (round, w0m..w5m in
     integer micro-units), round 0 = init. Ordered by round."""
-    wts, _ = _lr_chain(spark, sf_dir)
-    return wts.orderBy("round")
+    weights, _ = _lr_train(spark, sf_dir)
+    # a VALUES list plans as a LocalTableScan: collecting it runs no job
+    rows = ", ".join(
+        "(" + ", ".join(f"{v}L" for v in (r, *w)) + ")"
+        for r, w in enumerate(weights)
+    )
+    cols = ", ".join(f"w{k}m" for k in range(6))
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS t(round, {cols})")
 
 
 def quality_lr_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered scorer: every training example with its final-round
     sigmoid score (micro), hard prediction at 0.5, and correctness —
     the per-document quality score a curation run would gate on."""
-    wts, feats = _lr_chain(spark, sf_dir)
-    final = wts.filter(F.col("round") == LR_ROUNDS).drop("round")
-    score = F.expr(
-        f"CAST(round({_SIGMA_SQL} * 1000000e0, 0) AS BIGINT)"
-    )
-    return feats.join(F.broadcast(final)).select(
+    weights, feats = _lr_train(spark, sf_dir)
+    score = F.expr(_SCORE_SQL)
+    return _with_weights(feats, weights[-1]).select(
         "ex_id",
         "label",
         score.alias("score_micro"),
@@ -322,10 +323,10 @@ QUALITY_LR_SCORES_SQL = f"""
 WITH {_feats_ctes()},
 {_round_ctes()}
 SELECT ex_id, label,
-       CAST(round({_SIGMA_SQL} * 1000000e0, 0) AS BIGINT) AS score_micro,
-       CAST(round({_SIGMA_SQL} * 1000000e0, 0) AS BIGINT) >= 500000
+       {_SCORE_SQL} AS score_micro,
+       {_SCORE_SQL} >= 500000
          AS predicted_clean,
-       (CAST(round({_SIGMA_SQL} * 1000000e0, 0) AS BIGINT) >= 500000)
+       ({_SCORE_SQL} >= 500000)
          = (label = 1) AS correct
 FROM feats, w{LR_ROUNDS}
 """
@@ -411,7 +412,7 @@ WITH {_feats_ctes()},
 {_round_ctes()},
 scored AS (
   SELECT label,
-         CAST(round({_SIGMA_SQL} * 1000000e0, 0) AS BIGINT) AS score_micro
+         {_SCORE_SQL} AS score_micro
   FROM feats, w{LR_ROUNDS}
 ),
 per_score AS (

@@ -2949,7 +2949,7 @@ def bpe_doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
     return (
         _bpe_words(docs, "doc_id")
-        .join(vtok, "word")
+        .join(F.broadcast(vtok), "word")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_words"),

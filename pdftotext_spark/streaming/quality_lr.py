@@ -3,14 +3,15 @@
 The modern counterpart of the hand-written panel gate
 (:mod:`pdftotext_spark.streaming.curation` ``panels=True``): the
 classifier is trained by the BATCH authority
-(:mod:`pdftotext_spark.operators.quality_lr` — the corpus-level GD
-chain) and its final weights row is materialized out-of-band; the
-stream applies only the per-row feature extraction and the shared
-sigmoid scoring expression. Same split as every gate in this repo
-(near-dup store, benchmark shingles, mixture rates): corpus-level
-state comes from batch, the stream evaluates row-local rules.
+(:mod:`pdftotext_spark.operators.quality_lr` — the corpus-level
+gradient-descent trainer) and its final weights row is written
+out-of-band; the stream applies only the per-row feature extraction
+and the shared sigmoid scoring expression. Same split as every gate
+in this repo (near-dup store, benchmark shingles, mixture rates):
+corpus-level state comes from batch, the stream evaluates row-local
+rules.
 
-The scoring expression is the IDENTICAL ``_SIGMA_SQL`` string the
+The scoring expression is the IDENTICAL ``_SCORE_SQL`` string the
 batch scorer evaluates (single-source helper discipline), over the
 IDENTICAL ``_COUNTS_EXPR``/``_FEAT_SQL`` feature pipeline — a turn
 scored at ingest and the same text scored by the batch job produce
@@ -28,10 +29,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdftotext_spark.operators.quality_lr import (
-    _SIGMA_SQL,
-    _lr_chain,
+    _SCORE_SQL,
+    _lr_train,
     features_over,
-    LR_ROUNDS,
 )
 
 # ingest keep threshold in micro units; 0.5 = the classifier's own
@@ -43,21 +43,13 @@ def write_lr_weights(spark, sf_dir: str, out_dir: str) -> None:
     """Materialize the batch-trained final weights row for the stream
     gate. Refresh out-of-band when the reference corpus (and so the
     model) moves."""
-    wts, _ = _lr_chain(spark, sf_dir)
+    weights, _ = _lr_train(spark, sf_dir)
     (
-        wts.filter(F.col("round") == LR_ROUNDS)
-        .drop("round")
+        spark.createDataFrame(
+            [weights[-1]], ", ".join(f"w{k}m long" for k in range(6))
+        )
         .write.mode("overwrite")
         .parquet(out_dir)
-    )
-
-
-def lr_score_expr() -> F.Column:
-    """The per-row integer micro score, given the weight columns
-    (w0m..w5m) already joined in — shared verbatim with the batch
-    scorer."""
-    return F.expr(
-        f"CAST(round({_SIGMA_SQL} * 1000000e0, 0) AS BIGINT)"
     )
 
 
@@ -78,7 +70,7 @@ def lr_filter_batch(output_dir: str, weights_dir: str):
         # gates do (streaming/sketches.py): null-text turns drop here
         feats = features_over(batch.filter(F.col("text").isNotNull()))
         scored = feats.join(F.broadcast(w)).withColumn(
-            "score_micro", lr_score_expr()
+            "score_micro", F.expr(_SCORE_SQL)
         )
         (
             scored.filter(F.col("score_micro") >= LR_GATE_THRESHOLD)

@@ -50,7 +50,7 @@ PICKS = {
     "mixture_weights": "Temperature mixing plan (r6s7): ONE corpus scan map-side-combined to #sources rows; the Σ totals are an unpartitioned window over that tiny frame (an agg+crossJoin-back would re-run the corpus lineage — verified: it planned TWO FileScans)",
     "mixture_rebalance": "Per-doc copy counts (r6s7): stats pass + apply pass (two narrow scans — a window-by-source single-scan would shuffle the corpus into #sources hot partitions); the #sources-row rate frame is the BROADCAST side; md5-Bernoulli copy rule is a zero-shuffle map",
     "mixture_pack": "Mix-expand-pack composition (r6s7): copy counts computed in the SAME apply-side scan that feeds the pack window (still two corpus scans), ONE copy explode, rates broadcast, pack offsets windowed per source — no global sort",
-    "quality_lr_scores": "In-Spark LR quality classifier (r6s7): corpus scanned once into the materialized feature table; 8 unrolled GD rounds each ONE map-side-combined aggregate + broadcast-scalar weight update (the Lloyd shape); scoring reads only the two ExistingRDDs, zero-shuffle",
+    "quality_lr_scores": "In-Spark LR quality classifier (r6s7): corpus scanned once into the materialized feature table; a driver loop carries the six weights, each of the 8 GD rounds ONE map-side-combined aggregate over that table with the weights as literals; scoring projects the one ExistingRDD against the final weights, no join, zero-shuffle",
     "cosine_batch_topk": "Batched dense retrieval (r6s7): the Q-row query frame broadcasts into ONE embeddings scan (corpus I/O independent of Q — the bm25_batch amortization, dense side); per-query top-k via Partial+Final WindowGroupLimit, never a corpus sort",
 }
 

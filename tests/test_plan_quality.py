@@ -683,20 +683,54 @@ def test_mixture_pack_two_scans_one_explode(spark):
 
 def test_quality_lr_corpus_never_rescanned(spark):
     """quality_lr: the corpus is scanned only inside the one feats
-    materialization job — the final scores plan reads ONLY the two
-    materialized ExistingRDDs (feature table + final weights row),
-    joins them broadcast-scalar, and projects zero-shuffle; the train
-    plan is the union of the 9 materialized 1-row weight frames (the
-    Lloyd unrolled-round shape)."""
+    materialization job. The final scores plan reads ONLY that
+    ExistingRDD and projects it against the final weights as literals:
+    no weight frame, no join, no shuffle. The train plan is the
+    trajectory as a local table."""
     from pdftotext_spark.operators import quality_lr
 
     plan = _plan(quality_lr.quality_lr_scores(spark, SF))
     assert plan.count("FileScan parquet") == 0
-    assert plan.count("Scan ExistingRDD") == 2
-    assert "SortMergeJoin" not in plan
+    assert plan.count("Scan ExistingRDD") == 1
+    assert "Join" not in plan and "Exchange" not in plan
     plan = _plan(quality_lr.quality_lr_train(spark, SF))
-    assert plan.count("FileScan parquet") == 0
-    assert "SortMergeJoin" not in plan and "Union" in plan
+    assert "LocalTableScan" in plan
+    assert "Scan" not in plan.replace("LocalTableScan", "")
+
+
+def _jobs_per_query(spark, module, names) -> dict:
+    """Spark jobs that build plus collect of each ``module.<name>``
+    launch, counted per job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = {}
+    try:
+        for name in names:
+            group = f"test-jobs:{name}"
+            sc.setJobGroup(group, name)
+            getattr(module, name)(spark, SF).collect()
+            jobs[name] = len(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    return jobs
+
+
+def test_quality_lr_queries_launch_at_most_22_jobs(spark):
+    """quality_lr trains on the driver: each gradient-descent round is
+    one aggregate over the materialized feature table (a shuffle stage
+    and a result job under AQE), with the six weights carried as
+    literals, so build plus collect costs at most two jobs per round
+    plus a few for the feature cut and the final plan."""
+    from pdftotext_spark.operators import quality_lr
+
+    jobs = _jobs_per_query(
+        spark,
+        quality_lr,
+        ("quality_lr_train", "quality_lr_scores", "quality_lr_auc"),
+    )
+    bound = 2 * quality_lr.LR_ROUNDS + 6
+    assert all(0 < n <= bound for n in jobs.values()), jobs
 
 
 def test_bpe_queries_launch_at_most_10_jobs(spark):
@@ -706,19 +740,35 @@ def test_bpe_queries_launch_at_most_10_jobs(spark):
     job chain per merge round. Jobs are counted per job group."""
     from pdftotext_spark.operators import textstats
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    jobs = {}
-    try:
-        for name in ("bpe_learn_merges", "bpe_apply_stats", "bpe_doc_tokens"):
-            group = f"test-bpe-jobs:{name}"
-            sc.setJobGroup(group, name)
-            getattr(textstats, name)(spark, SF).collect()
-            jobs[name] = len(tracker.getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setJobDescription(None)
+    jobs = _jobs_per_query(
+        spark,
+        textstats,
+        ("bpe_learn_merges", "bpe_apply_stats", "bpe_doc_tokens"),
+    )
     assert all(0 < n <= 10 for n in jobs.values()), jobs
+
+
+def test_bpe_doc_tokens_broadcasts_vocabulary(spark):
+    """bpe_doc_tokens: the vocabulary-sized local frame is the
+    broadcast side of the per-word join. Without the hint the planner
+    sees no size statistics for it and broadcasts the corpus word
+    explode instead, which grows with the corpus."""
+    from pdftotext_spark.operators import textstats
+
+    lines = _plan(textstats.bpe_doc_tokens(spark, SF)).splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    at = next(i for i, ln in enumerate(lines) if "BroadcastExchange" in ln)
+    sub = [lines[at]]
+    for ln in lines[at + 1:]:
+        if depth(ln) <= depth(lines[at]):
+            break
+        sub.append(ln)
+    sub = "\n".join(sub)
+    assert "Scan ExistingRDD" in sub
+    assert "Generate" not in sub and "FileScan" not in sub
 
 
 def test_auc_windows_bounded_distinct_score_frame(spark):
