@@ -123,13 +123,13 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_keep_best": dedup.dedup_keep_best,  # quality-argmax cluster survivor
     "dedup_group_sizes": dedup.dedup_group_sizes,            # cluster histogram
     "containment_pairs": dedup.containment_pairs,  # asymmetric short-in-long dup
-    # detect→group→apply chains (iterative CC checked against a
-    # recursive-CTE transitive closure in DuckDB)
+    # detect→group→apply chains (driver union-find CC checked against
+    # a recursive-CTE transitive closure in DuckDB)
     "dedup_groups_minhash": dedup.dedup_groups_minhash,
     "dedup_groups_simhash": dedup.dedup_groups_simhash,
-    # all three candidate families through ONE pointer-jumping CC run
-    # (disjoint namespaced union graph) — measured 0.6-0.8x the cost of
-    # the three standalone runs, outputs identical per family
+    # all three candidate families through ONE CC run (disjoint
+    # namespaced union graph, one edge fetch), outputs identical per
+    # family
     "dedup_groups_multi": dedup.dedup_groups_multi,
     "dedup_apply_minhash": dedup.dedup_apply_minhash,
     # incremental dedup: new batch vs persisted corpus index (the
@@ -352,16 +352,34 @@ _ORACLES: dict[str, str] = {
 # falls off the cap is green at r4 or later.  COVERAGE.md records
 # which round checked what.
 _DRIVER_GATE_FIRST = [
-    # 3 + 10 + 4 + 6 + 1 + 3 + 6 + 4 + 12 = 49, inside the ~50-row cap
-    # with 1 slot spare: the 3 quality_lr queries, now trained by the
-    # driver loop; the 10 r4-era queries the last rotation left out
-    # (range_join_tiers .. tfidf_top_terms); then the last rotation's
-    # front in its order: the 4 BPE queries, the 6 r4-era queries
-    # token_cms .. vocab_richness, hll_distinct, the 3 other queries
-    # that had never seen a driver row, the 6 connected-components
-    # queries, the 4 curation queries and 12 of its 24 trailing r4-era
-    # queries.  The other 12 (heavy_hitters_exact .. quality_score)
-    # lead the next rotation.
+    # 6 + 12 + 3 + 10 + 4 + 6 + 1 + 3 + 4 = 49, inside the ~50-row cap
+    # with 1 slot spare: the 6 connected-components queries, now
+    # labelled by one driver union-find; the 12 r4-era queries the last
+    # rotation left out (heavy_hitters_exact .. quality_score); then
+    # the last rotation's front in its order: the 3 quality_lr queries,
+    # the 10 r4-era queries range_join_tiers .. tfidf_top_terms, the 4
+    # BPE queries, the 6 r4-era queries token_cms .. vocab_richness,
+    # hll_distinct, the 3 other queries that had never seen a driver
+    # row, and the 4 curation queries.  Its other 12 r4-era queries
+    # (asof_join_events .. funnel_conversion) lead the next rotation.
+    "dedup_groups_minhash",
+    "dedup_groups_simhash",
+    "dedup_group_sizes",
+    "dedup_keep_best",
+    "dedup_groups_multi",
+    "dedup_groups_srp",
+    "heavy_hitters_exact",
+    "json_props_stats",
+    "kmeans_ivf_topk",
+    "lang_id",
+    "lang_id_confusion",
+    "median_value_by_type",
+    "pack_sequences",
+    "parts_by_brand",
+    "pivot_daily_by_type",
+    "pricing_summary",
+    "quality_filter_by_source",
+    "quality_score",
     "quality_lr_train",
     "quality_lr_scores",
     "quality_lr_auc",
@@ -389,28 +407,10 @@ _DRIVER_GATE_FIRST = [
     "cosine_batch_topk",
     "pack_manifest",
     "mixture_incremental",
-    "dedup_groups_minhash",
-    "dedup_groups_simhash",
-    "dedup_group_sizes",
-    "dedup_keep_best",
-    "dedup_groups_multi",
-    "dedup_groups_srp",
     "curation_pipeline",
     "curation_pipeline_panels",
     "curation_pipeline_unanimous",
     "curation_funnel",
-    "asof_join_events",
-    "bpe_token_profile",
-    "chunk_documents",
-    "containment_capture",
-    "cube_activity",
-    "cumulative_chars",
-    "daily_activity",
-    "distinct_users_by_type",
-    "doc_fingerprint",
-    "doc_length_profile",
-    "fragment_sort_topk",
-    "funnel_conversion",
 ]
 
 

@@ -34,7 +34,8 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -495,12 +496,7 @@ CONTAINMENT_THRESHOLD = 0.8
 # 2010 for the MapReduce shape).  At 100 TB keep this absolute cap
 # small relative to corpus size; a pair sharing ONLY above-cap
 # shingles is missed by design (documented recall trade).
-# Clamped to >= 1 like SHINGLE_KEEP16: a 0/negative lever must not
-# silently disable the operator (cap 0 = empty index) or unbound its
-# cost (min-rare 0 = the measured 693k-candidate blowup below).
-CONTAINMENT_DF_CAP = max(
-    1, int(os.environ.get("SPARK_GRAFT_CONTAINMENT_DF_CAP", "128"))
-)
+CONTAINMENT_DF_CAP = 128
 # Candidacy additionally requires this many shared WITHIN-CAP
 # shingles — the minimal-evidence rule of prefix-filtering set joins:
 # one shared rare shingle is noise on shared-vocabulary corpora
@@ -950,177 +946,66 @@ FROM selected GROUP BY doc_id
 """
 
 
-# Driver-side connected-components cap: a candidate graph of at most
-# this many pair rows is collected and labelled by union-find on the
-# driver; a larger graph runs the pointer-jumping loop on the cluster.
-# Tests monkeypatch it to force either path.
-#
-# Set by driver memory, measured with scripts/cc_crossover.py (random
-# trees of 6 docs, local[4] on a 4-core Xeon): the driver path grows
-# the Python peak by ~340 bytes per edge, linearly (108 MB at 300k
-# edges, 337 MB at 1M, 730 MB at 2M). The cap keeps that near 350 MB,
-# about a third of Spark's default 1 GB driver heap. Time does not set
-# it there: union-find beat the loop 3-6x at every size from 10k to
-# 1M edges (14.8 s vs 45.7 s at 1M), and the JVM peaked lower too.
-# Where the loop starts to win on a many-executor cluster is not
-# measured.
-DRIVER_CC_MAX_EDGES = 1_000_000
+# Edges the union-find turns into Python ints at a time: the pair
+# columns stay numpy arrays, so no per-edge Python object outlives its
+# chunk.
+_CC_CHUNK = 1 << 16
 
 
-def _union_find_labels(edges) -> dict:
-    """Union-find over ``(a, b)`` edges with path compression: maps
-    every endpoint to its component's minimum id. The smaller root
-    always wins a union, so every root IS its component's minimum —
-    the same canonical label the pointer-jumping loop converges to."""
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in edges:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-    return {x: find(x) for x in parent}
+def _find(parent: list, x: int) -> int:
+    """Root of ``x``, halving the path on the way up."""
+    while parent[x] != x:
+        parent[x] = parent[parent[x]]
+        x = parent[x]
+    return x
 
 
-def dedup_groups(pairs: DataFrame, max_iterations: int = 10) -> DataFrame:
+def dedup_groups(pairs: DataFrame) -> DataFrame:
     """Connected components over near-dup pairs: every doc maps to its
     group's minimum doc id (the canonical representative), transitive
     closure included — ``apply_dedup``'s one-pass policy upgraded to
     full groups. Returns (doc_id, group_id) for every doc in a pair,
-    typed like the pair columns.
+    typed like the pair columns (their union type when the two differ).
 
-    Size-adaptive. The pair rows are cut once (:func:`materialize`),
-    then one bounded action fetches up to
-    :data:`DRIVER_CC_MAX_EDGES` + 1 of them. At or below the cap the
-    graph is labelled by union-find on the driver
-    (:func:`_union_find_labels`) and returned as a local frame: two
-    Spark jobs in total, where the loop spends one checkpoint job
-    per round plus two more eager cuts — after LSH banding the
-    candidate graph is small even when the corpus is not, the same
-    split as the BPE trainer ``textstats._train_bpe_driver`` (Spark
-    aggregates the vocabulary, the driver loops). Above the cap :func:`_dedup_groups_spark` labels the
-    graph; both paths emit identical rows (pinned by a differential
-    test), and the loop raises if it has not converged within
-    ``max_iterations`` rounds.
-
-    The cut comes before the fetch so that above the cap the loop
-    reads the pairs back instead of re-running the pair detection
-    (the LSH self-join, the costly part at scale). A ``persist`` in
-    its place made the fused three-family query about 20% slower on
-    the driver path; the cut was no slower than no cut at all."""
-    # the Spark path's labels carry the union type of both endpoints
+    One Spark action: the two id columns are fetched once as Arrow,
+    then labelled by union-find on the driver and returned as a local
+    frame. After LSH banding the candidate graph is small even when
+    the corpus is not — the same split as the BPE trainer
+    ``textstats._train_bpe_driver`` (Spark aggregates, the driver
+    loops). ``np.unique`` remaps the ids to dense ints in id order, so
+    the smaller dense root is always the smaller doc id; the smaller
+    root wins every union, so every root IS its component's minimum.
+    Driver memory grows with the number of distinct ids (a list of
+    parents), not with the number of edges (two int arrays)."""
     id_type = (
         pairs.select("doc_a").union(pairs.select("doc_b")).schema[0].dataType
     )
-    pairs = pairs.select("doc_a", "doc_b").transform(materialize)
-    rows = pairs.limit(DRIVER_CC_MAX_EDGES + 1).collect()
-    if len(rows) > DRIVER_CC_MAX_EDGES:
-        return _dedup_groups_spark(pairs, max_iterations)
+    edges = pairs.select(
+        F.col("doc_a").cast(id_type), F.col("doc_b").cast(id_type)
+    ).toArrow()
+    n = edges.num_rows
+    ends = np.concatenate([edges.column(i).to_numpy() for i in (0, 1)])
+    del edges
+    ids, dense = np.unique(ends, return_inverse=True)
+    del ends
+    parent = list(range(len(ids)))
+    for lo in range(0, n, _CC_CHUNK):
+        hi = min(lo + _CC_CHUNK, n)
+        for a, b in zip(dense[lo:hi].tolist(), dense[n + lo : n + hi].tolist()):
+            ra, rb = _find(parent, a), _find(parent, b)
+            if ra < rb:
+                parent[rb] = ra
+            elif rb < ra:
+                parent[ra] = rb
+    # every parent is at most its child: jump pointers to the roots
+    p = np.array(parent, dtype=np.int64)
+    while not np.array_equal(q := p[p], p):
+        p = q
     schema = StructType(
         [StructField("doc_id", id_type), StructField("group_id", id_type)]
     )
-    labels = _union_find_labels(rows)
     return pairs.sparkSession.createDataFrame(
-        pd.DataFrame({"doc_id": list(labels), "group_id": list(labels.values())}),
-        schema,
-    )
-
-
-def _dedup_groups_spark(pairs: DataFrame, max_iterations: int) -> DataFrame:
-    """The above-cap path of :func:`dedup_groups`: iterated label
-    propagation with pointer jumping. Every node adopts the minimum
-    label among itself and its neighbours, then labels compress
-    (``group_id := label(group_id)``) — O(log n) rounds instead of
-    O(diameter) (the standard Spark CC-without-GraphX shape). Each
-    *materialized* round fuses two propagate+compress cycles into a
-    single Spark job whose action is the convergence count itself
-    (lazy materialize), because per-round fixed cost dominates at
-    small scale; the first propagation is fused into the label
-    initialization as a plain groupBy.
-
-    (Measured dead ends: explicitly repartitioning edges/labels to an
-    edge-count-sized partition count made sf0.1 *slower* — 10.2s →
-    16.8s — the added exchanges cost more than the small-task overhead
-    they removed; AQE's coalescing already handles the tiny shuffles.
-    And THREE fused cycles per round did not cut the round count on
-    the sf0.1 LSH graph — still 3 rounds, 6.6s → 11-22s from the
-    deeper per-round plans. Two cycles is the measured optimum.)
-
-    Raises ``RuntimeError`` when ``max_iterations`` rounds pass and the
-    last one still changed labels, rather than return labels that may
-    not be the component minima.
-    """
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .distinct()
-        # materialize once: edges feed two joins per round, and a lazy
-        # plan would re-derive the union and distinct every iteration
-        .transform(materialize)
-    )
-    # round 0 fused into initialization: with identity labels the
-    # neighbour-min is just min(dst), so the first propagation is a
-    # plain groupBy — no join round spent on it
-    labels = (
-        edges.groupBy("src")
-        .agg(F.least(F.col("src"), F.min("dst")).alias("group_id"))
-        .withColumnRenamed("src", "doc_id")
-        .transform(materialize)
-    )
-
-    def _propagate(lab: DataFrame) -> DataFrame:
-        nm = (
-            edges.join(lab, edges.dst == lab.doc_id)
-            .groupBy("src")
-            .agg(F.min("group_id").alias("n_min"))
-        )
-        return lab.join(nm, lab.doc_id == nm.src, "left").select(
-            "doc_id",
-            F.least(
-                F.col("group_id"), F.coalesce(F.col("n_min"), F.col("group_id"))
-            ).alias("group_id"),
-        )
-
-    def _jump(lab: DataFrame) -> DataFrame:
-        roots = lab.select(
-            F.col("doc_id").alias("r_id"), F.col("group_id").alias("r_group")
-        )
-        return lab.join(roots, lab.group_id == roots.r_id, "left").select(
-            "doc_id",
-            F.coalesce(F.col("r_group"), F.col("group_id")).alias("group_id"),
-        )
-
-    for _ in range(max_iterations):
-        # two propagate+compress cycles per materialized round: each
-        # round's fixed cost (one checkpoint-under-count job) dominates
-        # at small scale, and at 100 TB the extra fused joins amortize
-        # over real data — measured sf0.1: 5 rounds/5.2s → 3 rounds/2.6s
-        prev = labels.select("doc_id", F.col("group_id").alias("prev"))
-        updated = _jump(_propagate(_jump(_propagate(labels)))).join(prev, "doc_id")
-        # one Spark job per round: the lazy checkpoint materializes
-        # under the convergence count itself, and the pre-round label
-        # rides along as `prev` so the probe needs no extra join
-        updated = updated.transform(materialize_lazy)
-        changed = updated.filter(F.col("group_id") != F.col("prev")).count()
-        labels = updated.drop("prev")
-        if changed == 0:
-            return labels
-    # the last round still moved labels: they may not be component minima
-    raise RuntimeError(
-        f"dedup_groups: labels still changing after max_iterations="
-        f"{max_iterations} rounds; raise max_iterations"
+        pa.table({"doc_id": ids, "group_id": ids[p]}), schema
     )
 
 
@@ -2278,7 +2163,7 @@ FROM membered
 # 1.1e12 — far above any doc/vec id in the data contract) so the three
 # subgraphs are disjoint and min-label arithmetic per family is the
 # monotonic shift id -> k*FUSED_NS + id, preserving every comparison
-# union-find or the pointer-jumping loop makes.
+# union-find makes.
 FUSED_NS = 1 << 40
 
 
@@ -2318,11 +2203,8 @@ def dedup_groups_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Edges never cross families (ids are namespaced by ``k*FUSED_NS``),
     so the union graph is three disjoint subgraphs and a single
-    :func:`dedup_groups` call labels all three at once: one bounded
-    edge fetch instead of three, and, for a graph above
-    :data:`DRIVER_CC_MAX_EDGES`, one pointer-jumping fixed point whose
-    per-round job overhead (VERDICT r3) is paid once, not three
-    times.  Per-family
+    :func:`dedup_groups` call labels all three at once: one edge fetch
+    and one driver union-find instead of three.  Per-family
     labels recover exactly — ``family = id >> 40``,
     ``doc_id = id & (FUSED_NS-1)`` — and equal the standalone
     :func:`dedup_groups_minhash` / :func:`dedup_groups_simhash` /

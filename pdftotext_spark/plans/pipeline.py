@@ -291,13 +291,16 @@ def run_extraction(
     run_id: str = "run-0",
     resume: bool = True,
     options=None,
+    n_partitions: int | None = None,
 ) -> DataFrame:
     """End-to-end job: read → (resume filter) → extract → write +
     manifest. Returns the extracted DataFrame (lazily if not written).
     ``options`` is an :class:`~pdftotext_spark.core.document.
     ExtractOptions` (or None for defaults) — it rides inside the
     pickled UDF so the full option surface reaches executors,
-    ``global_deadline_epoch`` (the job-wide wall deadline) included."""
+    ``global_deadline_epoch`` (the job-wide wall deadline) included.
+    ``n_partitions`` forces :func:`extract_turns`' salted repartition
+    (pathological file layouts only; default: scan splits)."""
     transcripts = read_transcripts(spark, input_path)
     if output_path is not None and resume:
         try:
@@ -305,7 +308,7 @@ def run_extraction(
             transcripts = resume_anti_join(transcripts, committed)
         except Exception:
             pass  # nothing committed yet
-    extracted = extract_turns(transcripts, options=options)
+    extracted = extract_turns(transcripts, n_partitions=n_partitions, options=options)
     if output_path is not None:
         # lineage columns stamped before the write: every output row
         # records which run committed it and which extraction task

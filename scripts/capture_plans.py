@@ -24,7 +24,7 @@ PICKS = {
     "repetition_signals": "zero-shuffle: one WholeStageCodegen scan, array expressions only",
     "cube_activity": "CUBE: single Expand + partial aggregate, no per-grouping rescans",
     "knn_graph_srp": "ANN graph (r4, 64-plane 16x4 bands): WindowGroupLimit partial top-k per union side; the ExistingRDD scans are the materialized banded-join candidates (join shape asserted pre-cut by test_plan_quality)",
-    "dedup_groups_multi": "fused CC (r4): the ExistingRDD is the converged label fixed point (one CC run for all three families); candidate generation shapes are the banded plans above",
+    "dedup_groups_multi": "fused CC (r4): the ExistingRDD is the label frame of one driver union-find over all three families; candidate generation shapes are the banded plans above",
     "semdedup": "SemDeDup (r5): ExistingRDD scans are the materialized Lloyd assignment/centroid-cos frames (broadcast-centroid assignment, see kmeans_ivf_topk); within-cluster pairs are chunk-keyed equi-joins, rank joins ship ids+rank only",
     "dsir_select": "DSIR (r5): the ExistingRDD is the ONCE-materialized per-doc weight table (its upstream: ONE fused constant-key count aggregate — raw + conditional target counts — broadcast-joined back onto the token scan); both the top-N (TakeOrderedAndProject) and the final selected-flag join reuse it — no window, no SMJ, no duplicate token scan",
     "bpe_learn_merges": "BPE training: one corpus scan + groupBy builds the (word, freq) vocabulary, which the driver collects and trains on; the plan is a scan of the driver's merge rows",

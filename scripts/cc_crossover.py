@@ -1,12 +1,9 @@
 #!/usr/bin/env python
-"""Where should ``dedup.DRIVER_CC_MAX_EDGES`` sit?
+"""Time and size ``dedup.dedup_groups`` on a synthetic near-dup graph.
 
-Times both connected-components paths of ``dedup.dedup_groups`` on a
-synthetic near-dup graph of a given edge count, and records the
-driver's peak memory for each:
-
-- ``driver``: the cut, the bounded fetch and union-find on the driver;
-- ``spark``: the same cut, then the pointer-jumping loop.
+Labels a graph of a given edge count with the one connected-components
+path (one Arrow fetch of the pair columns, union-find on the driver)
+and records the wall time and the driver's peak memory.
 
 The graph is the shape LSH banding leaves behind: many small clusters
 (``--cluster`` members each, a random tree of ``cluster - 1`` edges),
@@ -14,19 +11,21 @@ ids scattered over the 2^40 id space, every pair ordered
 ``doc_a < doc_b``. It is written to parquet first, so the pairs reach
 ``dedup_groups`` as a file scan.
 
-Each (path, size) runs in its own process, so ``ru_maxrss`` is that
-run's own Python peak. ``jvm_hwm_mb`` is the JVM's peak resident set;
-in local mode the JVM also hosts the executors, so it bounds the
-driver JVM from above. One JSON line per run::
+Each size runs in its own process, and ``py_peak_mb`` is that
+process's own peak resident set (``VmHWM``, which starts afresh at
+exec; ``ru_maxrss`` would carry over the peak of the process that
+wrote the graph). ``jvm_hwm_mb`` is the JVM's peak resident set; in
+local mode the JVM also hosts the executors, so it bounds the driver
+JVM from above. One JSON line per run::
 
-    python scripts/cc_crossover.py --edges 100000,1000000 --out /tmp/cc
+    python scripts/cc_crossover.py --edges 1000000,2000000 --out /tmp/cc
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import resource
+import os
 import subprocess
 import sys
 import time
@@ -61,15 +60,14 @@ def write_graph(path: Path, n_edges: int, cluster: int, seed: int) -> None:
     )
 
 
-def _jvm_hwm_mb(spark) -> float:
-    pid = spark.sparkContext._gateway.proc.pid
+def _hwm_mb(pid: int) -> float:
     for line in Path(f"/proc/{pid}/status").read_text().splitlines():
         if line.startswith("VmHWM:"):
             return int(line.split()[1]) / 1024
     return float("nan")
 
 
-def run_one(graph: Path, path: str, cores: int) -> dict:
+def run_one(graph: Path, cores: int) -> dict:
     from pyspark.sql import SparkSession
 
     from pdftotext_spark.operators import dedup
@@ -86,22 +84,19 @@ def run_one(graph: Path, path: str, cores: int) -> dict:
     spark.sparkContext.setLogLevel("ERROR")
     pairs = spark.read.parquet(str(graph / "pairs.parquet"))
     n_edges = pairs.count()
-    # force the path: the driver path at any size, the loop at any size
-    dedup.DRIVER_CC_MAX_EDGES = n_edges if path == "driver" else 0
-    rss0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+    rss0 = _hwm_mb(os.getpid())
     t0 = time.perf_counter()
     labels = dedup.dedup_groups(pairs)
     n_docs = labels.count()
     wall = time.perf_counter() - t0
-    rss1 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+    rss1 = _hwm_mb(os.getpid())
     out = {
-        "path": path,
         "edges": n_edges,
         "docs": n_docs,
         "wall_s": round(wall, 2),
-        "py_peak_mb": round(rss1 / 1024, 1),
-        "py_peak_rise_mb": round((rss1 - rss0) / 1024, 1),
-        "jvm_hwm_mb": round(_jvm_hwm_mb(spark), 1),
+        "py_peak_mb": round(rss1, 1),
+        "py_peak_rise_mb": round(rss1 - rss0, 1),
+        "jvm_hwm_mb": round(_hwm_mb(spark.sparkContext._gateway.proc.pid), 1),
         "cores": cores,
     }
     spark.stop()
@@ -110,31 +105,28 @@ def run_one(graph: Path, path: str, cores: int) -> dict:
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--edges", default="100000,300000,1000000",
+    ap.add_argument("--edges", default="1000000,2000000",
                     help="comma-separated edge counts")
-    ap.add_argument("--paths", default="driver,spark",
-                    help="comma-separated subset of driver,spark")
     ap.add_argument("--cluster", type=int, default=6,
                     help="members per near-dup cluster")
     ap.add_argument("--cores", type=int, default=4)
     ap.add_argument("--seed", type=int, default=7)
     ap.add_argument("--out", required=True, help="directory for the graphs")
-    ap.add_argument("--one", nargs=2, metavar=("GRAPH", "PATH"),
+    ap.add_argument("--one", metavar="GRAPH",
                     help=argparse.SUPPRESS)  # a single run, in-process
     args = ap.parse_args()
     if args.one:
-        print(json.dumps(run_one(Path(args.one[0]), args.one[1], args.cores)))
+        print(json.dumps(run_one(Path(args.one), args.cores)))
         return
     for n in (int(x) for x in args.edges.split(",")):
         graph = Path(args.out) / f"g{n}"
         write_graph(graph, n, args.cluster, args.seed)
-        for path in args.paths.split(","):
-            res = subprocess.run(
-                [sys.executable, __file__, "--out", args.out,
-                 "--cores", str(args.cores), "--one", str(graph), path],
-                capture_output=True, text=True, check=True,
-            )
-            print(res.stdout.strip().splitlines()[-1], flush=True)
+        res = subprocess.run(
+            [sys.executable, __file__, "--out", args.out,
+             "--cores", str(args.cores), "--one", str(graph)],
+            capture_output=True, text=True, check=True,
+        )
+        print(res.stdout.strip().splitlines()[-1], flush=True)
 
 
 if __name__ == "__main__":

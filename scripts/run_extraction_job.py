@@ -66,49 +66,16 @@ def main() -> None:
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
 
-    if args.repartition is not None:
-        # pathological layouts only: route through the salted variant
-        from pdftotext_spark.plans.pipeline import (
-            extract_turns,
-            metrics_manifest,
-            read_transcripts,
-            resume_anti_join,
-        )
-        from pyspark.sql import functions as F
-
-        transcripts = read_transcripts(spark, args.input)
-        if not args.no_resume:
-            try:
-                committed = spark.read.parquet(args.output)
-                transcripts = resume_anti_join(transcripts, committed)
-            except Exception:
-                pass  # first run: nothing committed yet
-        extracted = (
-            extract_turns(transcripts, n_partitions=args.repartition, options=options)
-            .withColumn("partition_id", F.spark_partition_id())
-            .withColumn("run_id", F.lit(args.run_id))
-        )
-        extracted.write.mode("append").parquet(args.output)
-        if args.metrics:
-            increment = (
-                spark.read.parquet(args.output)
-                .filter(F.col("run_id") == args.run_id)
-                .drop("run_id")
-            )
-            metrics_manifest(increment, args.run_id).write.mode("append").parquet(
-                args.metrics
-            )
-    else:
-        # the library pipeline owns lineage stamping + manifest scoping
-        run_extraction(
-            spark,
-            args.input,
-            output_path=args.output,
-            metrics_path=args.metrics,
-            run_id=args.run_id,
-            resume=not args.no_resume,
-            options=options,
-        )
+    run_extraction(
+        spark,
+        args.input,
+        output_path=args.output,
+        metrics_path=args.metrics,
+        run_id=args.run_id,
+        resume=not args.no_resume,
+        options=options,
+        n_partitions=args.repartition,
+    )
     spark.stop()
 
 

@@ -46,27 +46,3 @@ def transcripts_dir(tmp_path_factory):
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-
-
-@pytest.fixture
-def cc_under_cap(monkeypatch):
-    """Run ``dedup.dedup_groups`` with ``DRIVER_CC_MAX_EDGES`` set to
-    ``cap``. Returns the sorted rows and whether the pointer-jumping
-    loop ran (union-find on the driver ran otherwise)."""
-    from pdftotext_spark.operators import dedup
-
-    spark_cc = dedup._dedup_groups_spark
-
-    def run(pairs, cap, max_iterations=10):
-        calls = []
-
-        def spy(p, n):
-            calls.append(n)
-            return spark_cc(p, n)
-
-        monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", cap)
-        monkeypatch.setattr(dedup, "_dedup_groups_spark", spy)
-        rows = dedup.dedup_groups(pairs, max_iterations).collect()
-        return sorted(tuple(r) for r in rows), bool(calls)
-
-    return run

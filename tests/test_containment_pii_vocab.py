@@ -94,32 +94,33 @@ def test_containment_tiny_doc_scores_exactly_one(spark, tmp_path):
 
 
 def test_containment_df_cap_prunes_boilerplate_only_overlap(spark, tmp_path):
-    """Two documents overlapping ONLY through a shingle present in
-    every document generate no candidate pair once the cap excludes
-    it — the documented recall trade that bounds join fan-out."""
-    import importlib
-    import os
-
+    """A pair overlapping ONLY through shingles present in more than
+    CONTAINMENT_DF_CAP documents generates no candidate pair — the
+    documented recall trade that bounds join fan-out — while a pair
+    sharing within-cap shingles is still found."""
     from pdftotext_spark.operators import dedup
 
-    # every doc shares the 'commonXX ' prefix (df = n_docs), tails
-    # are unique; with DF_CAP=1 even the unique-tail shingles shared
-    # by nothing else produce no pairs, so output must be empty
-    rows = [
-        (i, "common-boilerplate-prefix " + " ".join(f"d{i}w{j:03d}" for j in range(40)), "s")
-        for i in range(1, 7)
+    boiler = " ".join(f"boiler{j:03d}" for j in range(40))
+    n_boiler = 130
+    # doc 2 IS the boilerplate, so it sits verbatim (containment 1.0)
+    # inside every other boilerplate doc, but each of its shingles has
+    # df = n_boiler > cap: no within-cap evidence, no candidate
+    rows = [(2, boiler, "s")] + [
+        (i, boiler + " " + " ".join(f"d{i}w{j:03d}" for j in range(40)), "s")
+        for i in range(1, n_boiler + 1)
+        if i != 2
     ]
+    # control: a short doc inside a long one, through within-cap shingles
+    rows += [
+        (1001, " ".join(f"word{i:03d}" for i in range(300)), "s"),
+        (1002, " ".join(f"word{i:03d}" for i in range(100, 140)), "s"),
+    ]
+    assert n_boiler > dedup.CONTAINMENT_DF_CAP
     sf_dir = _write_docs(tmp_path, spark, rows)
-    os.environ["SPARK_GRAFT_CONTAINMENT_DF_CAP"] = "1"
-    try:
-        d2 = importlib.reload(dedup)
-        assert d2.CONTAINMENT_DF_CAP == 1
-        assert d2.containment_pairs(spark, sf_dir).collect() == []
-        assert _duck(sf_dir).execute(d2.CONTAINMENT_PAIRS_SQL).fetchall() == []
-    finally:
-        del os.environ["SPARK_GRAFT_CONTAINMENT_DF_CAP"]
-        restored = importlib.reload(dedup)
-        assert restored.CONTAINMENT_DF_CAP == 128
+    got = {(r.doc_a, r.doc_b) for r in dedup.containment_pairs(spark, sf_dir).collect()}
+    assert got == {(1001, 1002)}
+    orc = _duck(sf_dir).execute(dedup.CONTAINMENT_PAIRS_SQL).fetchall()
+    assert {(a, b) for a, b, *_ in orc} == {(1001, 1002)}
 
 
 def test_pii_redact_constructed(spark, tmp_path):

@@ -122,28 +122,34 @@ def test_resume_into_legacy_output_without_lineage_columns(
     # this run's increment
     from pdftotext_spark.plans.pipeline import extract_turns, run_extraction
 
-    out_dir, m_dir = str(tmp_path / "out"), str(tmp_path / "metrics")
     src = f"{transcripts_dir}/transcripts.parquet"
     df = spark.read.parquet(src)
     total = df.count()
-    # simulate a pre-lineage run: first 50 turns, old schema
-    legacy = extract_turns(
-        df.orderBy("conv_id", "turn_idx").limit(50)
-    )
-    legacy.write.mode("append").parquet(out_dir)
-    assert "run_id" not in spark.read.parquet(out_dir).columns
-    # resume with the current code: remaining turns extract, read-back
-    # merges schemas, manifest counts only the r2 increment
-    run_extraction(spark, src, output_path=out_dir, metrics_path=m_dir, run_id="r2")
-    out = spark.read.option("mergeSchema", "true").parquet(out_dir)
-    assert out.count() == total
-    m = spark.read.parquet(m_dir)
-    assert (
-        m.filter(F.col("run_id") == "r2").agg(F.sum("turns_parsed")).first()[0]
-        == total - 50
-    )
-    # legacy rows read back with null run_id — never attributed to r2
-    assert out.filter(F.col("run_id").isNull()).count() == 50
+    # the default scan splits, and the salted repartition
+    for n_partitions in (None, 4):
+        out_dir = str(tmp_path / f"out{n_partitions}")
+        m_dir = str(tmp_path / f"metrics{n_partitions}")
+        # simulate a pre-lineage run: first 50 turns, old schema
+        legacy = extract_turns(
+            df.orderBy("conv_id", "turn_idx").limit(50)
+        )
+        legacy.write.mode("append").parquet(out_dir)
+        assert "run_id" not in spark.read.parquet(out_dir).columns
+        # resume with the current code: remaining turns extract,
+        # read-back merges schemas, manifest counts only the r2 increment
+        run_extraction(
+            spark, src, output_path=out_dir, metrics_path=m_dir, run_id="r2",
+            n_partitions=n_partitions,
+        )
+        out = spark.read.option("mergeSchema", "true").parquet(out_dir)
+        assert out.count() == total
+        m = spark.read.parquet(m_dir)
+        assert (
+            m.filter(F.col("run_id") == "r2").agg(F.sum("turns_parsed")).first()[0]
+            == total - 50
+        )
+        # legacy rows read back with null run_id — never attributed to r2
+        assert out.filter(F.col("run_id").isNull()).count() == 50
 
 
 def test_read_transcripts_jsonl_and_csv_sources(spark, transcripts_dir, tmp_path):
@@ -565,17 +571,16 @@ def test_apply_dedup_end_to_end(spark):
     assert sorted(r.doc_id for r in kept.collect()) == [1, 3]
 
 
-def test_dedup_groups_transitive_closure(spark, cc_under_cap):
+def test_dedup_groups_transitive_closure(spark):
     """Connected components: chains collapse to one group id (the
-    minimum member), across multiple hops — on both paths: union-find
-    on the driver exactly at the cap, the pointer-jumping loop one pair
-    past it."""
+    minimum member), across multiple hops."""
+    from pdftotext_spark.operators.dedup import dedup_groups
+
     # two chains: 1-2-3-4 (via consecutive pairs) and 10-11; 20 isolated-pairless
     edges = [(1, 2), (2, 3), (3, 4), (10, 11)]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     want = [(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)]
-    assert cc_under_cap(pairs, cap=len(edges)) == (want, False)
-    assert cc_under_cap(pairs, cap=len(edges) - 1) == (want, True)
+    assert sorted(tuple(r) for r in dedup_groups(pairs).collect()) == want
 
 
 def test_dedup_groups_multi_equals_standalone_families(spark):
@@ -605,11 +610,11 @@ def test_dedup_groups_multi_equals_standalone_families(spark):
     assert all(by_fam.values())
 
 
-def test_dedup_groups_multi_constructed_namespacing(spark, cc_under_cap):
+def test_dedup_groups_multi_constructed_namespacing(spark):
     """Constructed input: same doc ids in two families must NOT merge
     across families, and per-family representatives stay the numeric
-    min (the shift preserves ordering) — on both CC paths."""
-    from pdftotext_spark.operators.dedup import FUSED_NS
+    min (the shift preserves ordering)."""
+    from pdftotext_spark.operators.dedup import FUSED_NS, dedup_groups
 
     # family 0: chain 1-2-3; family 1: pair 2-9 (shares id 2!)
     pairs = spark.createDataFrame(
@@ -627,8 +632,7 @@ def test_dedup_groups_multi_constructed_namespacing(spark, cc_under_cap):
         (FUSED_NS + 2, FUSED_NS + 2),
         (FUSED_NS + 9, FUSED_NS + 2),
     ]
-    assert cc_under_cap(pairs, cap=3) == (want, False)
-    assert cc_under_cap(pairs, cap=0) == (want, True)
+    assert sorted(tuple(r) for r in dedup_groups(pairs).collect()) == want
 
 
 def test_ns_shift_guard_raises_on_out_of_stride_ids(spark):
