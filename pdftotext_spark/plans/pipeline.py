@@ -283,6 +283,22 @@ def resume_anti_join(transcripts: DataFrame, committed: DataFrame) -> DataFrame:
     )
 
 
+def read_committed(spark: SparkSession, path: str) -> DataFrame | None:
+    """Read a committed parquet output or store, or None when nothing
+    is committed there yet: the path is missing, or it holds no data
+    files. Any other failure (a corrupt or unreadable file) raises —
+    treating it as "nothing committed" would re-process and duplicate
+    everything already there."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
 def run_extraction(
     spark: SparkSession,
     input_path: str,
@@ -303,11 +319,9 @@ def run_extraction(
     (pathological file layouts only; default: scan splits)."""
     transcripts = read_transcripts(spark, input_path)
     if output_path is not None and resume:
-        try:
-            committed = spark.read.parquet(output_path)
+        committed = read_committed(spark, output_path)
+        if committed is not None:
             transcripts = resume_anti_join(transcripts, committed)
-        except Exception:
-            pass  # nothing committed yet
     extracted = extract_turns(transcripts, n_partitions=n_partitions, options=options)
     if output_path is not None:
         # lineage columns stamped before the write: every output row

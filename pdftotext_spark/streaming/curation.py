@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdftotext_spark.streaming.pipeline import per_batch, run_gate
+
 
 def write_benchmark_shingles(bench_docs: DataFrame, out_dir: str) -> None:
     """Materialize the static benchmark shingle set the stream gate
@@ -66,14 +68,13 @@ def write_benchmark_ngrams(bench_docs: DataFrame, out_dir: str) -> None:
 def curation_filter_batch(output_dir: str, bench_dir: str,
                           panels: bool = False,
                           ngram_bench_dir: str | None = None):
-    """``foreachBatch`` body for the streaming curation gate.
+    """:func:`~pdftotext_spark.streaming.pipeline.per_batch` body for
+    the streaming curation gate.
 
     Per micro-batch: apply the quality windows, score each surviving
     turn's contamination fraction against the static benchmark
     shingle set, drop turns above the threshold, and write survivors
-    into a per-``batch_id`` partition (overwrite ⇒ an at-least-once
-    replay replaces, never double-appends — the streaming-store
-    idempotence rule).
+    to ``output_dir``.
 
     ``ngram_bench_dir`` additionally applies the batch
     ``ngram_decontamination`` rule at ingest: a turn with ANY
@@ -82,48 +83,30 @@ def curation_filter_batch(output_dir: str, bench_dir: str,
     the any-collision verdict, stricter than the fractional shingle
     threshold.
 
-    ``panels=True`` additionally requires the full per-document
-    quality panels (Gopher quality + Gopher repetition + C4 +
-    FineWeb — the batch
-    :func:`pdftotext_spark.operators.curation.quality_vote`
-    unanimous rule; all four are per-turn stateless, so they stream
-    without a store). Turns are keyed for the panel joins by the
+    ``panels=True`` additionally requires the batch
+    :func:`pdftotext_spark.operators.curation.quality_vote_for`
+    unanimous ``keep_all`` verdict (shallow gate + Gopher quality +
+    Gopher repetition + C4 + FineWeb; all per-turn stateless, so they
+    stream without a store). Turns are keyed for the vote by the
     deterministic ``xxhash64(conv_id, turn_idx)`` — replay-stable,
     unlike monotonically_increasing_id."""
     from pdftotext_spark.operators import textstats
+    from pdftotext_spark.operators.curation import quality_vote_for
     from pdftotext_spark.operators.dedup import (
         CONTAMINATION_THRESHOLD,
         _sampled_shingle_expr,
+        contamination_scores_for,
+        token_ngram_expr,
     )
 
-    def _fn(batch: DataFrame, batch_id: int) -> None:
+    def gate(batch: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         spark = batch.sparkSession
-        if batch.isEmpty():
-            return
         keys = ["conv_id", "turn_idx"]
         q = batch.filter(textstats.qf_keep_predicate())
         if panels:
-            hid = F.xxhash64(*keys)
-            keyed = q.select(hid.alias("doc_id"), "text")
-            panel_keep = None
-            for fn in (
-                textstats.gopher_quality_for,
-                textstats.gopher_repetition_for,
-                textstats.c4_quality_for,
-                textstats.fineweb_quality_for,
-            ):
-                flags = fn(keyed).select("doc_id", "keep")
-                ok = flags.filter(F.col("keep")).select("doc_id")
-                panel_keep = (
-                    ok
-                    if panel_keep is None
-                    else panel_keep.join(ok, "doc_id", "left_semi")
-                )
-            q = q.withColumn("_hid", hid).join(
-                panel_keep.withColumnRenamed("doc_id", "_hid"),
-                "_hid",
-                "left_semi",
-            ).drop("_hid")
+            q = q.withColumn("doc_id", F.xxhash64(*keys))
+            keep = quality_vote_for(q.select("doc_id", "text")).filter("keep_all")
+            q = q.join(keep, "doc_id", "left_semi").drop("doc_id")
         q = q.localCheckpoint()  # consumed by the shingle probe AND the anti-join
         # no broadcast hint: the benchmark set refreshes out-of-band
         # and can outgrow broadcastable size — AQE broadcasts it while
@@ -131,8 +114,6 @@ def curation_filter_batch(output_dir: str, bench_dir: str,
         # Scoring goes through the SAME single-source helper as the
         # batch authority (review r5 pass 4: a reimplemented marker
         # aggregation here could silently drift from it).
-        from pdftotext_spark.operators.dedup import contamination_scores_for
-
         bench = spark.read.parquet(bench_dir).select("sh")
         sh = q.select(
             *keys,
@@ -144,8 +125,6 @@ def curation_filter_batch(output_dir: str, bench_dir: str,
         ).select(*keys)
         survivors = q.join(losers, keys, "left_anti")
         if ngram_bench_dir is not None:
-            from pdftotext_spark.operators.dedup import token_ngram_expr
-
             gbench = spark.read.parquet(ngram_bench_dir).select("g")
             gram_losers = (
                 q.select(
@@ -157,11 +136,9 @@ def curation_filter_batch(output_dir: str, bench_dir: str,
                 .distinct()
             )
             survivors = survivors.join(gram_losers, keys, "left_anti")
-        survivors.write.mode("overwrite").parquet(
-            f"{output_dir}/batch_id={batch_id}"
-        )
+        return {output_dir: survivors}
 
-    return _fn
+    return per_batch(gate)
 
 
 def run_curation_stream(
@@ -173,23 +150,8 @@ def run_curation_stream(
     panels: bool = False,
     ngram_bench_dir: str | None = None,
 ) -> None:
-    """Drain available input through the curation gate
-    (Trigger.AvailableNow). Same batch_id-keyed idempotence and
-    checkpoint caveats as ``run_neardup_dedup_stream``."""
-    from pdftotext_spark.streaming.pipeline import read_transcript_stream
-
-    q = (
-        read_transcript_stream(spark, input_dir)
-        .writeStream.foreachBatch(
-            curation_filter_batch(
-                output_dir,
-                bench_dir,
-                panels=panels,
-                ngram_bench_dir=ngram_bench_dir,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Drain available input through the curation gate."""
+    body = curation_filter_batch(
+        output_dir, bench_dir, panels=panels, ngram_bench_dir=ngram_bench_dir
     )
-    q.awaitTermination()
+    run_gate(spark, input_dir, checkpoint_dir, body)

@@ -14,6 +14,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdftotext_spark.plans.pipeline import read_committed
+from pdftotext_spark.streaming.pipeline import per_batch, run_gate
+
 
 def replay_key() -> Column:
     """The replay-stable per-turn identity string every streaming
@@ -46,7 +49,8 @@ def dedup_stream(
 
 
 def neardup_filter_batch(output_dir: str, store_dir: str):
-    """``foreachBatch`` body for streaming NEAR-duplicate dedup.
+    """:func:`~pdftotext_spark.streaming.pipeline.per_batch` body for
+    streaming NEAR-duplicate dedup.
 
     Per micro-batch: MinHash-sign the new turns (two-digest slice
     scheme, :func:`pdftotext_spark.operators.dedup.signatures_for`),
@@ -54,10 +58,10 @@ def neardup_filter_batch(output_dir: str, store_dir: str):
     bucket with an already-accepted turn in the persistent band store,
     or (b) loses an in-batch band collision to a lower-keyed turn (the
     one-pass min-key survivor policy of ``apply_dedup``). Survivors
-    and their bands are written into per-``batch_id`` partitions of
-    the output and the store, so later batches see them and a
-    replayed batch replaces (never duplicates, never self-collides
-    with) its prior attempt.
+    and then their bands go to ``output_dir`` and ``store_dir``, so
+    later batches see them; the store probe excludes the current
+    ``batch_id``, so a replayed batch never self-collides with its
+    prior attempt.
 
     LSH-positive ⇒ drop is deliberately *approximate* (candidate-level,
     no exact verify): the streaming filter's job is cheap high-recall
@@ -70,41 +74,14 @@ def neardup_filter_batch(output_dir: str, store_dir: str):
     """
     from pdftotext_spark.operators.dedup import bands_for, signatures_for
 
-    def _fn(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if batch.isEmpty():
-            return
+    def gate(batch: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         keys = ["conv_id", "turn_idx"]
         batch = batch.localCheckpoint()  # consumed by 3 plans below
         bands = bands_for(signatures_for(batch, keys), keys).localCheckpoint()
-        # (a) cross-batch: anything banding with the accepted store.
-        # Only a MISSING store (first batch) may be swallowed — a
-        # corrupted or unreadable store must surface, not silently
-        # degrade the filter into a pass-everything no-op
-        from pyspark.errors import AnalysisException
-
-        try:
-            store = spark.read.parquet(store_dir)
-            # a REPLAYED batch (at-least-once) must not collide with
-            # its own bands from the prior attempt — that would
-            # classify every prior survivor as a loser and overwrite
-            # the partition with nothing. The store is batch_id=
-            # partitioned, so excluding the current id prunes the
-            # prior attempt at the scan.
-            store = store.filter(F.col("batch_id") != batch_id)
-            store_losers = bands.join(
-                store, ["band_idx", "band_hash"], "left_semi"
-            ).select(*keys).distinct()
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(
-                exc
-            ):
-                raise
-            store_losers = bands.select(*keys).limit(0)
         # (b) in-batch: min sortable key per band bucket survives
         kb = bands.withColumn("k", replay_key())
         a, b = kb.alias("a"), kb.alias("b")
-        batch_losers = (
+        losers = (
             a.join(
                 b,
                 (F.col("a.band_idx") == F.col("b.band_idx"))
@@ -112,22 +89,25 @@ def neardup_filter_batch(output_dir: str, store_dir: str):
                 & (F.col("a.k") > F.col("b.k")),
             )
             .select(F.col("a.conv_id").alias("conv_id"), F.col("a.turn_idx").alias("turn_idx"))
-            .distinct()
         )
-        losers = store_losers.union(batch_losers).distinct()
+        # (a) cross-batch: anything banding with the accepted store,
+        # minus this batch's own prior attempt (pruned at the scan).
+        # A corrupt store raises rather than degrading the filter into
+        # a pass-everything no-op
+        store = read_committed(batch.sparkSession, store_dir)
+        if store is not None:
+            store = store.filter(F.col("batch_id") != batch_id)
+            losers = losers.union(
+                bands.join(store, ["band_idx", "band_hash"], "left_semi").select(*keys)
+            )
+        losers = losers.distinct()
         survivors = batch.join(losers, keys, "left_anti").localCheckpoint()
-        # idempotent per micro-batch: each batch OVERWRITES its own
-        # batch_id= partition, so a foreachBatch retry (at-least-once)
-        # replaces rather than double-appends — both the output and
-        # the band store stay exactly-once per committed batch
-        survivors.write.mode("overwrite").parquet(
-            f"{output_dir}/batch_id={batch_id}"
-        )
-        bands.join(losers, keys, "left_anti").write.mode("overwrite").parquet(
-            f"{store_dir}/batch_id={batch_id}"
-        )
+        return {
+            output_dir: survivors,
+            store_dir: bands.join(losers, keys, "left_anti"),
+        }
 
-    return _fn
+    return per_batch(gate)
 
 
 def run_neardup_dedup_stream(
@@ -137,23 +117,6 @@ def run_neardup_dedup_stream(
     checkpoint_dir: str,
     store_dir: str,
 ) -> None:
-    """Drain available input through the near-dup filter
-    (Trigger.AvailableNow). Per-batch writes overwrite their own
-    ``batch_id=`` partition and the store probe excludes the current
-    id, so a retried micro-batch replaces its previous attempt
-    (idempotent per committed batch); the batch dedup pass downstream
-    remains the exact near-dup authority. Operational caveats of every
-    batch_id-keyed design: the checkpoint directory is part of the
-    state — resetting it against an existing output restarts ids at 0
-    and overwrites history; downstream readers see the batch_id
-    partition column."""
-    from pdftotext_spark.streaming.pipeline import read_transcript_stream
-
-    q = (
-        read_transcript_stream(spark, input_dir)
-        .writeStream.foreachBatch(neardup_filter_batch(output_dir, store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    """Drain available input through the near-dup filter; the batch
+    dedup pass downstream remains the exact near-dup authority."""
+    run_gate(spark, input_dir, checkpoint_dir, neardup_filter_batch(output_dir, store_dir))

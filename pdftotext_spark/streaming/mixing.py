@@ -35,6 +35,8 @@ from pdftotext_spark.operators.mixing import (
     _NCOPIES_SQL,
     mixture_weights_for,
 )
+from pdftotext_spark.streaming.dedup import replay_key
+from pdftotext_spark.streaming.pipeline import per_batch
 
 
 def write_mixture_rates(corpus_docs: DataFrame, out_dir: str) -> None:
@@ -52,22 +54,17 @@ def write_mixture_rates(corpus_docs: DataFrame, out_dir: str) -> None:
 def mixture_filter_batch(
     output_dir: str, rates_dir: str, source_col: str = "role"
 ):
-    """``foreachBatch`` body for the streaming mixture gate.
+    """:func:`~pdftotext_spark.streaming.pipeline.per_batch` body for
+    the streaming mixture gate.
 
     Per micro-batch: join the (broadcastable, #sources-row) rates
     table on ``source_col``, evaluate the batch ``_NCOPIES_SQL`` copy
     rule with the ``conv_id:turn_idx`` key as the md5 identity, drop
     rows with zero copies, and write survivors (plus their
-    ``n_copies``) into a per-``batch_id`` partition (overwrite ⇒ an
-    at-least-once replay replaces, never double-appends)."""
+    ``n_copies``) to ``output_dir``."""
 
-    def _fn(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if batch.isEmpty():
-            return
-        from pdftotext_spark.streaming.dedup import replay_key
-
-        rates = spark.read.parquet(rates_dir).select(
+    def gate(batch: DataFrame, batch_id: int) -> dict[str, DataFrame]:
+        rates = batch.sparkSession.read.parquet(rates_dir).select(
             F.col("source").alias(source_col), "rate_micro"
         )
         gated = (
@@ -84,8 +81,6 @@ def mixture_filter_batch(
             .filter(F.col("n_copies") >= 1)
             .drop("did", "rate_micro")
         )
-        gated.write.mode("overwrite").parquet(
-            f"{output_dir}/batch_id={batch_id}"
-        )
+        return {output_dir: gated}
 
-    return _fn
+    return per_batch(gate)

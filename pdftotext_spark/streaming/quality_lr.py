@@ -33,6 +33,7 @@ from pdftotext_spark.operators.quality_lr import (
     _lr_train,
     features_over,
 )
+from pdftotext_spark.streaming.pipeline import per_batch
 
 # ingest keep threshold in micro units; 0.5 = the classifier's own
 # decision boundary (quality_lr_scores.predicted_clean)
@@ -54,17 +55,14 @@ def write_lr_weights(spark, sf_dir: str, out_dir: str) -> None:
 
 
 def lr_filter_batch(output_dir: str, weights_dir: str):
-    """``foreachBatch`` body for the streaming quality gate: score
-    every turn with the batch-trained model, keep turns at or above
+    """:func:`~pdftotext_spark.streaming.pipeline.per_batch` body for
+    the streaming quality gate: score every turn with the
+    batch-trained model, keep turns at or above
     :data:`LR_GATE_THRESHOLD`, and write survivors (with their
-    ``score_micro``) into a per-``batch_id`` partition (overwrite ⇒
-    at-least-once replays replace, never double-append)."""
+    ``score_micro``) to ``output_dir``."""
 
-    def _fn(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if batch.isEmpty():
-            return
-        w = spark.read.parquet(weights_dir)
+    def gate(batch: DataFrame, batch_id: int) -> dict[str, DataFrame]:
+        w = batch.sparkSession.read.parquet(weights_dir)
         # NULL text would score NULL and vanish from BOTH sides of
         # the threshold — make the policy explicit, as the sibling
         # gates do (streaming/sketches.py): null-text turns drop here
@@ -72,11 +70,10 @@ def lr_filter_batch(output_dir: str, weights_dir: str):
         scored = feats.join(F.broadcast(w)).withColumn(
             "score_micro", F.expr(_SCORE_SQL)
         )
-        (
-            scored.filter(F.col("score_micro") >= LR_GATE_THRESHOLD)
-            .select(*batch.columns, "score_micro")
-            .write.mode("overwrite")
-            .parquet(f"{output_dir}/batch_id={batch_id}")
-        )
+        return {
+            output_dir: scored.filter(
+                F.col("score_micro") >= LR_GATE_THRESHOLD
+            ).select(*batch.columns, "score_micro")
+        }
 
-    return _fn
+    return per_batch(gate)

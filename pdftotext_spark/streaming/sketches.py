@@ -2,11 +2,11 @@
 (distinct payloads), Count-Min (token frequencies), Bloom
 (membership) and the log2 quantile histogram (value distribution).
 
-All four follow one discipline — ``foreachBatch`` folds each batch
-into its own ``batch_id=`` store partition (overwrite ⇒ exactly-once
-per committed batch, same as the streaming near-dup store) and a
-reader merges partitions on demand — but their merge algebras differ,
-and that difference is the whole design:
+All four follow one discipline — each is a
+:func:`~pdftotext_spark.streaming.pipeline.per_batch` gate folding a
+batch into its own ``batch_id=`` store partition, and a reader merges
+partitions on demand — but their merge algebras differ, and that
+difference is the whole design:
 
 - HLL register max-merge and Bloom bit-set union are IDEMPOTENT:
   replays and re-drains under ANY batching are safe by construction.
@@ -25,9 +25,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdftotext_spark.operators.sketches import (
+    BLOOM_K,
+    _bloom_pos_sql,
+    cms_counters,
     hll_estimate_from_registers,
     hll_registers,
+    qsketch_bucket_col,
+    qsketch_table_from_hist,
 )
+from pdftotext_spark.streaming.pipeline import per_batch, run_gate
 
 
 def _hadoop_path(spark: SparkSession, path_str: str):
@@ -61,18 +67,14 @@ def reset_additive_store_on_fresh_lineage(
 
 
 def hll_register_batch(store_dir: str):
-    """``foreachBatch`` body: fold the batch's payloads into an
-    ``(idx, maxrho)`` register table and write it to the batch's own
-    store partition."""
+    """``per_batch`` body: fold the batch's payloads into an
+    ``(idx, maxrho)`` register table in ``store_dir``."""
 
-    def _fn(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def gate(batch: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         items = batch.filter(F.col("text").isNotNull()).select("text")
-        regs = hll_registers(items, "text")
-        regs.write.mode("overwrite").parquet(f"{store_dir}/batch_id={batch_id}")
+        return {store_dir: hll_registers(items, "text")}
 
-    return _fn
+    return per_batch(gate)
 
 
 def hll_stream_estimate(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -95,44 +97,29 @@ def run_hll_stream(
     max_files_per_trigger: int = 1,
 ) -> None:
     """Drain the currently-available transcript files through the
-    sketch (Trigger.AvailableNow), small triggers so tests exercise
-    real multi-batch merging."""
-    from pdftotext_spark.streaming.pipeline import read_transcript_stream
-
-    stream = read_transcript_stream(
-        spark, input_dir, max_files_per_trigger=max_files_per_trigger
-    )
-    (
-        stream.writeStream.foreachBatch(hll_register_batch(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    sketch, small triggers so tests exercise real multi-batch
+    merging."""
+    run_gate(
+        spark, input_dir, checkpoint_dir, hll_register_batch(store_dir),
+        max_files_per_trigger,
     )
 
 
 def cms_counter_batch(store_dir: str):
-    """``foreachBatch`` body for a streaming Count-Min Sketch over the
+    """``per_batch`` body for a streaming Count-Min Sketch over the
     turn-text token stream: fold the batch's tokens into a
-    ``(row_idx, bucket, cnt)`` counter table in the batch's own store
-    partition. Counters are ADDITIVE (unlike HLL's max registers), so
-    exactly-once per committed batch comes only from the partition
-    overwrite — a replay replaces its prior attempt rather than
-    double-counting."""
+    ``(row_idx, bucket, cnt)`` counter table in ``store_dir``.
+    Counters are ADDITIVE (unlike HLL's max registers), so
+    exactly-once per committed batch comes only from ``per_batch``'s
+    partition overwrite."""
 
-    def _fn(batch: DataFrame, batch_id: int) -> None:
-        from pdftotext_spark.operators.sketches import cms_counters
-
-        if batch.isEmpty():
-            return
+    def gate(batch: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         toks = batch.select(
             F.explode(F.split(F.lower("text"), " ")).alias("tok")
         ).filter(F.col("tok") != "")
-        cms_counters(toks).write.mode("overwrite").parquet(
-            f"{store_dir}/batch_id={batch_id}"
-        )
+        return {store_dir: cms_counters(toks)}
 
-    return _fn
+    return per_batch(gate)
 
 
 def cms_stream_counters(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -152,8 +139,7 @@ def run_cms_stream(
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
 ) -> None:
-    """AvailableNow drain of the transcript directory through the
-    streaming CMS.
+    """Drain the transcript directory through the streaming CMS.
 
     ADDITIVE state caveat (unlike the idempotent HLL): per-batch
     partition overwrite is exactly-once only within one checkpoint
@@ -163,33 +149,20 @@ def run_cms_stream(
     a fresh lineage RESETS the store here (via the Hadoop FS API so
     HDFS/S3 store URIs reset too, not just local paths)."""
     reset_additive_store_on_fresh_lineage(spark, store_dir, checkpoint_dir)
-
-    from pdftotext_spark.streaming.pipeline import read_transcript_stream
-
-    stream = read_transcript_stream(
-        spark, input_dir, max_files_per_trigger=max_files_per_trigger
-    )
-    (
-        stream.writeStream.foreachBatch(cms_counter_batch(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    run_gate(
+        spark, input_dir, checkpoint_dir, cms_counter_batch(store_dir),
+        max_files_per_trigger,
     )
 
 
 def bloom_insert_batch(store_dir: str):
-    """``foreachBatch`` body for a streaming Bloom filter over payload
-    texts: write the batch's distinct bit positions to its own store
-    partition. Bit-set union is idempotent (like the HLL registers,
-    unlike the CMS counters), so replays and re-drains under any
-    batching are safe by construction."""
+    """``per_batch`` body for a streaming Bloom filter over payload
+    texts: write the batch's distinct bit positions to ``store_dir``.
+    Bit-set union is idempotent (like the HLL registers, unlike the
+    CMS counters), so replays and re-drains under any batching are
+    safe by construction."""
 
-    def _fn(batch: DataFrame, batch_id: int) -> None:
-        from pdftotext_spark.operators.sketches import BLOOM_K, _bloom_pos_sql
-
-        if batch.isEmpty():
-            return
+    def gate(batch: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         items = (
             batch.filter(F.col("text").isNotNull())
             .select(F.col("text").alias("sh"))
@@ -205,9 +178,9 @@ def bloom_insert_batch(store_dir: str):
                 )
             ).alias("pos")
         ).distinct()
-        bits.write.mode("overwrite").parquet(f"{store_dir}/batch_id={batch_id}")
+        return {store_dir: bits}
 
-    return _fn
+    return per_batch(gate)
 
 
 def bloom_probe(spark: SparkSession, store_dir: str, probe: DataFrame) -> DataFrame:
@@ -215,8 +188,6 @@ def bloom_probe(spark: SparkSession, store_dir: str, probe: DataFrame) -> DataFr
     probe rows with a ``maybe_member`` flag (true ⇔ all K positions
     set; false negatives impossible). The merged bit set is ≤
     BLOOM_BITS rows — broadcastable at any corpus size."""
-    from pdftotext_spark.operators.sketches import BLOOM_K, _bloom_pos_sql
-
     bits = spark.read.parquet(store_dir).select("pos").distinct()
     ppos = probe.select(
         F.col("text").alias("sh")
@@ -252,51 +223,36 @@ def run_bloom_stream(
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
 ) -> None:
-    """AvailableNow drain of the transcript directory into the Bloom
-    bit store."""
-    from pdftotext_spark.streaming.pipeline import read_transcript_stream
-
-    stream = read_transcript_stream(
-        spark, input_dir, max_files_per_trigger=max_files_per_trigger
-    )
-    (
-        stream.writeStream.foreachBatch(bloom_insert_batch(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    """Drain the transcript directory into the Bloom bit store."""
+    run_gate(
+        spark, input_dir, checkpoint_dir, bloom_insert_batch(store_dir),
+        max_files_per_trigger,
     )
 
 
 def qsketch_batch(store_dir: str):
-    """``foreachBatch`` body for the streaming quantile sketch over a
-    numeric ``value`` column: fold the batch into its own log2-bucket
-    histogram partition. Counters are ADDITIVE like the CMS, so the
-    same lineage discipline applies (fresh checkpoint ⇒ reset store,
-    handled by :func:`run_qsketch_stream`)."""
+    """``per_batch`` body for the streaming quantile sketch over a
+    numeric ``value`` column: fold the batch into a log2-bucket
+    histogram in ``store_dir``. Counters are ADDITIVE like the CMS, so
+    the same lineage discipline applies (fresh checkpoint ⇒ reset
+    store, handled by :func:`run_qsketch_stream`)."""
 
-    def _fn(batch: DataFrame, batch_id: int) -> None:
-        from pdftotext_spark.operators.sketches import qsketch_bucket_col
-
-        if batch.isEmpty():
-            return
+    def gate(batch: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         hist = (
             batch.filter(F.col("value") > 0)
             .select(qsketch_bucket_col().alias("bucket"))
             .groupBy("bucket")
             .agg(F.count("*").cast("long").alias("cnt"))
         )
-        hist.write.mode("overwrite").parquet(f"{store_dir}/batch_id={batch_id}")
+        return {store_dir: hist}
 
-    return _fn
+    return per_batch(gate)
 
 
 def qsketch_stream_table(spark: SparkSession, store_dir: str) -> DataFrame:
     """Merged sketch in the same shape as the batch
     ``value_quantile_sketch`` output (bucket, cnt, cum_cnt, lo, hi) —
     feed it straight to ``qsketch_quantile``."""
-    from pdftotext_spark.operators.sketches import qsketch_table_from_hist
-
     hist = (
         spark.read.parquet(store_dir)
         .groupBy("bucket")
@@ -314,19 +270,11 @@ def run_qsketch_stream(
     "event_type string, value double, props string",
     max_files_per_trigger: int = 1,
 ) -> None:
-    """AvailableNow drain of an events directory into the quantile
-    store. Additive counters: a fresh checkpoint lineage resets the
-    store (the CMS rule, via the Hadoop FS API)."""
+    """Drain an events directory into the quantile store. Additive
+    counters: a fresh checkpoint lineage resets the store (the CMS
+    rule, via the Hadoop FS API)."""
     reset_additive_store_on_fresh_lineage(spark, store_dir, checkpoint_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(qsketch_batch(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    run_gate(
+        spark, input_dir, checkpoint_dir, qsketch_batch(store_dir),
+        max_files_per_trigger, schema,
     )

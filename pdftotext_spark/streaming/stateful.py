@@ -21,6 +21,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from pdftotext_spark.plans.pipeline import extract_turns
+from pdftotext_spark.streaming.pipeline import drain, per_batch, read_transcript_stream
+
 STATE_SCHEMA = "turns LONG, chars LONG, failures LONG, max_turn LONG"
 
 OUTPUT_SCHEMA = T.StructType(
@@ -85,27 +88,12 @@ def run_stateful_stream_once(
     checkpoint_dir: str,
 ) -> None:
     """Drain available input through extraction + stateful rollup into
-    a parquet sink (update-mode rows appended per micro-batch; the
-    latest row per conv_id is the current state)."""
-    from pdftotext_spark.streaming.pipeline import (
-        extract_turns_stream,
-        read_transcript_stream,
-    )
-
+    ``output_dir`` through ``per_batch`` (a file sink is append-only,
+    so update-mode rows land via ``foreachBatch``): each micro-batch's
+    updated totals replace its own ``batch_id=`` partition, so a
+    replayed batch cannot duplicate rows. The latest row per conv_id
+    is the current state."""
     stream = read_transcript_stream(spark, input_dir, max_files_per_trigger=1)
-    extracted = extract_turns_stream(stream)
-    rollup = conversation_state_stream(extracted)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        # update-mode rows land via foreachBatch (a file sink is
-        # append-only); latest row per conv_id is the current state
-        batch_df.write.mode("append").parquet(output_dir)
-
-    (
-        rollup.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    rollup = conversation_state_stream(extract_turns(stream))
+    body = per_batch(lambda batch, batch_id: {output_dir: batch})
+    drain(rollup.writeStream.foreachBatch(body).outputMode("update"), checkpoint_dir)

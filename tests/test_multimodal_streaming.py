@@ -236,6 +236,66 @@ def test_stateful_conversation_rollup(spark, tmp_path):
     assert j2.filter("turns <> 2 * bturns").count() == 0
 
 
+def test_stateful_rollup_replay_is_exactly_once(spark, tmp_path):
+    """A replayed micro-batch (its commit lost after the sink wrote)
+    replaces its batch_id= partition: the (conv_id, turns) rows are
+    unchanged, not appended a second time."""
+    import os
+
+    from pdftotext_spark.sources.transcripts_gen import write_parquet
+    from pdftotext_spark.streaming.stateful import run_stateful_stream_once
+
+    write_parquet(str(tmp_path / "in1"), n_turns=80, seed=5)
+    write_parquet(str(tmp_path / "in2"), n_turns=80, seed=6)
+    src = tmp_path / "src"
+    src.mkdir()
+    os.symlink(tmp_path / "in1" / "transcripts.parquet", src / "a.parquet")
+    os.symlink(tmp_path / "in2" / "transcripts.parquet", src / "b.parquet")
+    out, ckpt = str(tmp_path / "out"), tmp_path / "ckpt"
+
+    def rows():
+        return sorted(
+            (r.conv_id, r.turns)
+            for r in spark.read.parquet(out).select("conv_id", "turns").collect()
+        )
+
+    run_stateful_stream_once(spark, str(src), out, str(ckpt))
+    first = rows()
+    last = max(int(n) for n in os.listdir(ckpt / "commits") if n.isdigit())
+    assert last >= 1  # one micro-batch per file
+    os.remove(ckpt / "commits" / str(last))
+    os.remove(ckpt / "commits" / f".{last}.crc")
+    run_stateful_stream_once(spark, str(src), out, str(ckpt))
+    assert rows() == first
+
+
+def test_per_batch_gate_exactly_once(spark, tmp_path):
+    """The one foreachBatch body: a replay of batch N with different
+    rows leaves only the new rows, an empty batch writes nothing, and
+    every frame of a two-output gate lands in its batch_id= partition."""
+    import os
+
+    from pdftotext_spark.streaming.pipeline import per_batch
+
+    out, store = str(tmp_path / "out"), str(tmp_path / "store")
+    body = per_batch(lambda batch, batch_id: {out: batch, store: batch.select("k")})
+
+    def frame(ks):
+        return spark.createDataFrame([(k, f"v{k}") for k in ks], "k int, v string")
+
+    def read(path):
+        return {(r.batch_id, r.k) for r in spark.read.parquet(path).collect()}
+
+    body(frame([1, 2]), 0)
+    body(frame([3]), 1)
+    assert read(out) == read(store) == {(0, 1), (0, 2), (1, 3)}
+    body(frame([7, 8, 9]), 1)  # replay of batch 1 with different rows
+    assert read(out) == read(store) == {(0, 1), (0, 2), (1, 7), (1, 8), (1, 9)}
+    body(frame([]), 2)
+    assert not os.path.exists(f"{out}/batch_id=2")
+    assert not os.path.exists(f"{store}/batch_id=2")
+
+
 def test_session_window_rollup(spark, tmp_path):
     """session_window groups turns into gap-bounded sessions (the
     streaming analog of batch sessionize). Append mode only emits
@@ -243,9 +303,9 @@ def test_session_window_rollup(spark, tmp_path):
     flushes the ones under test — the standard pattern."""
     import pandas as pd
 
+    from pdftotext_spark.plans.pipeline import extract_turns
     from pdftotext_spark.streaming.pipeline import (
         conversation_sessions,
-        extract_turns_stream,
         read_transcript_stream,
     )
 
@@ -268,7 +328,7 @@ def test_session_window_rollup(spark, tmp_path):
 
     stream = read_transcript_stream(spark, str(src))
     sessions = conversation_sessions(
-        extract_turns_stream(stream), gap="30 seconds", watermark="0 seconds"
+        extract_turns(stream), gap="30 seconds", watermark="0 seconds"
     )
     out = str(tmp_path / "out")
     (

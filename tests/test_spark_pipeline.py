@@ -152,6 +152,31 @@ def test_resume_into_legacy_output_without_lineage_columns(
         assert out.filter(F.col("run_id").isNull()).count() == 50
 
 
+def test_resume_raises_on_corrupt_committed_output(spark, transcripts_dir, tmp_path):
+    # only a missing output dir, or one with no data files, means
+    # "nothing committed"; a corrupt committed file must raise BEFORE
+    # anything is extracted and appended — swallowing it would
+    # re-extract the whole input and duplicate every committed turn
+    import os
+
+    from pdftotext_spark.plans.pipeline import run_extraction
+
+    src = f"{transcripts_dir}/transcripts.parquet"
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "part-00000-corrupt.snappy.parquet").write_bytes(b"not a parquet file")
+    before = sorted(os.listdir(out))
+    with pytest.raises(Exception, match="not a Parquet file"):
+        run_extraction(spark, src, output_path=str(out), run_id="r1")
+    assert sorted(os.listdir(out)) == before
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_bytes(b"")
+    done = run_extraction(spark, src, output_path=str(empty), run_id="r1")
+    assert done.count() == spark.read.parquet(src).count()
+
+
 def test_read_transcripts_jsonl_and_csv_sources(spark, transcripts_dir, tmp_path):
     """read_transcripts widens to JSONL/CSV ingest with the explicit
     transcript schema; extraction output must match the parquet path
