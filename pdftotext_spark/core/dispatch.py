@@ -36,11 +36,30 @@ def sniff_kind(payload: str) -> str:
     head = payload[:1024]
     if "%PDF-" in head:
         return "pdf"
-    if _HTML_RE.search(head) or len(_HTML_LOOSE_RE.findall(head)) >= 2:
+    if _looks_like_html(head):
         return "html"
     if _looks_like_deep_pdf(payload):
         return "pdf"
     return "plain"
+
+
+def _looks_like_html(probe: str) -> bool:
+    return bool(_HTML_RE.search(probe)) or len(_HTML_LOOSE_RE.findall(probe)) >= 2
+
+
+def decode_b64_payload(payload: str) -> bytes | None:
+    """The bytes behind a ``%B64%`` payload, or None when the base64
+    does not decode."""
+    try:
+        return base64.b64decode(payload[len(B64_SENTINEL) :], validate=False)
+    except (binascii.Error, ValueError):
+        return None
+
+
+def _single_page(text: str, kind: str) -> ExtractResult:
+    res = ExtractResult(text=text, pages=[text], n_pages=1, kind=kind)
+    res.page_offsets = [(0, max(len(text) - 1, 0))]
+    return res
 
 
 _OBJ_SPAN_RE = re.compile(r"\d+\s+\d+\s+obj\b")
@@ -77,9 +96,8 @@ def extract_payload(
     """Extract one turn's payload; failures become metrics, not raises."""
     kind = sniff_kind(payload)
     if kind == "pdf-b64":
-        try:
-            buf = base64.b64decode(payload[len(B64_SENTINEL) :], validate=False)
-        except (binascii.Error, ValueError):
+        buf = decode_b64_payload(payload)
+        if buf is None:
             res = ExtractResult(kind="pdf-b64", decode_failures=1)
             res.failure_reasons.append("bad base64")
             return res
@@ -102,13 +120,11 @@ def extract_payload(
             from pdftotext_spark.html import decode_html_bytes
 
             probe = decode_html_bytes(buf[:4096]).lstrip("\ufeff \t\r\n")
-            if _HTML_RE.search(probe) or len(_HTML_LOOSE_RE.findall(probe)) >= 2:
+            if _looks_like_html(probe):
                 text = extract_main_content(
                     decode_html_bytes(buf).lstrip("\ufeff")
                 )
-                res = ExtractResult(text=text, pages=[text], n_pages=1, kind="html")
-                res.page_offsets = [(0, max(len(text) - 1, 0))]
-                return res
+                return _single_page(text, "html")
             if _looks_like_deep_pdf(buf):
                 # deep header (>1 KiB of leading junk): route to the
                 # PDF parser \u2014 find_header scans the whole buffer
@@ -119,10 +135,7 @@ def extract_payload(
                 # a valid gzip member that is neither PDF nor HTML was
                 # deliberately wrapped text — emit it as plain, not as
                 # a PDF decode failure
-                text = decode_html_bytes(buf).lstrip("\ufeff")
-                res = ExtractResult(text=text, pages=[text], n_pages=1, kind="plain")
-                res.page_offsets = [(0, max(len(text) - 1, 0))]
-                return res
+                return _single_page(decode_html_bytes(buf).lstrip("\ufeff"), "plain")
         res = _extract_pdf(buf, options)
         res.kind = "pdf-b64"
         return _maybe_plain_fallback_bytes(buf, res)
@@ -142,13 +155,8 @@ def extract_payload(
             return _plain_fallback(payload, res)
         return res
     if kind == "html":
-        text = extract_main_content(payload)
-        res = ExtractResult(text=text, pages=[text], n_pages=1, kind="html")
-        res.page_offsets = [(0, max(len(text) - 1, 0))]
-        return res
-    res = ExtractResult(text=payload, pages=[payload], n_pages=1, kind="plain")
-    res.page_offsets = [(0, max(len(payload) - 1, 0))]
-    return res
+        return _single_page(extract_main_content(payload), "html")
+    return _single_page(payload, "plain")
 
 
 # ADVICE r4 (plain-fallback corpus hygiene): a junk-prefixed but
@@ -250,8 +258,7 @@ def _plain_fallback(text: str, parse_res: ExtractResult) -> ExtractResult:
     """Deep-PDF-probe false positive: emit the payload as plain text
     while preserving the parse attempt's failure metrics (the probe's
     second line of defense — see ADVICE r3)."""
-    res = ExtractResult(text=text, pages=[text], n_pages=1, kind="plain")
-    res.page_offsets = [(0, max(len(text) - 1, 0))]
+    res = _single_page(text, "plain")
     res.decode_failures = parse_res.decode_failures
     res.failure_reasons = list(parse_res.failure_reasons)
     res.failure_reasons.append("deep-pdf probe parse empty; fell back to plain")

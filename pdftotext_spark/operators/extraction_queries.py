@@ -15,14 +15,15 @@ inventory through the driver's oracle harness.
 from __future__ import annotations
 
 import base64
-from collections.abc import Iterator
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pdftotext_spark.core.dispatch import extract_payload
+from pdftotext_spark.core.document import ExtractOptions
+from pdftotext_spark.functions.extract import map_rows
 from pdftotext_spark.sources import pdfbuilder as pb
 
 _ROUNDTRIP_SCHEMA = T.StructType(
@@ -56,35 +57,20 @@ def _wrap_payload(doc_id: int, text: str) -> str:
     return "%B64%" + base64.b64encode(pdf).decode("ascii")
 
 
-def _make_roundtrip_batches(layout: bool):
-    from pdftotext_spark.core.document import ExtractOptions
-
-    opts = ExtractOptions(layout=layout)
-
-    def _roundtrip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            oks = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                payload = _wrap_payload(int(doc_id), text)
-                res = extract_payload(payload, opts)
-                oks.append(
-                    1 if res.text == text and res.decode_failures == 0 else 0
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "source": pdf["source"], "ok": oks}
-            )
-
-    return _roundtrip_batches
+def _roundtrip_row(options: ExtractOptions, doc_id: int, text: str) -> list[tuple]:
+    res = extract_payload(_wrap_payload(int(doc_id), text), options)
+    return [(1 if res.text == text and res.decode_failures == 0 else 0,)]
 
 
 def _roundtrip_query(spark: SparkSession, sf_dir: str, layout: bool) -> DataFrame:
-    from pdftotext_spark.sources.shipping import ship_package
-
-    ship_package(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source", "text"
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    rt = map_rows(
+        docs,
+        ["doc_id", "source"],
+        ["doc_id", "text"],
+        _ROUNDTRIP_SCHEMA,
+        partial(_roundtrip_row, ExtractOptions(layout=layout)),
     )
-    rt = docs.mapInPandas(_make_roundtrip_batches(layout), _ROUNDTRIP_SCHEMA)
     return rt.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum("ok").cast("long").alias("n_roundtrip_equal"),

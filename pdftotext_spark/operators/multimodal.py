@@ -18,14 +18,14 @@ from __future__ import annotations
 
 import hashlib
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pdftotext_spark.sources.shipping import ship_package
+from pdftotext_spark.core.dispatch import extract_payload
+from pdftotext_spark.core.document import ExtractOptions
+from pdftotext_spark.functions.extract import map_rows
 
 IMAGE_SCHEMA = T.StructType(
     [
@@ -55,6 +55,8 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 FEATURE_DIM = 16
+
+_IMAGE_OPTIONS = ExtractOptions(want_images=True)
 
 
 _RASTER_META_RE = {
@@ -149,41 +151,23 @@ def sniff_format(data: bytes) -> str:
     return "raw"
 
 
-def carve_images_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Extract per-turn image XObjects (M4) into one row per image."""
-    from pdftotext_spark.core.dispatch import extract_payload
-    from pdftotext_spark.core.document import ExtractOptions
-
-    opts = ExtractOptions(want_images=True)
-    for pdf in batches:
-        rows: dict[str, list] = {k.name: [] for k in IMAGE_SCHEMA.fields}
-        for conv_id, turn_idx, payload in zip(
-            pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-        ):
-            res = extract_payload(payload or "", opts)
-            for i, data in enumerate(res.image_bytes):
-                meta = res.image_dicts[i] if i < len(res.image_dicts) else b""
-                phash = None
-                decoded = decode_raster(meta, data) if meta else None
-                if decoded is not None:
-                    phash = ahash64(decoded[2])
-                rows["conv_id"].append(conv_id)
-                rows["turn_idx"].append(int(turn_idx))
-                rows["image_idx"].append(i)
-                rows["data"].append(data)
-                rows["meta"].append(meta)
-                rows["format"].append(sniff_format(data))
-                rows["n_bytes"].append(len(data))
-                rows["sha256"].append(hashlib.sha256(data).hexdigest())
-                rows["phash"].append(phash)
-        yield pd.DataFrame(rows)
+def carve_image_rows(text: str | None) -> list[tuple]:
+    """Row function of :func:`carve_images`: one row per image XObject
+    (M4) of the turn's payload."""
+    res = extract_payload(text or "", _IMAGE_OPTIONS)
+    rows = []
+    for i, data in enumerate(res.image_bytes):
+        meta = res.image_dicts[i] if i < len(res.image_dicts) else b""
+        decoded = decode_raster(meta, data) if meta else None
+        phash = ahash64(decoded[2]) if decoded is not None else None
+        rows.append(
+            (i, data, meta, sniff_format(data), len(data), hashlib.sha256(data).hexdigest(), phash)
+        )
+    return rows
 
 
 def carve_images(transcripts: DataFrame) -> DataFrame:
-    ship_package(transcripts.sparkSession)
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        carve_images_batches, IMAGE_SCHEMA
-    )
+    return map_rows(transcripts, ["conv_id", "turn_idx"], ["text"], IMAGE_SCHEMA, carve_image_rows)
 
 
 def decode_image(data: bytes, strict: bool = False) -> tuple[int, int, list[float]]:
@@ -205,31 +189,21 @@ def decode_image(data: bytes, strict: bool = False) -> tuple[int, int, list[floa
     return width, height, feature
 
 
-def image_features_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows: dict[str, list] = {k.name: [] for k in FEATURE_SCHEMA.fields}
-        for conv_id, turn_idx, image_idx, data in zip(
-            pdf["conv_id"], pdf["turn_idx"], pdf["image_idx"], pdf["data"]
-        ):
-            w, hgt, feat = decode_image(bytes(data))
-            rows["conv_id"].append(conv_id)
-            rows["turn_idx"].append(int(turn_idx))
-            rows["image_idx"].append(int(image_idx))
-            rows["width"].append(w)
-            rows["height"].append(hgt)
-            rows["feature"].append(feat)
-        yield pd.DataFrame(rows)
+def image_feature_rows(data: bytes) -> list[tuple]:
+    return [decode_image(bytes(data))]
 
 
 def image_features(images: DataFrame) -> DataFrame:
     """images (IMAGE_SCHEMA) → per-image (width, height, feature[16]).
     Dedup-ready: join on sha256 first so each distinct image decodes
     once (the 100 TB shape: decode cost ∝ distinct images)."""
-    ship_package(images.sparkSession)
-    distinct = images.dropDuplicates(["sha256"])
-    return distinct.select(
-        "conv_id", "turn_idx", "image_idx", "data"
-    ).mapInPandas(image_features_batches, FEATURE_SCHEMA)
+    return map_rows(
+        images.dropDuplicates(["sha256"]),
+        ["conv_id", "turn_idx", "image_idx"],
+        ["data"],
+        FEATURE_SCHEMA,
+        image_feature_rows,
+    )
 
 
 def exact_image_dedup(images: DataFrame) -> DataFrame:

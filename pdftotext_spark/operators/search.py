@@ -18,13 +18,9 @@ from pyspark.sql import functions as F
 
 def extract_pages(transcripts: DataFrame) -> DataFrame:
     """Per-page extraction table (one row per (turn, page))."""
-    from pdftotext_spark.functions.extract import PAGES_SCHEMA, page_batches
-    from pdftotext_spark.sources.shipping import ship_package
+    from pdftotext_spark.functions.extract import PAGES_SCHEMA, map_rows, page_rows
 
-    ship_package(transcripts.sparkSession)
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        page_batches, PAGES_SCHEMA
-    )
+    return map_rows(transcripts, ["conv_id", "turn_idx"], ["text"], PAGES_SCHEMA, page_rows)
 
 
 def text_strpos(pages: DataFrame, needle: str) -> DataFrame:

@@ -31,19 +31,21 @@ Scale design (BASELINE.json north_rule — 10^12 turns, 1000 executors):
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdftotext_spark.functions.extract import (
     EXTRACT_SCHEMA,
     FRAGMENT_SCHEMA,
-    extract_batches,
-    fragment_batches,
+    PASSTHROUGH_FIELDS,
+    fragment_rows,
+    map_rows,
+    turn_row,
 )
 
 DEFAULT_SALT = 64
-
-TRANSCRIPT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 
 def session_confs() -> dict[str, str]:
@@ -163,41 +165,26 @@ def extract_turns(
     ``pmod(xxhash64(conv_id, turn_idx), DEFAULT_SALT)`` spreads any
     single conversation across ``DEFAULT_SALT`` partitions.
 
-    Input must carry TRANSCRIPT_COLUMNS; output schema is
-    :data:`EXTRACT_SCHEMA`. We select exactly the six input columns so
-    column pruning reaches the scan.
+    Input must carry the :data:`TRANSCRIPT_DDL` columns; output schema is
+    :data:`EXTRACT_SCHEMA`. ``options`` (a picklable
+    :class:`~pdftotext_spark.core.document.ExtractOptions`, or None for
+    defaults) rides inside the row function, so per-turn behavior
+    (layout mode, de-hyphenation, markers, page selection, time
+    budget, ...) is configurable at the pipeline level.
     """
-    from pdftotext_spark.sources.shipping import ship_package
-
-    ship_package(transcripts.sparkSession)
-    df = transcripts.select(*TRANSCRIPT_COLUMNS)
     if n_partitions is not None:
-        df = df.repartition(
+        transcripts = transcripts.repartition(
             n_partitions,
             F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(DEFAULT_SALT)),
         )
-    if options is None:
-        return df.mapInPandas(extract_batches, EXTRACT_SCHEMA)
-    # ExtractOptions is a plain picklable dataclass: close over it so
-    # per-turn behavior (layout mode, de-hyphenation, markers, page
-    # selection, time budget, ...) is configurable at the pipeline level
-
-    def batches_with_options(it):
-        return extract_batches(it, options)
-
-    return df.mapInPandas(batches_with_options, EXTRACT_SCHEMA)
+    keys = [f.name for f in PASSTHROUGH_FIELDS]
+    return map_rows(transcripts, keys, ["text"], EXTRACT_SCHEMA, partial(turn_row, options))
 
 
-def extract_fragments_df(transcripts: DataFrame, n_partitions: int | None = None) -> DataFrame:
+def extract_fragments_df(transcripts: DataFrame) -> DataFrame:
     """Exploded positioned-fragments table (FIXTURES.md §4) for the
     layout/captures operator family."""
-    from pdftotext_spark.sources.shipping import ship_package
-
-    ship_package(transcripts.sparkSession)
-    df = transcripts.select("conv_id", "turn_idx", "text")
-    if n_partitions is not None:
-        df = df.repartition(n_partitions, F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(DEFAULT_SALT)))
-    return df.mapInPandas(fragment_batches, FRAGMENT_SCHEMA)
+    return map_rows(transcripts, ["conv_id", "turn_idx"], ["text"], FRAGMENT_SCHEMA, fragment_rows)
 
 
 def assemble_conversations(
