@@ -19,6 +19,7 @@ Reference parity notes (all citations ``PdfToText.php:LINE``):
 
 from __future__ import annotations
 
+import itertools
 import re
 import zlib
 
@@ -195,57 +196,87 @@ def ascii85_decode(data: bytes) -> bytes:
 # LZW base dictionary: 256 single-byte entries + placeholders for the
 # clear (256) and EOD (257) control codes, so appends start at 258
 _LZW_BASE: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
+# Code widths of one table segment (the stream start, or a clear code
+# up to the next one). Its first code adds no entry and every later
+# code adds one, and the width grows right after the add that brings
+# the table to 511/1023/2047 entries (PDF EarlyChange=1, the
+# reference's DictionaryLengths checked post-increment,
+# PdfToText.php:2836–2841): so a segment is 254 codes of 9 bits, 512
+# of 10, 1024 of 11, then 12 bits to its end, unpacked in steps of
+# _LZW_STEP codes.
+_LZW_RUNS = ((9, 254), (10, 512), (11, 1024))
+_LZW_STEP = 4096
+
+
+def _lzw_codes(data: bytes, pos: int, width: int, count: int) -> tuple[list[int], int]:
+    """Up to ``count`` big-endian codes of ``width`` bits from bit
+    ``pos`` of ``data``, cut before the first clear or EOD code, and
+    that code (0 when there is none). Each code lies within the 24
+    bits that start at its first byte (width <= 12, offset <= 7)."""
+    import numpy as np
+
+    first = pos >> 3
+    last = (pos + count * width + 7) >> 3
+    buf = np.frombuffer(data[first:last] + b"\x00\x00", dtype=np.uint8).astype(np.uint32)
+    bit = np.arange(count, dtype=np.uint32) * width + (pos & 7)
+    at = bit >> 3
+    word = (buf[at] << 16) | (buf[at + 1] << 8) | buf[at + 2]
+    codes = (word >> (24 - width - (bit & 7))) & ((1 << width) - 1)
+    control = np.flatnonzero((codes == 256) | (codes == 257))
+    if control.size:
+        return codes[: control[0]].tolist(), int(codes[control[0]])
+    return codes.tolist(), 0
 
 
 def lzw_decode(data: bytes) -> bytes:
     """LZWDecode: variable 9→12-bit codes, clear=256, EOD=257
     (PdfToText.php:2812–2908, same dictionary-growth thresholds).
+
+    The widths follow from the position in the table segment (see
+    :data:`_LZW_RUNS`), so each fixed-width run is unpacked at once and
+    only the table build runs per code. Trailing bits shorter than a
+    code are ignored; a stream without EOD ends at its last whole code.
     """
     out = bytearray()
-    # dictionary as a dense list (codes are consecutive ints — a dict
-    # pays hashing per code; the 256-entry base is built once)
-    table: list[bytes] = _LZW_BASE.copy()
-    code_len = 9
-    prev: bytes | None = None
     extend = out.extend
-    append = table.append
-
-    bitbuf = 0
-    nbits = 0
-    for byte in data:
-        bitbuf = (bitbuf << 8) | byte
-        nbits += 8
-        while nbits >= code_len:
-            nbits -= code_len
-            code = (bitbuf >> nbits) & ((1 << code_len) - 1)
-            if code == 256:  # clear table
-                del table[258:]
-                code_len = 9
-                prev = None
-                continue
-            if code == 257:  # EOD
+    total = len(data) * 8
+    pos = 0  # bit offset of the next code
+    while True:  # one table segment per pass
+        # dictionary as a dense list (codes are consecutive ints — a
+        # dict pays hashing per code; the base is built once)
+        table = _LZW_BASE.copy()
+        append = table.append
+        prev: bytes | None = None
+        for width, count in itertools.chain(_LZW_RUNS, itertools.repeat((12, _LZW_STEP))):
+            count = min(count, (total - pos) // width)
+            if count <= 0:
                 return bytes(out)
+            codes, control = _lzw_codes(data, pos, width, count)
+            read = len(codes) + (control != 0)  # codes this run consumed
+            if prev is None and codes:  # a segment's first code adds no entry
+                if codes[0] >= 258:
+                    raise DecodeError("LZWDecode: bad first code")
+                prev = table[codes[0]]
+                extend(prev)
+                codes = codes[1:]
             n_table = len(table)
-            if code < n_table:
-                entry = table[code]
-            elif prev is not None and code == n_table:
-                entry = prev + prev[:1]
-            elif prev is None:
-                raise DecodeError("LZWDecode: bad first code")
-            else:
-                raise DecodeError("LZWDecode: code out of range")
-            extend(entry)
-            if prev is not None:
-                append(prev + entry[:1])
-                # grow width at 511/1023/2047 thresholds, checked
-                # post-increment — the convention shared by the
-                # reference (PdfToText.php:2836–2841, DictionaryLengths
-                # keyed on dictionary_index after ++) and pdf.js/TCPDF.
-                # This is PDF EarlyChange=1: widen at 2^len - 1.
-                if n_table + 1 == (1 << code_len) - 1 and code_len < 12:
-                    code_len += 1
-            prev = entry
-    return bytes(out)
+            for code in codes:
+                if code < n_table:
+                    entry = table[code]
+                    append(prev + entry[:1])
+                elif code == n_table:
+                    entry = prev + prev[:1]
+                    append(entry)
+                else:
+                    raise DecodeError("LZWDecode: code out of range")
+                n_table += 1
+                extend(entry)
+                prev = entry
+            if control == 257:  # EOD
+                return bytes(out)
+            pos += read * width
+            if control == 256:  # clear table: a new segment
+                break
 
 
 def run_length_decode(data: bytes) -> bytes:

@@ -196,7 +196,7 @@ class Font:
     _decoded_bytes: int = 0
 
     @property
-    def _is_trivial(self) -> bool:
+    def is_trivial(self) -> bool:
         """No cmap, no differences, standard base encoding: decoding
         is byte-identity (chr(b) == latin-1)."""
         return (
@@ -212,7 +212,7 @@ class Font:
         256-entry ``str.translate`` table takes over — the reference's
         per-(font,char) memo buffer (PdfToText.php:6116–6121) taken to
         its limit."""
-        if self._is_trivial:
+        if self.is_trivial:
             return data.decode("latin-1")
         tbl = self._translate_table
         if tbl is not None:

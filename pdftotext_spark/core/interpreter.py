@@ -29,6 +29,7 @@ Newline heuristics (documented contract, tested by construction):
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pdftotext_spark.core.fonts import Font, FontTable
@@ -81,12 +82,17 @@ Token = tuple
 
 
 # master token pattern: one C-level scan per token instead of a
-# per-byte Python loop. The literal-string alternative matches only
-# NON-nested strings; nested ones (rare) fall back to the manual
-# scanner. `<<` falls back to a balanced skip.
+# per-byte Python loop. Whitespace is a leading run of each token's
+# match, not a match of its own. The junk alternative also takes a
+# lone `>` and the end of the stream, so some alternative always
+# matches after the run: otherwise the search retries the run from
+# each of its bytes, quadratic in its length on a whitespace-only
+# tail. The literal-string alternative matches only NON-nested
+# strings; nested ones (rare) fall back to the manual scanner from the
+# `(` at m.start(9). `<<` falls back to a balanced skip.
 _MASTER_RE = re.compile(
-    rb"[\x00\t\n\x0c\r ]+"
-    rb"|(?P<str>\((?:[^()\\]|\\.)*\))"
+    rb"[\x00\t\n\x0c\r ]*(?:"
+    rb"(?P<str>\((?:[^()\\]|\\.)*\))"
     rb"|(?P<dict><<)"
     rb"|(?P<hex><[0-9A-Fa-f\s]*>)"
     rb"|(?P<arr>\[)"
@@ -95,7 +101,7 @@ _MASTER_RE = re.compile(
     rb"|(?P<num>[+-]?(?:\d+\.?\d*|\.\d+)(?![^\x00\t\n\x0c\r /<>\[\]()]))"
     rb"|(?P<op>[^\x00\t\n\x0c\r /<>\[\]()]+)"
     rb"|(?P<lparen>\()"  # nested literal: regex str-alt failed → manual scan
-    rb"|(?P<junk><|\))"
+    rb"|(?P<junk>[<>)]|\Z))"
 )
 # the tokenizer dispatches on integer lastindex; pin the group layout
 # so a regex edit cannot silently desynchronize it
@@ -130,8 +136,6 @@ def tokenize(stream: bytes):
         restart = False
         for m in _MASTER_RE.finditer(stream, pos):
             kind = m.lastindex
-            if kind is None:  # whitespace
-                continue
             if kind == 7:  # num
                 emit(("num", float(m.group(7))))
             elif kind == 8:  # op
@@ -169,11 +173,11 @@ def tokenize(stream: bytes):
                 break
             elif kind == 9:  # lparen: nested literal — the non-nested
                 # alternative could not match; escape-aware balanced scan
-                tok, pos = _scan_literal(stream, m.start())
+                tok, pos = _scan_literal(stream, m.start(9))
                 emit(tok)
                 restart = True
                 break
-            # kind 10: junk '<' or ')' alone — skipped
+            # kind 10: junk '<', '>' or ')' alone, or the end — skipped
     return out
 
 
@@ -207,16 +211,35 @@ def decode_pdf_string(tok: Token, font: Font | None) -> str:
         data = hex_string_bytes(raw)
     else:
         data = unescape_literal(raw)
+    return font_decoder(font)(data)
+
+
+def _latin1(data: bytes) -> str:
+    return data.decode("latin-1")
+
+
+def font_decoder(font: Font | None) -> Callable[[bytes], str]:
+    """The decode of every string shown in ``font``, after the
+    escape/hex step: latin-1 with no font or a trivial one, the
+    ``map_char`` join for multi-byte codes, else the font's 1-byte
+    decode. The fused interpreter resolves it once per font selection
+    instead of per string."""
     if font is None:
-        return data.decode("latin-1")
+        return _latin1
     w = font.code_width
     if w >= 2:
-        out = []
-        for k in range(0, len(data) - (len(data) % w), w):
-            code = int.from_bytes(data[k : k + w], "big")
-            out.append(font.map_char(code))
-        return "".join(out)
-    return font.decode_single_bytes(data)
+        mc = font.map_char
+
+        def decode_codes(data: bytes) -> str:
+            return "".join(
+                mc(int.from_bytes(data[k : k + w], "big"))
+                for k in range(0, len(data) - (len(data) % w), w)
+            )
+
+        return decode_codes
+    if font.is_trivial:
+        return _latin1
+    return font.decode_single_bytes
 
 
 # ------------------------------------------------------------- raw mode T5
@@ -388,17 +411,22 @@ def _extract_text_raw_fused(
     :func:`_extract_text_raw_tokens` (differential-tested), but one
     regex pass with register-tracked operands instead of materializing
     a token list: no per-token tuples, no operand list, byte-level op
-    dispatch. This loop is the single hottest code in the engine
-    (~40% of parse CPU at the 100 TB profile)."""
+    dispatch, and one string decoder per font selection
+    (:func:`font_decoder`). This loop is the single hottest code in the
+    engine: most of the core's CPU on the ``extract_longpdf`` workload."""
     stream = strip_useless_instructions(stream)
     out: list[str] = []
-    font: Font | None = fonts.default_font()
+    # the current font's string decode, re-resolved at each Tf that
+    # names a known font
+    decode = font_decoder(fonts.default_font())
     font_size = DEFAULT_FONT_SIZE
     leading = 0.0
     last_y: float | None = None
 
-    # operand registers (kinds: 0 none, 1 str, 2 hex, 3 num, 4 name,
-    # 5 TJ-array); `nums` mirrors the token path's per-op float list
+    # operand registers (kinds: 0 none, 1 string, 3 num, 4 name,
+    # 5 TJ-array); a string, literal or hex, is held as its bytes after
+    # the escape or hex step, so showing it is one call of `decode`;
+    # `nums` mirrors the token path's per-op float list
     prev_kind = 0
     prev_val: object = None
     last_kind = 0
@@ -427,20 +455,6 @@ def _extract_text_raw_fused(
             emit_newlines(k)
         last_y = y
 
-    def dec(kind: int, raw: bytes) -> str:
-        data = hex_string_bytes(raw) if kind == 2 else unescape_literal(raw)
-        f = font
-        if f is None:
-            return data.decode("latin-1")
-        w = f.code_width
-        if w >= 2:
-            mc = f.map_char
-            return "".join(
-                mc(int.from_bytes(data[k : k + w], "big"))
-                for k in range(0, len(data) - (len(data) % w), w)
-            )
-        return f.decode_single_bytes(data)
-
     pos = 0
     n = len(stream)
     # finditer iterates token matches in C instead of re-invoking
@@ -455,8 +469,6 @@ def _extract_text_raw_fused(
         restart = False
         for m in _MASTER_RE.finditer(stream, pos):
             kind = m.lastindex
-            if kind is None:  # whitespace
-                continue
             if arr_depth:
                 # inside a TJ array: tokens are collected (depth 1
                 # only), never dispatched — mirrors the token path,
@@ -486,18 +498,19 @@ def _extract_text_raw_fused(
                     restart = True
                     break
                 elif kind == 9:  # nested-paren literal: scan anywhere
-                    tok, pos = _scan_literal(stream, m.start())
+                    tok, pos = _scan_literal(stream, m.start(9))
                     if arr_depth == 1:
-                        arr.append((1, tok[1]))
+                        arr.append((1, unescape_literal(tok[1])))
                     restart = True
                     break
                 elif arr_depth == 1:
                     if kind == 7:  # num (kern offset)
                         arr.append((3, float(m.group(7))))
                     elif kind == 1:  # literal string
-                        arr.append((1, m.group(1)[1:-1]))
+                        raw = m.group(1)[1:-1]
+                        arr.append((1, unescape_literal(raw)))
                     elif kind == 3:  # hex string
-                        arr.append((2, m.group(3)[1:-1]))
+                        arr.append((1, hex_string_bytes(m.group(3)[1:-1])))
                     # names/operators/junk inside arrays: collected as
                     # inert elements by the token path, ignored by TJ
                 continue
@@ -509,8 +522,8 @@ def _extract_text_raw_fused(
             elif kind == 8:  # operator: dispatch on raw bytes
                 op = m.group(8)
                 if op == b"Tj":
-                    if last_kind in (1, 2):
-                        out.append(dec(last_kind, last_val))
+                    if last_kind == 1:
+                        out.append(decode(last_val))
                 elif op == b"Td" or op == b"TD":
                     if len(nums) >= 2:
                         if op == b"TD" and not ignore_text_leading:
@@ -524,8 +537,8 @@ def _extract_text_raw_fused(
                 elif op == b"TJ":
                     if last_kind == 5:
                         for el_kind, el_val in last_val:
-                            if el_kind != 3:
-                                out.append(dec(el_kind, el_val))
+                            if el_kind == 1:
+                                out.append(decode(el_val))
                             elif el_val < -MIN_SPACE_WIDTH:
                                 if repeat_separator:
                                     n_rep = max(
@@ -546,7 +559,7 @@ def _extract_text_raw_fused(
                             prev_val[1:].decode("latin-1"), page
                         )
                         if f is not None:
-                            font = f
+                            decode = font_decoder(f)
                 elif op == b"TL":
                     # PDFOPT_IGNORE_TEXT_LEADING (PdfToText.php:3822)
                     if last_kind == 3 and not ignore_text_leading:
@@ -561,8 +574,8 @@ def _extract_text_raw_fused(
                         last_y = 0.0
                     dy = -(leading or font_size)
                     move_to_y(last_y + dy, relative_dy=dy)
-                    if last_kind in (1, 2):
-                        out.append(dec(last_kind, last_val))
+                    if last_kind == 1:
+                        out.append(decode(last_val))
                 elif op == b"Do":
                     emit_newlines(1)  # PdfToText.php:3925-3928
                 prev_kind = last_kind = 0
@@ -570,13 +583,15 @@ def _extract_text_raw_fused(
                 nums.clear()
             elif kind == 1:  # non-nested literal string
                 prev_kind, prev_val = last_kind, last_val
-                last_kind, last_val = 1, m.group(1)[1:-1]
+                raw = m.group(1)[1:-1]
+                last_kind = 1
+                last_val = unescape_literal(raw)
             elif kind == 6:  # name (kept raw; decoded only at Tf)
                 prev_kind, prev_val = last_kind, last_val
                 last_kind, last_val = 4, m.group(6)
             elif kind == 3:  # hex string
                 prev_kind, prev_val = last_kind, last_val
-                last_kind, last_val = 2, m.group(3)[1:-1]
+                last_kind, last_val = 1, hex_string_bytes(m.group(3)[1:-1])
             elif kind == 4:  # [ begins a TJ array
                 arr = []
                 arr_depth = 1
@@ -597,9 +612,9 @@ def _extract_text_raw_fused(
                 restart = True
                 break
             elif kind == 9:  # nested literal fallback
-                tok, pos = _scan_literal(stream, m.start())
+                tok, pos = _scan_literal(stream, m.start(9))
                 prev_kind, prev_val = last_kind, last_val
-                last_kind, last_val = 1, tok[1]
+                last_kind, last_val = 1, unescape_literal(tok[1])
                 restart = True
                 break
             # kind 5 (stray ]) / 10 (junk): dropped, registers untouched

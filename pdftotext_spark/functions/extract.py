@@ -80,6 +80,7 @@ PAGES_SCHEMA = T.StructType(
 )
 
 _FRAGMENT_OPTIONS = ExtractOptions(layout=True, want_fragments=True)
+_NULLABLE_INT = {T.IntegerType: "Int32", T.LongType: "Int64"}
 
 
 def map_rows(df, keys: list[str], args: list[str], schema: T.StructType, row_fn: Callable):
@@ -122,7 +123,10 @@ def map_rows_body(
     which no ``parse_us`` covers; ``shipping.install_zip_guard`` keeps
     its import-cache part near zero.
     """
-    values = schema.fieldNames()[len(keys):]
+    # integer fields take the nullable dtype of their width: a plain
+    # list with a None in it becomes float64, which rounds a 64-bit
+    # value (a phash) to 53 bits
+    values = [(f.name, _NULLABLE_INT.get(type(f.dataType))) for f in schema.fields[len(keys):]]
     trace_dir = os.environ.get("SPARK_GRAFT_TRACE_DIR")
     if trace_dir:
         os.makedirs(trace_dir, exist_ok=True)
@@ -145,7 +149,10 @@ def map_rows_body(
         idx = np.repeat(np.arange(len(pdf)), counts)
         frame = {k: pdf[k].array.take(idx) for k in keys}
         columns = list(zip(*rows)) or [()] * len(values)
-        frame.update((v, list(c)) for v, c in zip(values, columns))
+        frame.update(
+            (name, pd.array(c, dtype=dtype) if dtype else list(c))
+            for (name, dtype), c in zip(values, columns)
+        )
         out_df = pd.DataFrame(frame)
         t_build1 = time.perf_counter_ns()
         if trace_dir:

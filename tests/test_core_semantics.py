@@ -263,12 +263,73 @@ def test_simplify_unicode_option():
 # ------------------------------------- fused-vs-token differential guards
 
 
+_TOUNICODE_2BYTE = b"""/CIDInit /ProcSet findresource begin 12 dict begin begincmap
+1 begincodespacerange <0000> <FFFF> endcodespacerange
+2 beginbfchar
+<0001> <0048>
+<0002> <0069>
+endbfchar
+1 beginbfrange <0010> <0015> <0061> endbfrange
+endcmap"""
+
+
+def _mixed_font_table(first: str = "plain") -> FontTable:
+    """A latin-1 font (/F1), a /Differences font (/F2), a font with
+    2-byte ToUnicode codes (/F3) and a WinAnsi font (/F4); ``first``
+    picks which one is the default before any Tf."""
+    bodies = {
+        "plain": (10, b"<< /Type /Font /BaseFont /Helvetica >>"),
+        "differences": (11, b"<< /Type /Font /BaseFont /Times-Roman /Encoding 20 0 R >>"),
+        "two_byte": (12, b"<< /Type /Font /Subtype /Type0 /BaseFont /CIDX /Encoding /Identity-H /ToUnicode 21 0 R >>"),
+        "winansi": (13, b"<< /Type /Font /BaseFont /Courier /Encoding /WinAnsiEncoding >>"),
+    }
+    ft = FontTable()
+    for name in [first] + [k for k in bodies if k != first]:
+        ft.add_font(*bodies[name])
+    ft.add_alias_map(b"<< /F1 10 0 R /F2 11 0 R /F3 12 0 R /F4 13 0 R >>")
+    ft.attach_cmaps(
+        {
+            20: b"<< /Type /Encoding /BaseEncoding /WinAnsiEncoding /Differences [ 65 /B /C 97 /eacute /uni20AC ] >>",
+            21: _TOUNICODE_2BYTE,
+        }
+    )
+    return ft
+
+
+_FONT_BATTERY = [
+    b"BT /F2 12 Tf (ABC abc) Tj ET",
+    b"BT /F2 12 Tf (\\101\\102 \\(a\\)) Tj <4142> Tj [(AB) -400 <6162>] TJ ET",
+    b"BT /F2 12 Tf (AB) ' 1 2 (ab) \" ET",
+    b"BT /F3 10 Tf <00010002> Tj [<0010> -300 <0011 0012>] TJ <000100> Tj ET",
+    b"BT /F3 10 Tf (\\000\\001\\000\\002) Tj ET",
+    b"BT /F4 9 Tf <80 93 94> Tj (\\200) Tj ET",
+    # a Tf switch in the middle of a line, in and between TJ arrays
+    b"BT /F1 12 Tf (plain ) Tj /F2 12 Tf (ABC) Tj /F3 12 Tf <0001> Tj /F1 12 Tf (x) Tj ET",
+    b"BT /F2 12 Tf [(AB)] TJ /F3 12 Tf [<0010> -900 <0011>] TJ ET",
+    # a Tf naming an unknown font keeps the previous decoder
+    b"BT /F2 12 Tf (AB) Tj /Nope 12 Tf (AB) Tj [(ab)] TJ ET",
+    b"BT /F3 12 Tf /Nope 9 Tf <0001> Tj ET",
+    b"BT (AB) Tj /Nope 8 Tf (AB) Tj ET",
+    # tokens after runs of NUL, form feed and other whitespace
+    b"BT\x00\x00\x00/F2\x0c\x0c12\x00Tf\x0c(A)\x00\x00Tj\r\n\x0c0\x00-14\x0cTd<41>\x00Tj\x00\x00ET",
+    b"\x00\x0c\t\r\n BT [\x00(A)\x0c-300\x00\x00(B)\x0c] \x00TJ ET",
+    # a nested literal and a << that both follow whitespace
+    b"BT  \n ((nested) A)   Tj \x00 << /D 1 >> \x0c ((x)) Tj ET",
+    b"BT /F2 12 Tf [ \n ((n) A) \x00 << /K [ ] >> \x0c (z) ] TJ ET",
+    b"BT (a) Tj \x00 > \x0c >> (b) Tj ET",
+    # a stream whose tail is only whitespace
+    b"BT /F2 12 Tf (tail) Tj ET" + b" \n\x00\x0c\r\t" * 5000,
+    b"\x00\x0c \n",
+]
+
+
 def test_fused_raw_interpreter_matches_token_path():
     """The fused scan+interpret fast path must be byte-identical to the
     token-loop reference on the full operator battery."""
     from pdftotext_spark.core.interpreter import (
         _extract_text_raw_fused,
         _extract_text_raw_tokens,
+        font_decoder,
     )
 
     battery = [
@@ -299,6 +360,30 @@ def test_fused_raw_interpreter_matches_token_path():
         assert _extract_text_raw_fused(s, FontTable()) == _extract_text_raw_tokens(
             s, FontTable()
         ), s
+    # per-font decoders (/Differences, 2-byte ToUnicode codes, Tf
+    # switches, unknown fonts) and the whitespace folded into each
+    # token match, under each font as the default
+    ft = _mixed_font_table()
+    assert font_decoder(ft.resolve("F2"))(b"ABa") == "BC\u00e9"
+    assert font_decoder(ft.resolve("F3"))(b"\x00\x01\x00\x11\x00") == "Hb"
+    for first in ("plain", "differences", "two_byte", "winansi"):
+        for s in _FONT_BATTERY:
+            fused = _extract_text_raw_fused(s, _mixed_font_table(first))
+            assert fused == _extract_text_raw_tokens(s, _mixed_font_table(first)), (first, s)
+    assert _extract_text_raw_fused(_FONT_BATTERY[8], ft) == "BCBC\u00e9\u20ac"
+    assert _extract_text_raw_fused(_FONT_BATTERY[-2], ft) == "t\u00e9il"
+
+
+def test_token_regex_matches_after_any_whitespace_run():
+    """After a whitespace run some alternative always matches, the end
+    of the stream included, so a long run is scanned once, never again
+    from each of its bytes."""
+    from pdftotext_spark.core.interpreter import _MASTER_RE
+
+    for b in range(256):
+        m = _MASTER_RE.match(b" \x00\x0c\n" + bytes([b]))
+        assert m is not None and m.end() == 5, b
+    assert _MASTER_RE.match(b"\x00\x0c \n").end() == 4
 
 
 def test_fused_raw_interpreter_fuzz_equivalence():
@@ -320,6 +405,16 @@ def test_fused_raw_interpreter_fuzz_equivalence():
         s = b" ".join(random.choices(alphabet, k=random.randrange(1, 40)))
         assert _extract_text_raw_fused(s, FontTable()) == _extract_text_raw_tokens(
             s, FontTable()
+        ), s
+    # again with fonts to switch between and mixed whitespace runs
+    alphabet += [b"/F2", b"/F3", b"/F4", b"/Nope", b"<0001 0010>", b"(\\101b)", b">"]
+    seps = [b" ", b"\x00", b"\x0c\n", b"\t\r \x00"]
+    for i in range(1500):
+        toks = random.choices(alphabet, k=random.randrange(1, 40))
+        s = b"".join(t + random.choice(seps) for t in toks)
+        first = ("plain", "differences", "two_byte", "winansi")[i % 4]
+        assert _extract_text_raw_fused(s, _mixed_font_table(first)) == _extract_text_raw_tokens(
+            s, _mixed_font_table(first)
         ), s
 
 

@@ -100,6 +100,137 @@ def test_lzw_own_encoder_matches_spec_encoder_bitstream(n):
     assert _lzw_encode(data) == _lzw_encode_spec(data)
 
 
+def _lzw_decode_reference(data: bytes) -> bytes:
+    """The per-byte LZW decoder that ``filters.lzw_decode`` replaced,
+    kept as its oracle: it shifts each byte into a bit buffer and reads
+    codes at the current width, widening post-add at 511/1023/2047."""
+    out = bytearray()
+    table = [bytes([i]) for i in range(256)] + [b"", b""]
+    code_len = 9
+    prev = None
+    bitbuf = 0
+    nbits = 0
+    for byte in data:
+        bitbuf = (bitbuf << 8) | byte
+        nbits += 8
+        while nbits >= code_len:
+            nbits -= code_len
+            code = (bitbuf >> nbits) & ((1 << code_len) - 1)
+            if code == 256:
+                del table[258:]
+                code_len = 9
+                prev = None
+                continue
+            if code == 257:
+                return bytes(out)
+            n_table = len(table)
+            if code < n_table:
+                entry = table[code]
+            elif prev is not None and code == n_table:
+                entry = prev + prev[:1]
+            elif prev is None:
+                raise filters.DecodeError("LZWDecode: bad first code")
+            else:
+                raise filters.DecodeError("LZWDecode: code out of range")
+            out.extend(entry)
+            if prev is not None:
+                table.append(prev + entry[:1])
+                if n_table + 1 == (1 << code_len) - 1 and code_len < 12:
+                    code_len += 1
+            prev = entry
+    return bytes(out)
+
+
+def _lzw_pack(codes: list[int], tail: str = "") -> bytes:
+    """Write ``codes`` at the widths a decoder reads them (one table
+    entry per code after a segment's first, widening post-add at
+    511/1023/2047), then the ``tail`` bits, zero-padded to a byte."""
+    bits = []
+    n_table, width, first = 258, 9, True
+    for c in codes:
+        bits.append(format(c, f"0{width}b"))
+        if c == 256:
+            n_table, width, first = 258, 9, True
+            continue
+        if not first:
+            n_table += 1
+            if n_table == (1 << width) - 1 and width < 12:
+                width += 1
+        first = False
+    s = "".join(bits) + tail
+    s += "0" * (-len(s) % 8)
+    return bytes(int(s[i : i + 8], 2) for i in range(0, len(s), 8))
+
+
+def _lzw_outcome(decode, data: bytes):
+    try:
+        return decode(data)
+    except filters.DecodeError as e:
+        return ("DecodeError", str(e))
+
+
+def _literals(n: int, start: int = 0) -> list[int]:
+    return [(start + i * 7) % 256 for i in range(n)]
+
+
+LZW_PARITY_CASES = {
+    "clear_mid_run": [256, 65, 66, 258, 256, 67, 68, 258, 257],
+    # 254 codes fill the 9-bit run; the clear is the first 10-bit code
+    "clear_first_10_bit_code": _literals(254) + [256, 67, 68, 257],
+    "clear_last_9_bit_code": _literals(253) + [256, 67, 68, 257],
+    "clear_first_11_bit_code": _literals(766) + [256, 67, 68, 257],
+    "clear_first_12_bit_code": _literals(1790) + [256, 67, 68, 257],
+    "clear_twice": [256, 256, 65, 256, 66, 257],
+    "no_eod": [65, 66, 258, 67],
+    "no_eod_past_9_bits": _literals(600),
+    "kwkwk": [65, 258, 259, 257],
+    "kwkwk_after_clear": _literals(300) + [256, 66, 258, 257],
+    "bad_first_code": [258, 65, 257],
+    "bad_first_code_after_clear": [65, 66, 256, 300, 257],
+    "code_out_of_range": [65, 66, 400, 257],
+    "code_out_of_range_at_10_bits": _literals(260) + [600, 257],
+    "past_2047_entries": _literals(3000) + [257],
+    "past_4095_entries": _literals(5000) + [1000, 4000, 257],
+    "eod_first": [257, 65],
+    "empty": [],
+}
+
+
+@pytest.mark.parametrize("tail", ["", "1", "10110", "1111111"])
+@pytest.mark.parametrize("name", sorted(LZW_PARITY_CASES))
+def test_lzw_matches_reference_decoder(name, tail):
+    data = _lzw_pack(LZW_PARITY_CASES[name], tail)
+    assert _lzw_outcome(filters.lzw_decode, data) == _lzw_outcome(_lzw_decode_reference, data)
+
+
+def test_lzw_parity_cases_cover_both_errors_and_output():
+    outcomes = [_lzw_outcome(_lzw_decode_reference, _lzw_pack(c)) for c in LZW_PARITY_CASES.values()]
+    assert ("DecodeError", "LZWDecode: bad first code") in outcomes
+    assert ("DecodeError", "LZWDecode: code out of range") in outcomes
+    assert sum(isinstance(o, bytes) and len(o) > 1500 for o in outcomes) >= 3
+
+
+def test_lzw_matches_reference_decoder_on_encoded_and_damaged_streams():
+    import random
+
+    rng = random.Random(11)
+    for n in (10, 300, 1200, 5000, 40_000):
+        text = bytes(rng.choice(b"abcdefgh \n") for _ in range(n))
+        for enc in (_lzw_encode(text), _lzw_encode_spec(text)):
+            assert filters.lzw_decode(enc) == _lzw_decode_reference(enc) == text
+            for _ in range(20):
+                bad = bytearray(enc)
+                bad[rng.randrange(len(bad))] ^= 1 << rng.randrange(8)
+                cut = bytes(bad[: rng.randrange(1, len(bad) + 1)])
+                for case in (bytes(bad), cut):
+                    assert _lzw_outcome(filters.lzw_decode, case) == _lzw_outcome(
+                        _lzw_decode_reference, case
+                    )
+    for _ in range(200):
+        noise = bytes(rng.randrange(256) for _ in range(rng.randrange(64)))
+        assert _lzw_outcome(filters.lzw_decode, noise) == _lzw_outcome(_lzw_decode_reference, noise)
+
+
 def test_ascii_hex():
     assert filters.ascii_hex_decode(b"48 65 6C6C 6F>") == b"Hello"
     # odd trailing nibble pads with 0 (PdfToText.php:2913–2965)

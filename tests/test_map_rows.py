@@ -112,3 +112,16 @@ def test_trace_line_per_batch(tmp_path, monkeypatch):
     assert [r["rows"] for r in recs] == [4, 2]
     assert recs[0]["emit_gap_us"] is None
     assert recs[1]["emit_gap_us"] >= 0
+
+
+def test_int64_value_survives_a_null_earlier_in_the_batch():
+    # the JPEG has no phash (None); the raster's 64-bit phash must reach
+    # the frame exactly, not through float64
+    jpeg = "%B64%" + base64.b64encode(pb.image_pdf()[0]).decode()
+    raster = "%B64%" + base64.b64encode(pb.raster_pdf(16, 16)[0]).decode()
+    [out] = _run([_batch([jpeg, raster])], IMAGE_SCHEMA, carve_image_rows)
+    [(*_, expected)] = carve_image_rows(raster)
+    assert expected == -7407774216137960602
+    assert out["phash"].isna().tolist() == [True, False]
+    assert int(out["phash"].iloc[1]) == expected
+    assert out["phash"].dtype == "Int64"

@@ -154,6 +154,19 @@ def test_carve_images_phash_and_perceptual_dedup(spark):
     assert max(groups.values()) >= 2
 
 
+def test_carve_images_keeps_phash_after_a_null_in_the_batch(spark):
+    # one batch: a JPEG (no phash) before a raster; the raster's phash
+    # must arrive exactly, not rounded through float64
+    jpeg = "%B64%" + base64.b64encode(pb.image_pdf()[0]).decode()
+    raster = "%B64%" + base64.b64encode(pb.raster_pdf(16, 16)[0]).decode()
+    df = spark.createDataFrame(
+        [("c", 0, jpeg), ("c", 1, raster)], "conv_id string, turn_idx int, text string"
+    ).coalesce(1)
+    rows = multimodal.carve_images(df).orderBy("turn_idx").collect()
+    [(*_, expected)] = multimodal.carve_image_rows(raster)
+    assert [r.phash for r in rows] == [None, expected]
+
+
 def test_raster_rgb_roundtrip():
     import numpy as np
 
