@@ -16,7 +16,6 @@ from dataclasses import dataclass, field
 from pdftotext_spark.core import filters
 
 _HEADER_RE = re.compile(rb"%PDF-(\d+)\.(\d+)")
-_OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b(.*?)endobj", re.S)
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\n?endstream", re.S)
 _TRAILER_RE = re.compile(rb"trailer\s*<<(.*?)>>", re.S)
 _ENCRYPT_RE = re.compile(rb"/Encrypt\s+(\d+)\s+\d+\s+R")

@@ -83,16 +83,24 @@ _FRAGMENT_OPTIONS = ExtractOptions(layout=True, want_fragments=True)
 _NULLABLE_INT = {T.IntegerType: "Int32", T.LongType: "Int64"}
 
 
-def map_rows(df, keys: list[str], args: list[str], schema: T.StructType, row_fn: Callable):
+def map_rows(
+    df,
+    keys: list[str],
+    args: list[str],
+    schema: T.StructType,
+    row_fn: Callable,
+    tally: Callable | None = None,
+):
     """Run ``row_fn`` over every row of ``df`` in one ``mapInPandas``
     stage. ``schema`` lists the ``keys`` first, then the fields that
-    ``row_fn(*args)``'s tuples fill, in order."""
+    ``row_fn(*args)``'s tuples fill, in order. ``tally``, if given, is
+    called inside the task with each output frame."""
     from pdftotext_spark.sources.shipping import ship_package
 
     ship_package(df.sparkSession)
 
     def body(batches):
-        return map_rows_body(batches, keys, args, schema, row_fn)
+        return map_rows_body(batches, keys, args, schema, row_fn, tally)
 
     # the plan's MapInPandas node names the stage by its row function
     body.__name__ = getattr(row_fn, "func", row_fn).__name__
@@ -105,6 +113,7 @@ def map_rows_body(
     args: list[str],
     schema: T.StructType,
     row_fn: Callable,
+    tally: Callable | None = None,
 ) -> Iterator[pd.DataFrame]:
     """``mapInPandas`` body of :func:`map_rows`.
 
@@ -154,6 +163,8 @@ def map_rows_body(
             for (name, dtype), c in zip(values, columns)
         )
         out_df = pd.DataFrame(frame)
+        if tally is not None:
+            tally(out_df)
         t_build1 = time.perf_counter_ns()
         if trace_dir:
             line = {

@@ -20,21 +20,32 @@ Scale design (BASELINE.json north_rule — 10^12 turns, 1000 executors):
   files of its own. The join broadcasts when the committed side is
   small and AQE-converts otherwise.
 - **Metrics manifest** (north_rule lineage requirement): per-partition
-  rows `{run_id, partition_id, turns_parsed, decode_failures,
-  images_extracted, wall_ms}`. ``run_extraction`` stamps
-  ``(run_id, partition_id)`` onto every output row *before* the write,
-  so the manifest aggregates exactly this run's increment from the
-  committed files (resume never double-counts) and partition ids are
-  extraction-task ids — one extra narrow aggregation, no second pass
-  over payloads.
+  rows `{partition_id, turns_parsed, decode_failures, images_extracted,
+  wall_ms, run_id, committed_at}`. ``run_extraction`` stamps
+  ``(partition_id, run_id)`` onto every output row and counts the
+  manifest inside the extraction write itself: each extraction task
+  adds its sums to a :class:`PartitionSums` accumulator keyed by its
+  partition id, so only this run's increment is counted (resume never
+  double-counts) and no job re-reads committed files for it. Spark
+  merges a result task's accumulator updates once, on its first
+  successful attempt; a shuffle-map stage re-merges them when it is
+  resubmitted, so nothing may add an Exchange between the extraction
+  and the write. :func:`metrics_manifest` is the same manifest as a
+  Spark aggregation over any extracted frame.
+- **Known-schema reads**: the committed output is read by
+  :data:`COMMITTED_SCHEMA`, both for the resume and for the returned
+  read-back, so neither launches a schema-inference job; files written
+  before the lineage columns existed read them as null.
 """
 
 from __future__ import annotations
 
 from functools import partial
 
+from pyspark import AccumulatorParam, TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pdftotext_spark.functions.extract import (
     EXTRACT_SCHEMA,
@@ -46,6 +57,20 @@ from pdftotext_spark.functions.extract import (
 )
 
 DEFAULT_SALT = 64
+
+# what run_extraction commits: the extraction columns, then the lineage
+# columns it stamps before the write
+COMMITTED_SCHEMA = T.StructType(
+    EXTRACT_SCHEMA.fields
+    + [
+        T.StructField("partition_id", T.IntegerType()),
+        T.StructField("run_id", T.StringType()),
+    ]
+)
+MANIFEST_DDL = (
+    "partition_id int, turns_parsed long, decode_failures long, "
+    "images_extracted long, wall_ms long, run_id string"
+)
 
 
 def session_confs() -> dict[str, str]:
@@ -59,8 +84,8 @@ def session_confs() -> dict[str, str]:
     - ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` (default 32): on a cluster
       size so post-shuffle partitions land in the 100 MB–1 GB band
       (e.g. ~2–3x total executor cores as a floor) and let AQE
-      coalescing shrink small stages; 32 is NOT a magic constant, it
-      is the local core count.
+      coalescing shrink small stages; 32 is a small-machine default,
+      not a tuned constant.
     - ``SPARK_GRAFT_MAX_PARTITION_BYTES`` (default 1m): extraction
       burns ~1 CPU-sec per scanned MB — far above scan cost — so
       splits sized to ~seconds-of-CPU keep every core fed; pure-scan
@@ -149,6 +174,7 @@ def extract_turns(
     transcripts: DataFrame,
     n_partitions: int | None = None,
     options=None,
+    tally=None,
 ) -> DataFrame:
     """Per-turn extraction via ``mapInPandas`` — shuffle-free by
     default.
@@ -170,7 +196,8 @@ def extract_turns(
     :class:`~pdftotext_spark.core.document.ExtractOptions`, or None for
     defaults) rides inside the row function, so per-turn behavior
     (layout mode, de-hyphenation, markers, page selection, time
-    budget, ...) is configurable at the pipeline level.
+    budget, ...) is configurable at the pipeline level. ``tally``
+    is passed to :func:`~pdftotext_spark.functions.extract.map_rows`.
     """
     if n_partitions is not None:
         transcripts = transcripts.repartition(
@@ -178,7 +205,7 @@ def extract_turns(
             F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(DEFAULT_SALT)),
         )
     keys = [f.name for f in PASSTHROUGH_FIELDS]
-    return map_rows(transcripts, keys, ["text"], EXTRACT_SCHEMA, partial(turn_row, options))
+    return map_rows(transcripts, keys, ["text"], EXTRACT_SCHEMA, partial(turn_row, options), tally)
 
 
 def extract_fragments_df(transcripts: DataFrame) -> DataFrame:
@@ -236,7 +263,9 @@ def assemble_conversations(
 
 
 def metrics_manifest(extracted: DataFrame, run_id: str) -> DataFrame:
-    """Per-partition lineage/metrics manifest (north_rule).
+    """Per-partition lineage/metrics manifest (north_rule) as a Spark
+    aggregation. :func:`run_extraction` counts the same rows inside its
+    write instead (:class:`PartitionSums`).
 
     If the frame already carries a ``partition_id`` column (stamped at
     extraction time by :func:`run_extraction`), it is trusted — so the
@@ -270,20 +299,96 @@ def resume_anti_join(transcripts: DataFrame, committed: DataFrame) -> DataFrame:
     )
 
 
-def read_committed(spark: SparkSession, path: str) -> DataFrame | None:
+def read_committed(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame | None:
     """Read a committed parquet output or store, or None when nothing
     is committed there yet: the path is missing, or it holds no data
     files. Any other failure (a corrupt or unreadable file) raises —
     treating it as "nothing committed" would re-process and duplicate
-    everything already there."""
+    everything already there.
+
+    With ``schema`` the read infers nothing (no job, no footer opened):
+    a path with no data files reads as an empty frame, and a corrupt
+    file raises from the first job that scans it."""
     from pyspark.errors import AnalysisException
 
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     except AnalysisException as exc:
         if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
             return None
         raise
+
+
+class PartitionSums(AccumulatorParam):
+    """Accumulator of ``{partition_id: (turns, decode_failures,
+    n_images, extract_us)}`` sums."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, other):
+        for pid, sums in other.items():
+            old = acc.get(pid)
+            acc[pid] = sums if old is None else tuple(a + b for a, b in zip(old, sums))
+        return acc
+
+
+def _tally(counter, frame) -> None:
+    """``map_rows`` tally of the extraction: add one output frame's
+    sums to ``counter`` under the running task's partition id."""
+    if len(frame):
+        counter.add({
+            TaskContext.get().partitionId(): (
+                len(frame),
+                int(frame["decode_failures"].sum()),
+                int(frame["n_images"].sum()),
+                int(frame["extract_us"].sum()),
+            )
+        })
+
+
+def lineage_increment(
+    transcripts: DataFrame,
+    run_id: str,
+    n_partitions: int | None = None,
+    options=None,
+    counter=None,
+) -> DataFrame:
+    """The frame :func:`run_extraction` writes: :func:`extract_turns`
+    with ``(partition_id, run_id)`` stamped on every row. With a
+    :class:`PartitionSums` ``counter``, each extraction task adds its
+    sums to it; the write plan must keep that extraction in its result
+    stage (no Exchange above it)."""
+    tally = None if counter is None else partial(_tally, counter)
+    return (
+        extract_turns(transcripts, n_partitions=n_partitions, options=options, tally=tally)
+        .withColumn("partition_id", F.spark_partition_id())
+        .withColumn("run_id", F.lit(run_id))
+    )
+
+
+def write_manifest(spark: SparkSession, sums: dict, run_id: str, metrics_path: str) -> None:
+    """Append the manifest of one run from its :class:`PartitionSums`
+    value: the rows :func:`metrics_manifest` gives over the run's
+    committed increment, written as one file from a local frame."""
+    import pandas as pd
+
+    cols = ["partition_id", "turns_parsed", "decode_failures", "images_extracted", "wall_ms"]
+    pdf = pd.DataFrame(
+        [(pid, n, fails, images, us // 1000) for pid, (n, fails, images, us) in sorted(sums.items())],
+        columns=cols,
+    ).astype({"partition_id": "int32", **dict.fromkeys(cols[1:], "int64")})
+    pdf["run_id"] = run_id
+    (
+        spark.createDataFrame(pdf, MANIFEST_DDL)
+        .withColumn("committed_at", F.current_timestamp())
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(metrics_path)
+    )
 
 
 def run_extraction(
@@ -303,46 +408,28 @@ def run_extraction(
     pickled UDF so the full option surface reaches executors,
     ``global_deadline_epoch`` (the job-wide wall deadline) included.
     ``n_partitions`` forces :func:`extract_turns`' salted repartition
-    (pathological file layouts only; default: scan splits)."""
+    (pathological file layouts only; default: scan splits).
+
+    Jobs launched with an output: the committed-key scan of a resume
+    (a broadcast, or a shuffle for a large output), the extraction
+    write, and the manifest write; the input's own schema inference,
+    if its format needs one. The returned read-back is lazy and read
+    by :data:`COMMITTED_SCHEMA`, so rows committed before the lineage
+    columns existed carry null ``partition_id``/``run_id``."""
     transcripts = read_transcripts(spark, input_path)
-    if output_path is not None and resume:
-        committed = read_committed(spark, output_path)
+    if output_path is None:
+        return extract_turns(transcripts, n_partitions=n_partitions, options=options)
+    if resume:
+        committed = read_committed(spark, output_path, COMMITTED_SCHEMA)
         if committed is not None:
             transcripts = resume_anti_join(transcripts, committed)
-    extracted = extract_turns(transcripts, n_partitions=n_partitions, options=options)
-    if output_path is not None:
-        # lineage columns stamped before the write: every output row
-        # records which run committed it and which extraction task
-        # produced it, so the manifest can be derived from the written
-        # files without a second extraction pass, counts ONLY this
-        # run's increment on resume, and partition ids are extraction
-        # task ids (not read-back scan splits)
-        (
-            extracted.withColumn("partition_id", F.spark_partition_id())
-            .withColumn("run_id", F.lit(run_id))
-            .write.mode("append")
-            .parquet(output_path)
-        )
-        # read back with mergeSchema: resuming into a directory written
-        # by an older schema (e.g. pre-lineage files without run_id)
-        # must not let Spark pick an old file's schema and lose the
-        # lineage columns
-        extracted = spark.read.option("mergeSchema", "true").parquet(output_path)
-        if metrics_path is not None:
-            if "run_id" in extracted.columns:
-                # legacy rows surface run_id=null after the merge and
-                # are correctly excluded by the equality filter
-                increment = extracted.filter(F.col("run_id") == run_id).drop(
-                    "run_id"
-                )
-            else:
-                # output predates lineage stamping entirely — treat
-                # nothing as this run's increment rather than failing
-                increment = extracted.limit(0)
-            metrics_manifest(increment, run_id).write.mode("append").parquet(
-                metrics_path
-            )
-    return extracted
+    counter = None if metrics_path is None else spark.sparkContext.accumulator({}, PartitionSums())
+    lineage_increment(transcripts, run_id, n_partitions, options, counter).write.mode(
+        "append"
+    ).parquet(output_path)
+    if counter is not None:
+        write_manifest(spark, counter.value, run_id, metrics_path)
+    return spark.read.schema(COMMITTED_SCHEMA).parquet(output_path)
 
 
 def export_training_jsonl(

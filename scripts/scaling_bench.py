@@ -2,18 +2,19 @@
 """Scaling-efficiency evidence (BASELINE.json north_rule: ≥0.8 from N
 to 4N executors).
 
-No real cluster exists in this sandbox, so the evidence is the same
-job at two parallelism levels on the same input — each level in its
+Without a real cluster, the evidence is the same job at two
+parallelism levels on the same input — each level in its
 own JVM (local[N] is fixed per JVM), warm-up inside the process,
 steady-state rate over repeated passes. Two N→4N pairs are reported:
 
-- **local[2] → local[8]**: both levels fit inside distinct physical
-  cores — the clean analog of adding executor machines;
-- **local[8] → local[32]**: spans this host's SMT boundary (32
-  hardware threads over 16 physical cores), so a *hardware baseline*
-  (the same ratio for a pure-CPU tight loop and for the extraction
-  kernel under plain multiprocessing, no Spark) is measured alongside
-  and the Spark efficiency is also reported normalized to it.
+- **local[2] → local[8]**: the clean analog of adding executor
+  machines where both levels fit inside distinct physical cores;
+- **local[8] → local[32]**: on a machine with fewer than 32 physical
+  cores this pair crosses the core count (into SMT threads, or into
+  time-sharing), so a *hardware baseline* (the same ratio for a
+  pure-CPU tight loop and for the extraction kernel under plain
+  multiprocessing, no Spark) is measured alongside and the Spark
+  efficiency is also reported normalized to it.
 
 Results are appended to BENCH/BASELINE.md and printed as one JSON line.
 """

@@ -2,6 +2,8 @@
 (X1), header/footer stripping (P8/P10), template inlining (G5), raw
 text-positioning operators (T4/T5), metadata edge cases."""
 
+import re
+
 from pdftotext_spark.core.document import (
     ExtractOptions,
     extract_document,
@@ -13,6 +15,10 @@ from pdftotext_spark.core.interpreter import extract_text_raw, tokenize
 from pdftotext_spark.core.pagemap import is_page_header_or_footer
 from pdftotext_spark.core.postprocess import parse_pdf_date, rtl_reorder
 from pdftotext_spark.sources.pdfbuilder import PdfBuilder
+
+# the regex object scan ``objects._iter_objects`` replaced: the
+# reference side of its differential test
+_OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b(.*?)endobj", re.S)
 
 
 def _raw(stream: bytes) -> str:
@@ -423,7 +429,7 @@ def test_find_based_object_scan_matches_regex():
     regex on builders, edge shapes and garbage fuzz."""
     import random
 
-    from pdftotext_spark.core.objects import _OBJ_RE, _iter_objects
+    from pdftotext_spark.core.objects import _iter_objects
     from pdftotext_spark.sources import pdfbuilder as pb
 
     def ref(buf):

@@ -197,6 +197,28 @@ def test_batch_twin_matches_streaming_store_probe(spark, tmp_path):
     assert survivors == keeps == {11, 13}
 
 
+def test_streaming_store_probe_raises_on_corrupt_store(spark, tmp_path):
+    """A corrupt file in the band store fails the micro-batch instead
+    of degrading the probe into a pass-everything filter, also when a
+    good file of the same batch sorts first."""
+    import os
+
+    from pdftotext_spark.streaming.dedup import neardup_filter_batch
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
+
+    out, store = str(tmp_path / "out"), str(tmp_path / "store")
+    fn = neardup_filter_batch(out, store)
+    fn(frame([("a", 0, "alpha beta gamma delta epsilon zeta eta theta")]), 0)
+    with open(f"{store}/batch_id=0/part-99999-corrupt.snappy.parquet", "wb") as f:
+        f.write(b"not a parquet file")
+    assert os.path.exists(f"{out}/batch_id=0")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        fn(frame([("b", 0, "unique incoming text with its own words")]), 1)
+    assert not os.path.exists(f"{out}/batch_id=1")
+
+
 def _py_sig(text: str) -> list:
     """Independent pure-Python replay of the sampled-shingle MinHash
     signature (md5 slices — engine-free), for randomized differential

@@ -156,7 +156,10 @@ def test_resume_raises_on_corrupt_committed_output(spark, transcripts_dir, tmp_p
     # only a missing output dir, or one with no data files, means
     # "nothing committed"; a corrupt committed file must raise BEFORE
     # anything is extracted and appended — swallowing it would
-    # re-extract the whole input and duplicate every committed turn
+    # re-extract the whole input and duplicate every committed turn.
+    # The committed output is read by its known schema, so no schema
+    # inference opens a footer: the committed-key scan must, also when
+    # a good file sorts first
     import os
 
     from pdftotext_spark.plans.pipeline import run_extraction
@@ -165,10 +168,16 @@ def test_resume_raises_on_corrupt_committed_output(spark, transcripts_dir, tmp_p
     out = tmp_path / "out"
     out.mkdir()
     (out / "part-00000-corrupt.snappy.parquet").write_bytes(b"not a parquet file")
-    before = sorted(os.listdir(out))
-    with pytest.raises(Exception, match="not a Parquet file"):
-        run_extraction(spark, src, output_path=str(out), run_id="r1")
-    assert sorted(os.listdir(out)) == before
+    mixed = tmp_path / "mixed"
+    first = spark.read.parquet(src).filter(F.col("turn_idx") % 2 == 0)
+    first.write.parquet(str(tmp_path / "first"))
+    run_extraction(spark, str(tmp_path / "first"), output_path=str(mixed), run_id="r0")
+    (mixed / "part-99999-corrupt.snappy.parquet").write_bytes(b"not a parquet file")
+    for target in (out, mixed):
+        before = sorted(os.listdir(target))
+        with pytest.raises(Exception, match="not a Parquet file"):
+            run_extraction(spark, src, output_path=str(target), run_id="r1")
+        assert sorted(os.listdir(target)) == before
 
     empty = tmp_path / "empty"
     empty.mkdir()
