@@ -133,8 +133,9 @@ def curation_pipeline_panels(spark: SparkSession, sf_dir: str) -> DataFrame:
     constructed-input tests.
 
     100 TB shape: the base pipeline plan plus four additional narrow
-    panel scans (only gopher_repetition shuffles), intersected on a
-    slim doc_id key that AQE broadcasts."""
+    panel scans (no panel aggregates across documents;
+    gopher_repetition only spreads a single-split input), intersected
+    on a slim doc_id key that AQE broadcasts."""
     vote_keep = (
         quality_vote(spark, sf_dir)
         .filter(F.col("keep_majority"))
@@ -222,9 +223,10 @@ def quality_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     boolean cannot show.
 
     100 TB shape: each panel is its own corpus scan (the panels'
-    plans are individually audited; gopher_repetition is the only one
-    with a shuffle), joined on slim (doc_id, flag) frames that AQE
-    broadcasts — no full-width row survives past its panel."""
+    plans are individually audited; all are per-document maps, and
+    gopher_repetition's only Exchange spreads a single-split input),
+    joined on slim (doc_id, flag) frames that AQE broadcasts — no
+    full-width row survives past its panel."""
     return quality_vote_for(dedup._read(spark, sf_dir, "documents"))
 
 

@@ -43,6 +43,7 @@ from pyspark.sql.types import StructField, StructType
 from pdftotext_spark.operators.materialize import (
     materialize,
     materialize_lazy,
+    spread,
 )
 
 SHINGLE_LEN = 8
@@ -118,8 +119,14 @@ def _shingles(
     ``distinct=False`` skips the dedup shuffle — correct whenever the
     consumer is duplicate-insensitive (MinHash ``min()`` aggregation);
     the exact-Jaccard verifiers need set semantics and keep the
-    default.  ``keep_pos1`` as in :func:`_sampled_shingle_expr`."""
-    out = docs.select(
+    default.  ``keep_pos1`` as in :func:`_sampled_shingle_expr`.
+
+    A single-split input is spread round-robin across the cores first
+    (:func:`~pdftotext_spark.operators.materialize.spread`): the
+    explode multiplies each document into its shingles, and on one
+    split that whole fan-out would run on one core.  ``docs`` must
+    therefore hold no Exchange."""
+    out = spread(docs.select("doc_id", "text")).select(
         "doc_id",
         F.explode(F.expr(_sampled_shingle_expr(keep_pos1=keep_pos1))).alias(
             "sh"

@@ -21,6 +21,9 @@ Usage keeps chains readable::
     df.transform(materialize)           # eager
     df.transform(materialize_lazy)      # lazy (materializes under the
                                         # next action)
+
+:func:`spread` is the partition-count counterpart: it fans a
+single-split input out across the cores before a per-row fan-out.
 """
 
 from __future__ import annotations
@@ -74,3 +77,24 @@ def materialize_lazy(df: DataFrame) -> DataFrame:
     """Lazy variant — the cut materializes under the caller's next
     action (the cut and its consumer share one Spark job)."""
     return materialize(df, eager=False)
+
+
+def spread(df: DataFrame, *keys: str) -> DataFrame:
+    """Repartition ``df`` to ``defaultParallelism`` partitions (hashed
+    by ``keys``, round-robin without them) when it has fewer; else
+    return it unchanged.
+
+    For a per-row fan-out (an explode, a row function) over a small
+    input: one small parquet file scans as one split, so the whole
+    fan-out would run on one core, and AQE cannot see an explode's
+    row multiplier (it coalesces a keyless repartition back down), so
+    the count is pinned here. A many-file corpus already scans into
+    at least ``defaultParallelism`` splits and passes through.
+
+    Apply it only to a frame without an Exchange: under AQE,
+    ``rdd.getNumPartitions()`` on such a frame runs a job (a scan or a
+    narrow map over one runs none)."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= par:
+        return df
+    return df.repartition(par, *keys)

@@ -1,6 +1,7 @@
 """Text-analysis operators for training-data pipelines: language-ID,
 quality scoring, token counting and document fingerprinting — all
-built-in-function plans (no UDFs) with DuckDB oracles.
+built-in-function plans with DuckDB oracles, except the one row
+function that counts the Gopher repetition n-grams per document.
 
 The counting primitive is the engine-agnostic replace trick
 ``(length(s) - length(replace(s, needle, ''))) / length(needle)`` so
@@ -9,10 +10,18 @@ both engines produce identical integers with no regex-dialect risk.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from pdftotext_spark.operators.materialize import materialize, materialize_lazy
+from pdftotext_spark.functions.extract import map_rows
+from pdftotext_spark.operators.materialize import (
+    materialize,
+    materialize_lazy,
+    spread,
+)
 
 # tiny per-language stopword marker sets (n-gram heuristic; the doc
 # corpus is synthetic so this demonstrates the operator shape)
@@ -973,72 +982,75 @@ def gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     document is one paragraph and trivially passes.  Empty/short docs
     pass (their word-count rejection belongs to gopher_quality).
 
-    100 TB shape: ONE posexplode-free explode emitting <= 9 n-gram
-    rows per token position, then two hash aggregations with map-side
-    partial combine (linear in corpus tokens — NO per-row
-    O(distinct*n) lambdas for the n-gram families, unlike the
-    bounded-width line rules), and a per-doc join back.  The explode
-    fan-out is bounded (9x tokens) and shuffles compress well
-    (repeated grams)."""
+    100 TB shape: a per-document map with no shuffle.  Catalyst
+    lowercases and splits the words and computes the line/paragraph
+    counts; one row function (:func:`repetition_counts`, through
+    ``functions.extract.map_rows``) counts each document's n-grams and
+    returns their integer signature; the fractions and rounding are
+    Catalyst again.  A task holds one document's grams at a time, so
+    memory is bounded by the largest document, not the corpus; only
+    a single-split input is spread across the cores first
+    (:func:`~pdftotext_spark.operators.materialize.spread`)."""
     return gopher_repetition_for(_read(spark, sf_dir, "documents"))
+
+
+# the integer n-gram signature per document: t<n> top-n-gram chars,
+# d<n> duplicate-n-gram chars
+REP_NS = [*GOPHER_REP_TOP, *GOPHER_REP_DUP]
+REPETITION_FIELDS = [
+    f"{'t' if n in GOPHER_REP_TOP else 'd'}{n}" for n in REP_NS
+]
+
+
+def repetition_counts(a) -> list[tuple]:
+    """Row function of :func:`repetition_signature`: over the word
+    array ``a``, ``t<n>`` = max over distinct n-grams with count >= 2
+    of ``count * len(gram)`` (0 if none) for n = 2..4, and ``d<n>`` =
+    sum over distinct n-grams of ``(count - 1) * len(gram)`` for
+    n = 5..10, where a gram is its words joined by one space.  One
+    row per document, also for an empty or null array."""
+    words = [] if a is None else list(a)
+    out = []
+    for n in REP_NS:
+        # a gram is a tuple of words: joined, its length is the word
+        # lengths plus n - 1 spaces
+        reps = [
+            (c, sum(map(len, g)) + n - 1)
+            for g, c in Counter(zip(*[words[k:] for k in range(n)])).items()
+            if c >= 2
+        ]
+        if n in GOPHER_REP_TOP:
+            out.append(max((c * chars for c, chars in reps), default=0))
+        else:
+            out.append(sum((c - 1) * chars for c, chars in reps))
+    return [tuple(out)]
+
+
+def repetition_signature(df: DataFrame, keys: list[str]) -> DataFrame:
+    """``keys`` + :data:`REPETITION_FIELDS` (long) per row of ``df``,
+    from its word array column ``a``, by :func:`repetition_counts`."""
+    schema = T.StructType(
+        [df.schema[k] for k in keys]
+        + [T.StructField(c, T.LongType()) for c in REPETITION_FIELDS]
+    )
+    return map_rows(df, keys, ["a"], schema, repetition_counts)
 
 
 def gopher_repetition_for(docs: DataFrame) -> DataFrame:
     """Core of :func:`gopher_repetition` over an arbitrary
     ``(doc_id, text)`` frame (constructed-input test surface)."""
-    ns = sorted(GOPHER_REP_TOP) + sorted(GOPHER_REP_DUP)
+    # the row function fans out up to 9 grams per word, so a one-split
+    # input would count the whole corpus on one core
+    docs = spread(
+        docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text"),
+        "doc_id",
+    )
     base = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
+        "doc_id",
         F.length("text").cast("long").alias("tchars"),
         F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("a"),
         F.expr("split(text, chr(10))").alias("lines"),
         F.expr("split(text, chr(10) || chr(10))").alias("paras"),
-    )
-    # small-input spread: the 9x explode below multiplies rows before
-    # any exchange, so a few-partition scan (one small parquet file)
-    # serializes the whole fan-out on one core. AQE cannot see the
-    # multiplier (it coalesces a keyless repartition back down), so
-    # pin the count explicitly; a real many-file corpus skips this —
-    # its scan already has >= defaultParallelism partitions. Measured
-    # 12.1 -> ~3 s at sf0.1/local[32].
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < par:
-        base = base.repartition(par, "doc_id")
-    grams = base.select(
-        "doc_id",
-        F.explode(
-            F.flatten(
-                F.expr(
-                    f"transform(array({', '.join(map(str, ns))}), n -> "
-                    "CASE WHEN size(a) >= n THEN "
-                    "transform(sequence(1, size(a) - n + 1), "
-                    "i -> named_struct('n', n, 'g', "
-                    "concat_ws(' ', slice(a, i, n)))) "
-                    "ELSE array() END)"
-                )
-            )
-        ).alias("s"),
-    ).select("doc_id", F.col("s.n").alias("n"), F.col("s.g").alias("g"))
-    per_n = (
-        grams.groupBy("doc_id", "n", "g")
-        .agg(F.count("*").alias("cnt"))
-        .groupBy("doc_id", "n")
-        .agg(
-            F.max(
-                F.when(F.col("cnt") >= 2, F.col("cnt") * F.length("g"))
-            ).alias("top_chars"),
-            F.sum((F.col("cnt") - 1) * F.length("g")).alias("dup_chars"),
-        )
-    )
-    sig = per_n.groupBy("doc_id").agg(
-        *[
-            F.max(F.when(F.col("n") == k, F.col("top_chars"))).alias(f"t{k}")
-            for k in GOPHER_REP_TOP
-        ],
-        *[
-            F.max(F.when(F.col("n") == k, F.col("dup_chars"))).alias(f"d{k}")
-            for k in GOPHER_REP_DUP
-        ],
     )
     # line/paragraph rules: per-row lambdas bounded by block count
     lineside = base.select(
@@ -1060,13 +1072,12 @@ def gopher_repetition_for(docs: DataFrame) -> DataFrame:
             "aggregate(array_distinct(paras), 0L, (acc, d) -> acc + "
             "(size(filter(paras, x -> x = d)) - 1) * length(d))"
         ).alias("dup_para_chars"),
+        "a",
     )
-    m = lineside.join(sig, "doc_id", "left")
+    # the line-side integers ride through the row function as keys
+    m = repetition_signature(lineside, lineside.columns[:-1])
     tc = F.greatest(F.col("tchars"), F.lit(1))
-    fr = {f"t{k}": F.coalesce(F.col(f"t{k}"), F.lit(0)) / tc for k in GOPHER_REP_TOP}
-    fr.update(
-        {f"d{k}": F.coalesce(F.col(f"d{k}"), F.lit(0)) / tc for k in GOPHER_REP_DUP}
-    )
+    fr = {c: F.col(c) / tc for c in REPETITION_FIELDS}
     line_frac = F.col("dup_line_cnt") / F.col("n_lines")
     line_char_frac = F.col("dup_line_chars") / tc
     ok_lines = (line_frac <= GOPHER_MAX_DUP_LINE_FRAC) & (
@@ -1107,7 +1118,7 @@ def gopher_repetition_for(docs: DataFrame) -> DataFrame:
     )
 
 
-_GREP_NS = ", ".join(str(n) for n in sorted({*GOPHER_REP_TOP, *GOPHER_REP_DUP}))
+_GREP_NS = ", ".join(map(str, REP_NS))
 
 GOPHER_REPETITION_SQL = f"""
 WITH base AS (
@@ -1826,17 +1837,15 @@ def _bigram_lm(spark: SparkSession, sf_dir: str):
     docs = _read(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
-    base = docs.select(
+    # spread before the token explodes: a one-file scan would run
+    # them on one core
+    base = spread(
+        docs.select(
+            "doc_id",
+            F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("a"),
+        ),
         "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("a"),
     )
-    # small-input spread before the token explodes — AQE can't see an
-    # explode multiplier, and a one-file scan serializes the fan-out
-    # on one core; a many-file corpus already exceeds
-    # defaultParallelism and skips this (gopher_repetition rationale).
-    par = spark.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < par:
-        base = base.repartition(par, "doc_id")
     uni = base.select("doc_id", F.explode("a").alias("tok"))
     vocab = (
         uni.groupBy("tok").agg(F.count("*").alias("cnt")).transform(materialize)

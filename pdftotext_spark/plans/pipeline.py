@@ -91,6 +91,18 @@ def session_confs() -> dict[str, str]:
       splits sized to ~seconds-of-CPU keep every core fed; pure-scan
       relational work on a cluster wants the IO-optimal 128m–1g
       instead.
+
+    ``spark.python.sql.dataFrameDebugging.enabled`` is off: with it on,
+    PySpark wraps every ``pyspark.sql.functions`` call so that it
+    captures the Python call stack and sends it to the JVM (several
+    py4j round trips per call). Building the curation queries makes
+    thousands of such calls: three ``quality_vote_for`` constructions
+    over sf0.001 ``documents`` (local[4], 4-core host) made about
+    33,600 py4j calls in 1.1 s with it on, and 10,300 in 0.8 s with it
+    off. The cost: a DataFrame
+    error's "== DataFrame ==" context no longer names the Python
+    line that built the failing column; its error class and SQLSTATE
+    are unchanged.
     """
     import os
 
@@ -124,6 +136,8 @@ def session_confs() -> dict[str, str]:
         # for the application lifetime (must be set before the context
         # starts — a session conf, not settable from materialize()).
         "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+        # no Python call-site capture per functions call (see above)
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
 
 

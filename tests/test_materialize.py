@@ -65,3 +65,48 @@ def test_containment_pairs_identical_under_reliable_checkpointing(spark, tmp_pat
         _unset_checkpoint_dir(spark)
     assert baseline == reliable
     assert len(baseline) > 0
+
+
+def _jobs_of(spark, fn):
+    """``fn()``'s result and the Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"spread-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    return out, list(jobs)
+
+
+def test_spread_passes_a_many_split_scan_through(spark, tmp_path):
+    """A scan that already has defaultParallelism splits (a 4-file
+    directory) comes back as the same frame: no Exchange, no job."""
+    from pdftotext_spark.operators.materialize import spread
+
+    par = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "many")
+    spark.range(400).repartition(par).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() >= par
+    out, jobs = _jobs_of(spark, lambda: spread(df, "id"))
+    assert out is df
+    assert jobs == []
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+
+
+def test_spread_fans_a_single_split_scan_out_without_a_job(spark):
+    """A one-file scan is repartitioned to defaultParallelism, and
+    deciding so launches no job."""
+    from pdftotext_spark.operators.materialize import spread
+
+    par = spark.sparkContext.defaultParallelism
+    df = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    assert df.rdd.getNumPartitions() < par
+    out, jobs = _jobs_of(spark, lambda: spread(df))
+    assert jobs == []
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert f"Exchange RoundRobinPartitioning({par})" in plan
+    assert out.count() == df.count()

@@ -420,18 +420,54 @@ def test_top_dup_spans_single_scan_and_topk(spark):
     assert "LeftSemi" not in plan
 
 
-def test_gopher_repetition_single_explode_broadcast_join(spark):
-    """r6: the Gopher repetition panel is ONE bounded gram explode
-    (<= 9 rows per token) feeding two map-side-combining hash aggs,
-    with the slim per-doc signal frame BROADCAST back onto the doc
-    frame — no second corpus scan, no shuffled join of the big side."""
+def test_gopher_repetition_one_row_function(spark, monkeypatch):
+    """The Gopher repetition panel counts each document's n-grams in
+    ONE row function: no gram explode, exactly one MapInPandas, no
+    shuffled join. The pin fails on the Catalyst twin's plan (one
+    explode, two aggregations and a join back)."""
+    from test_gopher_quality import catalyst_repetition_signature
+
     from pdftotext_spark.operators import textstats
 
-    plan = _plan(textstats.gopher_repetition(spark, SF))
-    assert plan.count("Generate explode") == 1
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "partial_" in plan
+    def one_row_function(plan):
+        return (
+            "Generate" not in plan
+            and plan.count("MapInPandas") == 1
+            and "SortMergeJoin" not in plan
+        )
+
+    assert one_row_function(_plan(textstats.gopher_repetition(spark, SF)))
+    monkeypatch.setattr(
+        textstats, "repetition_signature", catalyst_repetition_signature
+    )
+    assert not one_row_function(_plan(textstats.gopher_repetition(spark, SF)))
+
+
+def _subtree(lines, i):
+    """Plan lines of the node on ``lines[i]`` and everything below it."""
+    depth = len(lines[i]) - len(lines[i].lstrip(" :+-"))
+    end = i + 1
+    while end < len(lines) and len(lines[end]) - len(lines[end].lstrip(" :+-")) > depth:
+        end += 1
+    return lines[i:end]
+
+
+def test_minhash_shingle_explode_spread_once(spark):
+    """A single-file corpus scans as one split, so ``_shingles`` spreads
+    it before the shingle explode: below every shingle Generate the
+    only Exchange is one round-robin repartition."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    assert docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    lines = _plan(dedup.minhash_lsh_pairs(spark, SF)).splitlines()
+    shingle = [
+        i for i, ln in enumerate(lines)
+        if "Generate explode(filter(transform(sequence" in ln
+    ]
+    assert shingle
+    for i in shingle:
+        below = [ln for ln in _subtree(lines, i) if "Exchange" in ln]
+        assert len(below) == 1, below
+        assert "RoundRobinPartitioning" in below[0], below
 
 
 def test_c4_quality_zero_shuffle(spark):

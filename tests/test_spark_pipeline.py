@@ -731,3 +731,18 @@ def test_export_training_jsonl_roundtrip(spark, transcripts_dir, tmp_path):
     import glob
 
     assert glob.glob(f"{out}/*.gz")  # compressed shards
+
+
+def test_session_turns_dataframe_debugging_off(spark):
+    """``session_confs`` turns off PySpark's per-call Python call-site
+    capture; a DataFrame error keeps its error class."""
+    from pyspark.errors import ArithmeticException
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    )
+    assert not is_debugging_enabled()
+    with pytest.raises(ArithmeticException) as err:
+        spark.range(1).select(F.col("id") / F.col("id")).collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
