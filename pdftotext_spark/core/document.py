@@ -19,6 +19,7 @@ from pdftotext_spark.core.fonts import FontTable, is_font, is_font_map
 from pdftotext_spark.core.interpreter import (
     Fragment,
     assemble_fragments,
+    count_statistics,
     extract_fragments,
     extract_text_raw,
 )
@@ -311,11 +312,12 @@ def extract_document(buf: bytes, options: ExtractOptions | None = None) -> Extra
             res.fragments.extend(frags)
             page_text = assemble_fragments(frags)
         else:
+            if opts.enhanced_statistics:
+                count_statistics(stream, res.stats)
             page_text = extract_text_raw(
                 stream,
                 fonts,
                 page=pno,
-                stats=res.stats if opts.enhanced_statistics else None,
                 repeat_separator=opts.repeat_separator,
                 ignore_text_leading=opts.ignore_text_leading,
             )

@@ -245,175 +245,34 @@ def font_decoder(font: Font | None) -> Callable[[bytes], str]:
 # ------------------------------------------------------------- raw mode T5
 
 
+def count_statistics(stream: bytes, stats: dict[str, int]) -> None:
+    """Add one content stream to the M5 / PDFOPT_ENHANCED_STATISTICS
+    counters (PdfToText.php:1686–1711): its size before and after the
+    pre-strip, then one count per top-level token of the stripped
+    stream, under ``operands`` or its operator's family."""
+    stats["text_size"] = stats.get("text_size", 0) + len(stream)
+    stream = strip_useless_instructions(stream)
+    stats["optimized_text_size"] = stats.get("optimized_text_size", 0) + len(stream)
+    for kind, val in tokenize(stream):
+        key = _OP_FAMILIES.get(val, "ignored_ops") if kind == "op" else "operands"
+        stats[key] = stats.get(key, 0) + 1
+
+
 def extract_text_raw(
     stream: bytes,
     fonts: FontTable,
     page: int | None = None,
-    separator: str = " ",
-    stats: dict[str, int] | None = None,
     repeat_separator: bool = False,
     ignore_text_leading: bool = False,
 ) -> str:
-    """Raw-mode extraction (PdfToText.php:3327–3845).
-
-    Dispatches to the fused scanner (:func:`_extract_text_raw_fused`,
-    the hot path: one regex pass, no token tuples) unless ``stats``
-    accounting is requested, which keeps the token-loop reference
-    implementation — the two are differential-tested against each
-    other and against the independent layout interpreter.
-    """
-    if stats is None:
-        return _extract_text_raw_fused(
-            stream, fonts, page, separator, repeat_separator,
-            ignore_text_leading,
-        )
-    return _extract_text_raw_tokens(
-        stream, fonts, page, separator, stats, repeat_separator,
-        ignore_text_leading,
-    )
-
-
-def _extract_text_raw_tokens(
-    stream: bytes,
-    fonts: FontTable,
-    page: int | None = None,
-    separator: str = " ",
-    stats: dict[str, int] | None = None,
-    repeat_separator: bool = False,
-    ignore_text_leading: bool = False,
-) -> str:
-    """Token-loop raw extraction (reference path; also accumulates the
-    M5 / PDFOPT_ENHANCED_STATISTICS counters, PdfToText.php:1686–1711:
-    raw vs stripped stream sizes and counts per operator family)."""
-    if stats is not None:
-        stats["text_size"] = stats.get("text_size", 0) + len(stream)
-    stream = strip_useless_instructions(stream)
-    if stats is not None:
-        stats["optimized_text_size"] = (
-            stats.get("optimized_text_size", 0) + len(stream)
-        )
-    out: list[str] = []
-    operands: list[Token] = []
-    font: Font | None = fonts.default_font()
-    font_size = DEFAULT_FONT_SIZE
-    leading = 0.0
-    last_y: float | None = None
-
-    def newline_count(dy: float) -> int:
-        if dy >= 0:
-            return 1
-        unit = max(leading, font_size, 1.0)
-        return max(1, min(MAX_BLANK_LINES, int(round(-dy / unit))))
-
-    def emit_newlines(k: int) -> None:
-        # trim trailing spaces on the completed line, then break
-        if out and out[-1].endswith(" "):
-            out[-1] = out[-1].rstrip(" ")
-        out.append("\n" * k)
-
-    def move_to_y(y: float, relative_dy: float | None = None) -> None:
-        nonlocal last_y
-        if last_y is None:
-            last_y = y
-            return
-        dy = y - last_y if relative_dy is None else relative_dy
-        if dy != 0:
-            emit_newlines(newline_count(dy))
-        last_y = y
-
-    def append_text(tok: Token) -> None:
-        out.append(decode_pdf_string(tok, font))
-
-    for tok in tokenize(stream):
-        kind = tok[0]
-        if kind in ("num", "str", "hex", "arr", "name"):
-            if stats is not None:
-                stats["operands"] = stats.get("operands", 0) + 1
-            operands.append(tok)
-            continue
-        op = tok[1]
-        if stats is not None:
-            fam = _OP_FAMILIES.get(op, "ignored_ops")
-            stats[fam] = stats.get(fam, 0) + 1
-        if op == "Tf":
-            if operands and operands[-1][0] == "num":
-                font_size = abs(operands[-1][1]) or DEFAULT_FONT_SIZE
-            if len(operands) >= 2 and operands[-2][0] == "name":
-                f = fonts.resolve(operands[-2][1], page)
-                if f is not None:
-                    font = f
-        elif op == "TL":
-            # PDFOPT_IGNORE_TEXT_LEADING (PdfToText.php:3822)
-            if not ignore_text_leading and operands and operands[-1][0] == "num":
-                leading = abs(operands[-1][1])
-        elif op == "Tm":
-            nums = [t[1] for t in operands if t[0] == "num"]
-            if len(nums) >= 6:
-                move_to_y(nums[5])
-        elif op in ("Td", "TD"):
-            nums = [t[1] for t in operands if t[0] == "num"]
-            if len(nums) >= 2:
-                if op == "TD" and not ignore_text_leading:
-                    leading = abs(nums[1])
-                if last_y is None:
-                    last_y = 0.0
-                move_to_y(last_y + nums[1], relative_dy=nums[1])
-        elif op == "T*":
-            if last_y is None:
-                last_y = 0.0
-            dy = -(leading or font_size)
-            move_to_y(last_y + dy, relative_dy=dy)
-        elif op == "Tj":
-            if operands and operands[-1][0] in ("str", "hex"):
-                append_text(operands[-1])
-        elif op in ("'", '"'):
-            if last_y is None:
-                last_y = 0.0
-            dy = -(leading or font_size)
-            move_to_y(last_y + dy, relative_dy=dy)
-            if operands and operands[-1][0] in ("str", "hex"):
-                append_text(operands[-1])
-        elif op == "TJ":
-            if operands and operands[-1][0] == "arr":
-                for el in operands[-1][1]:
-                    if el[0] in ("str", "hex"):
-                        append_text(el)
-                    elif el[0] == "num" and el[1] < -MIN_SPACE_WIDTH:
-                        if repeat_separator:
-                            # PDFOPT_REPEAT_SEPARATOR: repeat by
-                            # ⌊offset / max(1000, MinSpaceWidth)⌋
-                            # (T11, PdfToText.php:5497–5517)
-                            n_rep = max(
-                                1, int(-el[1] // max(1000.0, MIN_SPACE_WIDTH))
-                            )
-                            out.append(separator * n_rep)
-                        else:
-                            out.append(separator)
-        elif op == "Do":
-            emit_newlines(1)  # PdfToText.php:3925–3928
-        operands.clear()
-
-    text = "".join(out)
-    # normalize: strip trailing spaces per line, collapse >MAX blank runs
-    lines = [ln.rstrip() for ln in text.split("\n")]
-    return "\n".join(lines).strip("\n")
-
-
-def _extract_text_raw_fused(
-    stream: bytes,
-    fonts: FontTable,
-    page: int | None = None,
-    separator: str = " ",
-    repeat_separator: bool = False,
-    ignore_text_leading: bool = False,
-) -> str:
-    """Fused scan+interpret raw extraction — semantics identical to
-    :func:`_extract_text_raw_tokens` (differential-tested), but one
-    regex pass with register-tracked operands instead of materializing
-    a token list: no per-token tuples, no operand list, byte-level op
-    dispatch, and one string decoder per font selection
-    (:func:`font_decoder`). This loop is the single hottest code in the
-    engine: most of the core's CPU on the ``extract_longpdf`` workload."""
+    """Raw-mode extraction (PdfToText.php:3327–3845) as one fused
+    scan+interpret pass: one regex pass with register-tracked operands
+    instead of a token list — no per-token tuples, no operand list,
+    byte-level op dispatch, and one string decoder per font selection
+    (:func:`font_decoder`). Its differential reference is the token-loop
+    interpreter in ``tests/test_core_semantics.py``. This loop is the
+    single hottest code in the engine: most of the core's CPU on the
+    ``extract_longpdf`` workload."""
     stream = strip_useless_instructions(stream)
     out: list[str] = []
     # the current font's string decode, re-resolved at each Tf that
@@ -426,7 +285,7 @@ def _extract_text_raw_fused(
     # operand registers (kinds: 0 none, 1 string, 3 num, 4 name,
     # 5 TJ-array); a string, literal or hex, is held as its bytes after
     # the escape or hex step, so showing it is one call of `decode`;
-    # `nums` mirrors the token path's per-op float list
+    # `nums` mirrors the token-loop reference's per-op float list
     prev_kind = 0
     prev_val: object = None
     last_kind = 0
@@ -471,9 +330,9 @@ def _extract_text_raw_fused(
             kind = m.lastindex
             if arr_depth:
                 # inside a TJ array: tokens are collected (depth 1
-                # only), never dispatched — mirrors the token path,
-                # where array elements land in a nested list the
-                # interpreter iterates
+                # only), never dispatched — mirrors the token-loop
+                # reference, where array elements land in a nested list
+                # the interpreter iterates
                 if kind == 5:  # ]
                     arr_depth -= 1
                     if arr_depth == 0:
@@ -512,7 +371,7 @@ def _extract_text_raw_fused(
                     elif kind == 3:  # hex string
                         arr.append((1, hex_string_bytes(m.group(3)[1:-1])))
                     # names/operators/junk inside arrays: collected as
-                    # inert elements by the token path, ignored by TJ
+                    # inert elements by the token loop, ignored by TJ
                 continue
             if kind == 7:  # num
                 prev_kind, prev_val = last_kind, last_val
@@ -548,9 +407,9 @@ def _extract_text_raw_fused(
                                             // max(1000.0, MIN_SPACE_WIDTH)
                                         ),
                                     )
-                                    out.append(separator * n_rep)
+                                    out.append(" " * n_rep)
                                 else:
-                                    out.append(separator)
+                                    out.append(" ")
                 elif op == b"Tf":
                     if last_kind == 3:
                         font_size = abs(last_val) or DEFAULT_FONT_SIZE

@@ -16,7 +16,6 @@ from dataclasses import dataclass, field
 from pdftotext_spark.core import filters
 
 _HEADER_RE = re.compile(rb"%PDF-(\d+)\.(\d+)")
-_STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\n?endstream", re.S)
 _TRAILER_RE = re.compile(rb"trailer\s*<<(.*?)>>", re.S)
 _ENCRYPT_RE = re.compile(rb"/Encrypt\s+(\d+)\s+\d+\s+R")
 _FILE_ID_RE = re.compile(rb"/ID\s*\[\s*<([0-9A-Fa-f]*)>\s*<([0-9A-Fa-f]*)>")

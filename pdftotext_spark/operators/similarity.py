@@ -1154,30 +1154,6 @@ def _pair_cosine_pd(it):
         yield pd.DataFrame(cols)
 
 
-def _knn_band_structs() -> list[Column]:
-    """One (band_idx, band_bits) struct per band, band key computed
-    directly from its 4 planes (no 64-bit pack — bit 63 would overflow
-    a signed long).  Differential twin of :func:`_knn_band_keys_pd`
-    (kept per the perf-rewrite twin rule; equality pinned by test)."""
-    out = []
-    for i in range(KNN_SRP_BANDS):
-        key = None
-        for j in range(KNN_SRP_BAND_BITS):
-            plane = _KNN_PLANES_LITERALS[i * KNN_SRP_BAND_BITS + j]
-            arr = F.array(*[F.lit(x) for x in plane])
-            bit = (
-                F.when(_dot(F.col("embedding"), arr) > 0, F.lit(1 << j))
-                .otherwise(F.lit(0))
-            )
-            key = bit if key is None else key + bit
-        out.append(
-            F.struct(
-                F.lit(i).alias("band_idx"), key.cast("long").alias("band_bits")
-            )
-        )
-    return out
-
-
 def knn_graph_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate k-nearest-neighbor GRAPH: for every vector, its
     top-k cosine neighbors among SRP band-collision candidates — the
@@ -1270,7 +1246,7 @@ def knn_graph_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # 16 knn bands, each key summed from its own 4 planes (mirrors
-# _knn_band_structs exactly — same md5 plane family, same bit order)
+# _knn_band_keys_pd exactly — same md5 plane family, same bit order)
 _KNN_BANDS_SQL = " UNION ALL ".join(
     f"SELECT CAST(vec_id AS BIGINT) AS vec_id, embedding, {i} AS band_idx, "
     + " + ".join(

@@ -2,6 +2,7 @@
 (X1), header/footer stripping (P8/P10), template inlining (G5), raw
 text-positioning operators (T4/T5), metadata edge cases."""
 
+import random
 import re
 
 from pdftotext_spark.core.document import (
@@ -11,7 +12,17 @@ from pdftotext_spark.core.document import (
     strip_header_footer_spans,
 )
 from pdftotext_spark.core.fonts import FontTable
-from pdftotext_spark.core.interpreter import extract_text_raw, tokenize
+from pdftotext_spark.core.interpreter import (
+    _OP_FAMILIES,
+    DEFAULT_FONT_SIZE,
+    MAX_BLANK_LINES,
+    MIN_SPACE_WIDTH,
+    count_statistics,
+    decode_pdf_string,
+    extract_text_raw,
+    strip_useless_instructions,
+    tokenize,
+)
 from pdftotext_spark.core.pagemap import is_page_header_or_footer
 from pdftotext_spark.core.postprocess import parse_pdf_date, rtl_reorder
 from pdftotext_spark.sources.pdfbuilder import PdfBuilder
@@ -19,6 +30,8 @@ from pdftotext_spark.sources.pdfbuilder import PdfBuilder
 # the regex object scan ``objects._iter_objects`` replaced: the
 # reference side of its differential test
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b(.*?)endobj", re.S)
+# the regex stream split ``objects.split_object`` replaced
+_STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\n?endstream", re.S)
 
 
 def _raw(stream: bytes) -> str:
@@ -269,6 +282,134 @@ def test_simplify_unicode_option():
 # ------------------------------------- fused-vs-token differential guards
 
 
+def _extract_text_raw_tokens(
+    stream: bytes,
+    fonts: FontTable,
+    page: int | None = None,
+    stats: dict[str, int] | None = None,
+    repeat_separator: bool = False,
+    ignore_text_leading: bool = False,
+) -> str:
+    """Token-loop raw extraction: the interpreter the fused
+    ``extract_text_raw`` replaced, kept as its differential reference.
+    It also accumulates the M5 / PDFOPT_ENHANCED_STATISTICS counters
+    (PdfToText.php:1686–1711) inline, the reference for
+    ``count_statistics``."""
+    if stats is not None:
+        stats["text_size"] = stats.get("text_size", 0) + len(stream)
+    stream = strip_useless_instructions(stream)
+    if stats is not None:
+        stats["optimized_text_size"] = (
+            stats.get("optimized_text_size", 0) + len(stream)
+        )
+    out: list[str] = []
+    operands: list[tuple] = []
+    font = fonts.default_font()
+    font_size = DEFAULT_FONT_SIZE
+    leading = 0.0
+    last_y: float | None = None
+
+    def newline_count(dy: float) -> int:
+        if dy >= 0:
+            return 1
+        unit = max(leading, font_size, 1.0)
+        return max(1, min(MAX_BLANK_LINES, int(round(-dy / unit))))
+
+    def emit_newlines(k: int) -> None:
+        # trim trailing spaces on the completed line, then break
+        if out and out[-1].endswith(" "):
+            out[-1] = out[-1].rstrip(" ")
+        out.append("\n" * k)
+
+    def move_to_y(y: float, relative_dy: float | None = None) -> None:
+        nonlocal last_y
+        if last_y is None:
+            last_y = y
+            return
+        dy = y - last_y if relative_dy is None else relative_dy
+        if dy != 0:
+            emit_newlines(newline_count(dy))
+        last_y = y
+
+    def append_text(tok: tuple) -> None:
+        out.append(decode_pdf_string(tok, font))
+
+    for tok in tokenize(stream):
+        kind = tok[0]
+        if kind in ("num", "str", "hex", "arr", "name"):
+            if stats is not None:
+                stats["operands"] = stats.get("operands", 0) + 1
+            operands.append(tok)
+            continue
+        op = tok[1]
+        if stats is not None:
+            fam = _OP_FAMILIES.get(op, "ignored_ops")
+            stats[fam] = stats.get(fam, 0) + 1
+        if op == "Tf":
+            if operands and operands[-1][0] == "num":
+                font_size = abs(operands[-1][1]) or DEFAULT_FONT_SIZE
+            if len(operands) >= 2 and operands[-2][0] == "name":
+                f = fonts.resolve(operands[-2][1], page)
+                if f is not None:
+                    font = f
+        elif op == "TL":
+            # PDFOPT_IGNORE_TEXT_LEADING (PdfToText.php:3822)
+            if not ignore_text_leading and operands and operands[-1][0] == "num":
+                leading = abs(operands[-1][1])
+        elif op == "Tm":
+            nums = [t[1] for t in operands if t[0] == "num"]
+            if len(nums) >= 6:
+                move_to_y(nums[5])
+        elif op in ("Td", "TD"):
+            nums = [t[1] for t in operands if t[0] == "num"]
+            if len(nums) >= 2:
+                if op == "TD" and not ignore_text_leading:
+                    leading = abs(nums[1])
+                if last_y is None:
+                    last_y = 0.0
+                move_to_y(last_y + nums[1], relative_dy=nums[1])
+        elif op == "T*":
+            if last_y is None:
+                last_y = 0.0
+            dy = -(leading or font_size)
+            move_to_y(last_y + dy, relative_dy=dy)
+        elif op == "Tj":
+            if operands and operands[-1][0] in ("str", "hex"):
+                append_text(operands[-1])
+        elif op in ("'", '"'):
+            if last_y is None:
+                last_y = 0.0
+            dy = -(leading or font_size)
+            move_to_y(last_y + dy, relative_dy=dy)
+            if operands and operands[-1][0] in ("str", "hex"):
+                append_text(operands[-1])
+        elif op == "TJ":
+            if operands and operands[-1][0] == "arr":
+                for el in operands[-1][1]:
+                    if el[0] in ("str", "hex"):
+                        append_text(el)
+                    elif el[0] == "num" and el[1] < -MIN_SPACE_WIDTH:
+                        if repeat_separator:
+                            # PDFOPT_REPEAT_SEPARATOR: repeat by
+                            # ⌊offset / max(1000, MinSpaceWidth)⌋
+                            # (T11, PdfToText.php:5497–5517)
+                            n_rep = max(
+                                1, int(-el[1] // max(1000.0, MIN_SPACE_WIDTH))
+                            )
+                            out.append(" " * n_rep)
+                        else:
+                            out.append(" ")
+        elif op == "Do":
+            emit_newlines(1)  # PdfToText.php:3925–3928
+        operands.clear()
+
+    text = "".join(out)
+    # normalize: strip trailing spaces per line, collapse >MAX blank runs
+    lines = [ln.rstrip() for ln in text.split("\n")]
+    return "\n".join(lines).strip("\n")
+
+
+
 _TOUNICODE_2BYTE = b"""/CIDInit /ProcSet findresource begin 12 dict begin begincmap
 1 begincodespacerange <0000> <FFFF> endcodespacerange
 2 beginbfchar
@@ -329,41 +470,39 @@ _FONT_BATTERY = [
 ]
 
 
+_OP_BATTERY = [
+    b"BT /F1 12 Tf 1 0 0 1 72 720 Tm (Hello) Tj ET",
+    b"BT (a) Tj 0 -14 Td (b) Tj 0 -28 Td (c) Tj ET",
+    b"BT [(ker) -250 (ned)] TJ ET",
+    b"BT [(a) -50 (b) -1500 (c)] TJ ET",
+    b"BT (line1) ' (line2) ' ET",
+    b'BT 2 3 (aw ac quoted) " ET',
+    b"BT /F9 7.5 Tf <48656C6C 6F> Tj ET",
+    b"BT T* (x) Tj T* (y) Tj ET",
+    b"BT 14 TL (p) ' (q) ' ET",
+    b"BT /XX Do (t) Tj ET",
+    b"BT ((nested) parens) Tj ET",
+    b"BT [((nst) a) -300 (z)] TJ ET",
+    b"BT [ [(inner)] (outer) ] TJ ET",
+    b"BT << /Junk [)] >> (after) Tj ET",
+    b"BT [ << /D [ ] >> (el) ] TJ ET",
+    b"BT ] (stray) Tj ET",
+    b"BT /F1 Tf (nosize) Tj ET",
+    b"BT 12 Tf (noname) Tj ET",
+    b"garbage \x01\x02 BT (ok) Tj ET trailing",
+    b"BT (esc \\( paren \\n) Tj ET",
+    b"BT <4 8> Tj ET",
+    b"",
+]
+
+
 def test_fused_raw_interpreter_matches_token_path():
     """The fused scan+interpret fast path must be byte-identical to the
     token-loop reference on the full operator battery."""
-    from pdftotext_spark.core.interpreter import (
-        _extract_text_raw_fused,
-        _extract_text_raw_tokens,
-        font_decoder,
-    )
+    from pdftotext_spark.core.interpreter import font_decoder
 
-    battery = [
-        b"BT /F1 12 Tf 1 0 0 1 72 720 Tm (Hello) Tj ET",
-        b"BT (a) Tj 0 -14 Td (b) Tj 0 -28 Td (c) Tj ET",
-        b"BT [(ker) -250 (ned)] TJ ET",
-        b"BT [(a) -50 (b) -1500 (c)] TJ ET",
-        b"BT (line1) ' (line2) ' ET",
-        b'BT 2 3 (aw ac quoted) " ET',
-        b"BT /F9 7.5 Tf <48656C6C 6F> Tj ET",
-        b"BT T* (x) Tj T* (y) Tj ET",
-        b"BT 14 TL (p) ' (q) ' ET",
-        b"BT /XX Do (t) Tj ET",
-        b"BT ((nested) parens) Tj ET",
-        b"BT [((nst) a) -300 (z)] TJ ET",
-        b"BT [ [(inner)] (outer) ] TJ ET",
-        b"BT << /Junk [)] >> (after) Tj ET",
-        b"BT [ << /D [ ] >> (el) ] TJ ET",
-        b"BT ] (stray) Tj ET",
-        b"BT /F1 Tf (nosize) Tj ET",
-        b"BT 12 Tf (noname) Tj ET",
-        b"garbage \x01\x02 BT (ok) Tj ET trailing",
-        b"BT (esc \\( paren \\n) Tj ET",
-        b"BT <4 8> Tj ET",
-        b"",
-    ]
-    for s in battery:
-        assert _extract_text_raw_fused(s, FontTable()) == _extract_text_raw_tokens(
+    for s in _OP_BATTERY:
+        assert extract_text_raw(s, FontTable()) == _extract_text_raw_tokens(
             s, FontTable()
         ), s
     # per-font decoders (/Differences, 2-byte ToUnicode codes, Tf
@@ -374,10 +513,10 @@ def test_fused_raw_interpreter_matches_token_path():
     assert font_decoder(ft.resolve("F3"))(b"\x00\x01\x00\x11\x00") == "Hb"
     for first in ("plain", "differences", "two_byte", "winansi"):
         for s in _FONT_BATTERY:
-            fused = _extract_text_raw_fused(s, _mixed_font_table(first))
+            fused = extract_text_raw(s, _mixed_font_table(first))
             assert fused == _extract_text_raw_tokens(s, _mixed_font_table(first)), (first, s)
-    assert _extract_text_raw_fused(_FONT_BATTERY[8], ft) == "BCBC\u00e9\u20ac"
-    assert _extract_text_raw_fused(_FONT_BATTERY[-2], ft) == "t\u00e9il"
+    assert extract_text_raw(_FONT_BATTERY[8], ft) == "BCBC\u00e9\u20ac"
+    assert extract_text_raw(_FONT_BATTERY[-2], ft) == "t\u00e9il"
 
 
 def test_token_regex_matches_after_any_whitespace_run():
@@ -392,15 +531,16 @@ def test_token_regex_matches_after_any_whitespace_run():
     assert _MASTER_RE.match(b"\x00\x0c \n").end() == 4
 
 
-def test_fused_raw_interpreter_fuzz_equivalence():
-    import random
+def _fonts(first: str | None) -> FontTable:
+    return FontTable() if first is None else _mixed_font_table(first)
 
-    from pdftotext_spark.core.interpreter import (
-        _extract_text_raw_fused,
-        _extract_text_raw_tokens,
-    )
 
-    random.seed(7)
+def _fuzz_streams():
+    """3,000 random content streams, each with the default font to
+    read it under (``None``: an empty font table): 1,500 of operators
+    and operands joined by spaces, then 1,500 that also switch between
+    fonts and separate tokens by mixed whitespace runs."""
+    rng = random.Random(7)
     alphabet = [
         b"BT", b"ET", b"(txt)", b"(a(b)c)", b"<414 2>", b"[", b"]",
         b"-300", b"12", b"/F1", b"Tf", b"Td", b"TD", b"Tm", b"Tj",
@@ -408,27 +548,122 @@ def test_fused_raw_interpreter_fuzz_equivalence():
         b"Q", b"0.5", b"(x)",
     ]
     for _ in range(1500):
-        s = b" ".join(random.choices(alphabet, k=random.randrange(1, 40)))
-        assert _extract_text_raw_fused(s, FontTable()) == _extract_text_raw_tokens(
-            s, FontTable()
-        ), s
-    # again with fonts to switch between and mixed whitespace runs
+        yield b" ".join(rng.choices(alphabet, k=rng.randrange(1, 40))), None
     alphabet += [b"/F2", b"/F3", b"/F4", b"/Nope", b"<0001 0010>", b"(\\101b)", b">"]
     seps = [b" ", b"\x00", b"\x0c\n", b"\t\r \x00"]
     for i in range(1500):
-        toks = random.choices(alphabet, k=random.randrange(1, 40))
-        s = b"".join(t + random.choice(seps) for t in toks)
-        first = ("plain", "differences", "two_byte", "winansi")[i % 4]
-        assert _extract_text_raw_fused(s, _mixed_font_table(first)) == _extract_text_raw_tokens(
-            s, _mixed_font_table(first)
+        toks = rng.choices(alphabet, k=rng.randrange(1, 40))
+        s = b"".join(t + rng.choice(seps) for t in toks)
+        yield s, ("plain", "differences", "two_byte", "winansi")[i % 4]
+
+
+def test_fused_raw_interpreter_fuzz_equivalence():
+    for s, first in _fuzz_streams():
+        assert extract_text_raw(s, _fonts(first)) == _extract_text_raw_tokens(
+            s, _fonts(first)
         ), s
+
+
+# ------------------------------------------------- M5 statistics counting
+
+
+def test_count_statistics_pins_every_counter():
+    """One stream with every operator family, an unknown operator,
+    an inline image, marked content, a nested TJ array and a dict.
+    The pre-strip drops the image and the marked-content tags; the
+    dict is skipped whole; the nested array is one operand. Keys come
+    in order of first appearance."""
+    s = (
+        b"/Span << /MCID 0 >> BDC q BT /F1 12 Tf 14 TL 1 0 0 1 72 720 Tm "
+        b"(a) Tj 0 -14 Td [(b) -300 [(c)] (d)] TJ 0 -14 TD T* (e) ' "
+        b'1 2 (f) " ET Q EMC /P BMC BI /W 2 /H 2 ID xxxx EI EMC '
+        b"<< /K 1 >> 0 0 10 10 re f"
+    )
+    stats: dict[str, int] = {}
+    count_statistics(s, stats)
+    assert list(stats.items()) == [
+        ("text_size", len(s)),
+        # five spans become one space each: the BDC with its dict (22
+        # bytes fewer), two EMC (2 each), the BMC (5) and BI…EI (22)
+        ("optimized_text_size", len(s) - 53),
+        ("ignored_ops", 4),  # q Q re f
+        ("bt_et", 2),
+        ("operands", 23),
+        ("font_ops", 2),  # Tf TL
+        ("position_ops", 4),  # Tm Td TD T*
+        ("show_ops", 4),  # Tj TJ ' "
+    ]
+    # a second page adds to the same counters
+    count_statistics(s, stats)
+    assert stats["bt_et"] == 4 and stats["text_size"] == 2 * len(s)
+
+
+def test_count_statistics_matches_token_loop_stats():
+    """The counting pass gives the token loop's stats dict, key order
+    included, on the battery and fuzz streams, on fuzz streams with
+    inline images, marked content and nested arrays, and summed over
+    a run of streams as over a document's pages."""
+    rng = random.Random(5)
+    marked = [
+        b"BT", b"ET", b"(t)", b"[", b"]", b"[ [(n)] (o) ]", b"-300", b"/F1",
+        b"Tf", b"Tj", b"TJ", b"Td", b"q", b"BI /W 1 ID \x00\xff EI", b"BI",
+        b"EI", b"/Span << /MCID 3 >> BDC", b"/P BMC", b"/X BDC", b"EMC",
+        b"<< /A << /B 1 >> >>", b"re",
+    ]
+    extra = [
+        b" ".join(rng.choices(marked, k=rng.randrange(1, 30)))
+        for _ in range(2000)
+    ]
+    streams = (
+        _OP_BATTERY + _FONT_BATTERY + [s for s, _ in _fuzz_streams()] + extra
+    )
+    counted: dict[str, int] = {}
+    ref: dict[str, int] = {}
+    for s in streams:
+        one: dict[str, int] = {}
+        count_statistics(s, one)
+        one_ref: dict[str, int] = {}
+        _extract_text_raw_tokens(s, FontTable(), stats=one_ref)
+        assert list(one.items()) == list(one_ref.items()), s
+        count_statistics(s, counted)
+        _extract_text_raw_tokens(s, FontTable(), stats=ref)
+    assert list(counted.items()) == list(ref.items())
+
+
+def test_enhanced_statistics_counts_raw_mode_only():
+    from pdftotext_spark.sources import pdfbuilder as pb
+
+    pdf = pb.simple_pdf([["one", "two", "three"]])
+    on = ExtractOptions(enhanced_statistics=True)
+    assert extract_document(pdf, on).text == extract_document(pdf).text
+    layout = ExtractOptions(layout=True, enhanced_statistics=True)
+    assert extract_document(pdf, layout).stats == {}
+
+
+def test_raw_mode_calls_the_interpreter_through_document(monkeypatch):
+    """perfbench's traced run times the raw interpreter by patching
+    ``document.extract_text_raw``: a raw-mode document must reach it
+    through that module attribute, once per page."""
+    from pdftotext_spark.core import document
+    from pdftotext_spark.sources import pdfbuilder as pb
+
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(kwargs.get("page"))
+        return extract_text_raw(*args, **kwargs)
+
+    monkeypatch.setattr(document, "extract_text_raw", counting)
+    pdf, goldens = pb.multipage_pdf(4)
+    res = document.extract_document(pdf, ExtractOptions(enhanced_statistics=True))
+    assert res.pages == goldens
+    assert len(calls) == res.n_pages == 4
+    assert res.stats["show_ops"] > 0
 
 
 def test_find_based_object_scan_matches_regex():
     """_iter_objects (memmem-anchored) must agree with the original
     regex on builders, edge shapes and garbage fuzz."""
-    import random
-
     from pdftotext_spark.core.objects import _iter_objects
     from pdftotext_spark.sources import pdfbuilder as pb
 
@@ -464,9 +699,7 @@ def test_find_based_object_scan_matches_regex():
 
 
 def test_find_based_split_object_matches_regex():
-    import random
-
-    from pdftotext_spark.core.objects import _STREAM_RE, split_object
+    from pdftotext_spark.core.objects import split_object
 
     def ref(body):
         sm = _STREAM_RE.search(body)
@@ -500,10 +733,6 @@ def test_ignore_text_leading_option():
     later absolute Tm) changes; fused and token paths must agree in
     BOTH settings."""
     from pdftotext_spark.core.fonts import FontTable
-    from pdftotext_spark.core.interpreter import (
-        _extract_text_raw_fused,
-        _extract_text_raw_tokens,
-    )
 
     # TL 100 then three T*: honored leading walks y down 300; ignored
     # leading walks only 3 x font size. The absolute Tm afterwards
@@ -513,8 +742,8 @@ def test_ignore_text_leading_option():
         b"1 0 0 1 0 -350 Tm (z) Tj ET"
     )
     ft = FontTable()
-    honored_f = _extract_text_raw_fused(stream, ft)
-    ignored_f = _extract_text_raw_fused(stream, ft, ignore_text_leading=True)
+    honored_f = extract_text_raw(stream, ft)
+    ignored_f = extract_text_raw(stream, ft, ignore_text_leading=True)
     assert honored_f != ignored_f
     honored_t = _extract_text_raw_tokens(stream, ft)
     ignored_t = _extract_text_raw_tokens(

@@ -80,6 +80,34 @@ def test_knn_graph_and_fused_cc_never_cartesian(spark):
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan
 
 
+def _knn_band_structs():
+    """One (band_idx, band_bits) struct per band, band key computed
+    directly from its 4 planes (no 64-bit pack — bit 63 would overflow
+    a signed long): the Catalyst expression ``_knn_band_keys_pd``
+    replaced, kept as its differential twin."""
+    from pyspark.sql import functions as F
+
+    out = []
+    for i in range(similarity.KNN_SRP_BANDS):
+        key = None
+        for j in range(similarity.KNN_SRP_BAND_BITS):
+            plane = similarity._KNN_PLANES_LITERALS[
+                i * similarity.KNN_SRP_BAND_BITS + j
+            ]
+            arr = F.array(*[F.lit(x) for x in plane])
+            bit = (
+                F.when(similarity._dot(F.col("embedding"), arr) > 0, F.lit(1 << j))
+                .otherwise(F.lit(0))
+            )
+            key = bit if key is None else key + bit
+        out.append(
+            F.struct(
+                F.lit(i).alias("band_idx"), key.cast("long").alias("band_bits")
+            )
+        )
+    return out
+
+
 def test_knn_numpy_band_keys_equal_expression_twin(spark):
     """Differential twin for the r5 numpy band-key rewrite (the perf-
     rewrite twin rule): the Arrow-batched sequential-accumulation keys
@@ -97,7 +125,7 @@ def test_knn_numpy_band_keys_equal_expression_twin(spark):
     )
     via_expr = emb.select(
         F.col("vec_id").cast("long").alias("vec_id"),
-        F.explode(F.array(*similarity._knn_band_structs())).alias("b"),
+        F.explode(F.array(*_knn_band_structs())).alias("b"),
     ).select("vec_id", F.col("b.band_idx").cast("int").alias("band_idx"), "b.band_bits")
     assert via_np.exceptAll(via_expr).count() == 0
     assert via_expr.exceptAll(via_np).count() == 0
