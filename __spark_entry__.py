@@ -92,7 +92,7 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ngram_decontamination": dedup.ngram_decontamination,  # GPT-3 token-13-gram rule
     "ngram_decontaminate_apply": dedup.ngram_decontaminate_apply,  # its survivor filter
     "incremental_pipeline": curation.incremental_pipeline,  # per-increment admission gate
-    "quality_vote": curation.quality_vote,            # 4-policy quality panel vote
+    "quality_vote": curation.quality_vote,            # 5-policy quality panel vote
     # prose-frame family (deterministic multi-line punctuated corpus
     # derived in BOTH engines — unlocks the line-level policies the
     # raw single-line fixture degenerates)

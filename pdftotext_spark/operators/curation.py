@@ -24,32 +24,42 @@ same policy every stage reports standalone, so the pipeline output is
 exactly the intersection of the standalone survivor sets (pinned by
 test).
 
-100 TB shape: ONE materialized sampled-shingle scan feeds BOTH the
+100 TB shape: every policy is a column of ONE per-document flags
+frame (:func:`_policy_flags`): the corpus scan projects the two
+row-local predicates, and the three detectors arrive as slim unique
+doc_id frames left-joined as presence markers (plus the vote's, when
+a query votes). ONE materialized sampled-shingle scan feeds BOTH the
 LSH and decontamination detectors (the scan is the headline cost of
 the dedup family — review r5), each detector is banded/grouped (no
-all-pairs anywhere), then three semi/anti joins on narrow doc_id
-keys; AQE broadcasts the small survivor/loser sides.
+all-pairs anywhere), and AQE broadcasts the slim marker sides. The
+pipelines filter that frame on every flag; the funnel counts it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+from operator import and_
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdftotext_spark.operators import dedup, textstats
+from pdftotext_spark.operators.materialize import spread
 
 
-def _detector_keys(
-    spark: SparkSession, sf_dir: str, docs: DataFrame
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The three corpus-level detectors as slim unique doc_id frames:
-    ``exact_keep`` (canonical copies), ``lsh_losers`` (distinct
-    near-dup losers) and ``decon_keep`` (contamination at or below
-    the threshold).  ONE materialized sampled-shingle cut feeds both
-    shingle-based detectors — the standalone operators would each
-    re-scan and re-hash the corpus; the shared distinct frame is
-    pinned equivalent by the pipeline tests (MinHash min() is
-    duplicate-insensitive)."""
+def _policy_flags(
+    spark: SparkSession, sf_dir: str, vote_keep: DataFrame | None = None
+) -> tuple[DataFrame, list[Column]]:
+    """One row per document (``doc_id``, ``source``, ``n_tokens``) and
+    the curation policies as boolean Columns over it, in application
+    order: benchmark exclusion, the shallow gate, the vote (with a
+    ``vote_keep`` frame), exact dedup, near-dup dedup and
+    decontamination. The detectors arrive as unique doc_id frames
+    (canonical copies, DISTINCT near-dup losers, per-doc contamination
+    verdicts), so each left join keeps one row per document; ONE
+    materialized sampled-shingle cut feeds both shingle detectors
+    (MinHash min() is duplicate-insensitive)."""
+    docs = dedup._read(spark, sf_dir, "documents")
     s = dedup._source_shingles(docs)
     exact_keep = dedup.dedup_exact(spark, sf_dir).select(
         F.col("canonical_doc_id").alias("doc_id")
@@ -64,29 +74,51 @@ def _detector_keys(
         )
         .select("doc_id")
     )
-    return exact_keep, lsh_losers, decon_keep
+    flags = docs.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        "source",
+        (textstats._count_occ(F.col("text"), " ") + 1)
+        .cast("long")
+        .alias("n_tokens"),
+        (F.col("source") != "src0").alias("benchmark_excluded"),
+        textstats.qf_keep_predicate().alias("shallow_quality"),
+    )
+    # marker join order is not stage order: this one launched the
+    # fewest Spark jobs under AQE (sf0.01, local[4])
+    markers = dict(in_decon=decon_keep, in_exact=exact_keep,
+                   is_loser=lsh_losers)
+    stages = [F.col("benchmark_excluded"), F.col("shallow_quality")]
+    if vote_keep is not None:
+        markers["in_vote"] = vote_keep
+        stages.append(F.col("in_vote").isNotNull())
+    for name, keys in markers.items():
+        flags = flags.join(
+            keys.select("doc_id", F.lit(1).alias(name)), "doc_id", "left"
+        )
+    stages += [
+        F.col("in_exact").isNotNull(),
+        F.col("is_loser").isNull(),
+        F.col("in_decon").isNotNull(),
+    ]
+    return flags, stages
+
+
+def _survivors(
+    spark: SparkSession, sf_dir: str, vote_keep: DataFrame | None = None
+) -> DataFrame:
+    """``(doc_id, source, n_tokens)`` of every document that all
+    policies of :func:`_policy_flags` keep."""
+    flags, stages = _policy_flags(spark, sf_dir, vote_keep)
+    return flags.filter(reduce(and_, stages)).select(
+        "doc_id", "source", "n_tokens"
+    )
 
 
 def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The surviving training set: (doc_id, source, n_tokens) after
     benchmark exclusion, quality gates, exact + near-dup dedup and
     decontamination (see module docstring)."""
-    docs = dedup._read(spark, sf_dir, "documents")
-    n_words = (textstats._count_occ(F.col("text"), " ") + 1).cast("long")
-    exact_keep, lsh_losers, decon_keep = _detector_keys(spark, sf_dir, docs)
-    return (
-        docs.filter(F.col("source") != "src0")
-        .filter(textstats.qf_keep_predicate())
-        .select("doc_id", "source", n_words.alias("n_tokens"))
-        .join(exact_keep, "doc_id", "left_semi")
-        .join(lsh_losers, "doc_id", "left_anti")
-        .join(decon_keep, "doc_id", "left_semi")
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            "source",
-            F.col("n_tokens").cast("long").alias("n_tokens"),
-        )
-    )
+    return _survivors(spark, sf_dir)
 
 
 # the stage subqueries nest the standalone operators' own SQL twins
@@ -132,17 +164,11 @@ def curation_pipeline_panels(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate (``streaming/curation.py`` ``panels=True``) and the
     constructed-input tests.
 
-    100 TB shape: the base pipeline plan plus four additional narrow
-    panel scans (no panel aggregates across documents;
-    gopher_repetition only spreads a single-split input), intersected
-    on a slim doc_id key that AQE broadcasts."""
-    vote_keep = (
-        quality_vote(spark, sf_dir)
-        .filter(F.col("keep_majority"))
-        .select("doc_id")
-    )
-    return curation_pipeline(spark, sf_dir).join(
-        vote_keep, "doc_id", "left_semi"
+    100 TB shape: the base pipeline's flags frame with one more slim
+    doc_id marker — the vote's, itself one spread scan and one row
+    function (:func:`quality_vote_for`) — that AQE broadcasts."""
+    return _survivors(
+        spark, sf_dir, quality_vote(spark, sf_dir).filter("keep_majority")
     )
 
 
@@ -222,11 +248,11 @@ def quality_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     one panel rejects and the others keep), which a single composed
     boolean cannot show.
 
-    100 TB shape: each panel is its own corpus scan (the panels'
-    plans are individually audited; all are per-document maps, and
-    gopher_repetition's only Exchange spreads a single-split input),
-    joined on slim (doc_id, flag) frames that AQE broadcasts — no
-    full-width row survives past its panel."""
+    100 TB shape: one corpus scan, spread once, then a per-document
+    chain with no join and one Exchange (the spread): the four
+    Catalyst panels add their keeps as columns of the one stream and
+    the repetition row function carries them through as keys — no
+    full-width row survives past the scan's projection."""
     return quality_vote_for(dedup._read(spark, sf_dir, "documents"))
 
 
@@ -234,40 +260,38 @@ def quality_vote_for(docs: DataFrame) -> DataFrame:
     """Core of :func:`quality_vote` over an arbitrary
     ``(doc_id, text)`` frame — the five-panel composition reused by
     the prose-frame variant (``operators/prose.py``), where the
-    unanimous rule is exercised on punctuated multi-line text."""
-    shallow = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        textstats.qf_keep_predicate().alias("keep_shallow"),
+    unanimous rule is exercised on punctuated multi-line text.  One
+    output row per input row: the panels are row maps of the same
+    stream, never joined on ``doc_id``."""
+    # the repetition row function fans out up to 9 grams per word, so
+    # a one-split input would count the whole corpus on one core
+    out = spread(docs.select("doc_id", "text"), "doc_id").withColumn(
+        "keep_shallow", textstats.qf_keep_predicate()
     )
-    gq = textstats.gopher_quality_for(docs).select(
-        "doc_id", F.col("keep").alias("keep_gopher_quality")
-    )
-    gr = textstats.gopher_repetition_for(docs).select(
-        "doc_id", F.col("keep").alias("keep_gopher_repetition")
-    )
-    c4 = textstats.c4_quality_for(docs).select(
-        "doc_id", F.col("keep").alias("keep_c4")
-    )
-    fw = textstats.fineweb_quality_for(docs).select(
-        "doc_id", F.col("keep").alias("keep_fineweb")
+    keeps = ["keep_shallow"]
+    for flag, panel in (
+        ("keep_gopher_quality", textstats.gopher_quality_for),
+        ("keep_c4", textstats.c4_quality_for),
+        ("keep_fineweb", textstats.fineweb_quality_for),
+    ):
+        out = panel(out, ["text", *keeps]).select(
+            "doc_id", "text", *keeps, F.col("keep").alias(flag)
+        )
+        keeps.append(flag)
+    out = textstats.gopher_repetition_for(out, keeps).withColumnRenamed(
+        "keep", "keep_gopher_repetition"
     )
     flags = ["keep_shallow", "keep_gopher_quality",
              "keep_gopher_repetition", "keep_c4", "keep_fineweb"]
     votes = sum(
         (F.col(f).cast("int") for f in flags), F.lit(0)
     ).cast("long")
-    return (
-        shallow.join(gq, "doc_id")
-        .join(gr, "doc_id")
-        .join(c4, "doc_id")
-        .join(fw, "doc_id")
-        .select(
-            "doc_id",
-            *flags,
-            votes.alias("n_keep_votes"),
-            (votes == len(flags)).alias("keep_all"),
-            (votes >= 3).alias("keep_majority"),
-        )
+    return out.select(
+        "doc_id",
+        *flags,
+        votes.alias("n_keep_votes"),
+        (votes == len(flags)).alias("keep_all"),
+        (votes >= 3).alias("keep_majority"),
     )
 
 
@@ -335,54 +359,21 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     previous stage's survivors after one more policy, so the last row
     equals ``count(curation_pipeline_panels)``.
 
-    100 TB shape (r7 single-pass rewrite): per-document stage flags
-    are computed in ONE pass — the corpus scan projects the two
-    row-local predicates, the vote keep set and the three
-    :func:`_detector_keys` frames that :func:`curation_pipeline` joins
-    on arrive as slim unique doc_id frames (each detector subtree
-    evaluated exactly once) left-joined as presence markers — then a
-    SINGLE aggregate of cumulative-AND ``count_if`` columns produces
-    all seven counts, unstacked into rows by a generator.  The old
-    shape (a union of seven chained semi/anti-join counts) re-planned
-    every detector subtree once per downstream branch — Spark shares
-    no lineage across union branches (ReusedExchange does not
-    collapse differently-projected subtrees, the r6 ExactSubstr
-    lesson) — so the panel/LSH/digest subtrees ran up to 4x each;
-    measured interleaved at sf0.1: 13.0 s -> 10.0 s (0.77x), with the
-    remaining cost the detectors themselves.  Each marker frame is
-    unique by
-    construction (per-doc verdicts, distinct canonical ids, explicit
-    DISTINCT on the loser side), so the left joins are
-    row-preserving; output is pinned byte-identical to the chained
-    shape by test."""
-    docs = dedup._read(spark, sf_dir, "documents")
-    vote_keep = (
-        quality_vote(spark, sf_dir)
-        .filter(F.col("keep_majority"))
-        .select("doc_id", F.lit(1).alias("in_vote"))
+    100 TB shape: the panels pipeline's own flags frame
+    (:func:`_policy_flags`, each detector evaluated once) and ONE
+    aggregate of cumulative-AND ``count_if`` columns, unstacked into
+    rows by a generator. A union of seven chained semi/anti-join
+    counts re-planned every detector subtree per branch (Spark shares
+    no lineage across union branches; measured at sf0.1: 13.0 s ->
+    10.0 s). Output is pinned byte-identical to the chained shape by
+    test."""
+    flags, stages = _policy_flags(
+        spark, sf_dir, quality_vote(spark, sf_dir).filter("keep_majority")
     )
-    exact_keep, lsh_losers, decon_keep = _detector_keys(spark, sf_dir, docs)
-    base = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        (F.col("source") != "src0").alias("f1"),
-        textstats.qf_keep_predicate().alias("qf"),
-    )
-    flags = (
-        base.join(vote_keep, "doc_id", "left")
-        .join(exact_keep.withColumn("in_exact", F.lit(1)), "doc_id", "left")
-        .join(lsh_losers.withColumn("is_loser", F.lit(1)), "doc_id", "left")
-        .join(decon_keep.withColumn("in_decon", F.lit(1)), "doc_id", "left")
-    )
-    f1 = F.col("f1")
-    f2 = f1 & F.col("qf")
-    f3 = f2 & F.col("in_vote").isNotNull()
-    f4 = f3 & F.col("in_exact").isNotNull()
-    f5 = f4 & F.col("is_loser").isNull()
-    f6 = f5 & F.col("in_decon").isNotNull()
-    cnt = [F.count("*").cast("long").alias("c0")] + [
-        F.count_if(f).cast("long").alias(f"c{i}")
-        for i, f in enumerate([f1, f2, f3, f4, f5, f6], start=1)
-    ]
+    cum, cnt = F.lit(True), [F.count("*").cast("long").alias("c0")]
+    for i, stage in enumerate(stages, start=1):
+        cum = cum & stage
+        cnt.append(F.count_if(cum).cast("long").alias(f"c{i}"))
     stack_args = ", ".join(
         f"CAST({i} AS BIGINT), '{stage}', c{i}"
         for i, stage in enumerate(_FUNNEL_STAGES)

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pdftotext_spark.operators import curation, dedup
-from pdftotext_spark.operators.materialize import materialize, materialize_lazy
+from pdftotext_spark.operators.materialize import materialize
 
 # words per planted sentence (one sentence per line in the body)
 PROSE_SENT_W = 8
@@ -162,22 +162,12 @@ def quality_vote_prose(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gopher word-count and C4 sentence-count rules (measured at
     sf0.01: 358/500 keep_all — non-degenerate in both directions).
 
-    100 TB shape: the composition is quality_vote's own plan (five
-    narrow scans, one repetition shuffle, slim doc_id joins) over the
-    prose frame materialized ONCE (r7): the vote fans the frame into
-    FIVE panel consumers, so the pipelined map would re-run the
-    sentence regexp per panel (the two-consumer lineage rule, times
-    five — measured: best 2.57→2.31 s and spread 2.6–4.8→2.3–3.0 s at
-    sf0.1). The cut is lazy: it fills under the vote's own action, so
-    construction runs no scan and the five panels still share one
-    lineage cut (interleaved A/B against the eager cut, same rows:
-    median 4.65→4.48 s at sf0.1, 1.57→1.49 s on 500 docs, local[4]
-    on a 4-core host). Single-consumer users of :func:`prose_frame`
-    (the boilerplate miners) keep the zero-shuffle pipelined form."""
+    100 TB shape: quality_vote's own plan (one spread scan, one row
+    function, no join) over the prose frame, which pipelines into it:
+    the vote is the frame's only consumer, so the sentence regexp
+    runs once per document without a lineage cut."""
     return curation.quality_vote_for(
-        prose_frame(_read(spark, sf_dir, "documents")).transform(
-            materialize_lazy
-        )
+        prose_frame(_read(spark, sf_dir, "documents"))
     )
 
 
@@ -197,15 +187,10 @@ def curation_pipeline_unanimous(
     quality_vote_prose.keep_all`` (set intersection on doc_id; the
     panels vote on the prose rendering of the same document).
 
-    100 TB shape: the base pipeline plan plus the five panel scans,
-    intersected on a slim doc_id key that AQE broadcasts."""
-    vote_keep = (
-        quality_vote_prose(spark, sf_dir)
-        .filter(F.col("keep_all"))
-        .select("doc_id")
-    )
-    return curation.curation_pipeline(spark, sf_dir).join(
-        vote_keep, "doc_id", "left_semi"
+    100 TB shape: the base pipeline's flags frame with one more slim
+    doc_id marker — the prose vote's — that AQE broadcasts."""
+    return curation._survivors(
+        spark, sf_dir, quality_vote_prose(spark, sf_dir).filter("keep_all")
     )
 
 

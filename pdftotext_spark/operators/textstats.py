@@ -11,6 +11,7 @@ both engines produce identical integers with no regex-dialect risk.
 from __future__ import annotations
 
 from collections import Counter
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -261,14 +262,16 @@ def gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gopher_quality_for(_read(spark, sf_dir, "documents"))
 
 
-def gopher_quality_for(docs: DataFrame) -> DataFrame:
+def gopher_quality_for(docs: DataFrame, carry: Sequence[str] = ()) -> DataFrame:
     """Core of :func:`gopher_quality` over an arbitrary
     ``(doc_id, text)`` frame (constructed-input surface for the
     semantic tests — every rule is pinned on documents built to
-    trip exactly that rule)."""
+    trip exactly that rule). The ``carry`` columns of ``docs`` pass
+    through after ``doc_id``."""
     nl = "replace(lower(text), chr(10), ' ')"
     base = docs.select(
         "doc_id",
+        *carry,
         F.expr(f"filter(split({nl}, ' '), x -> x <> '')").alias("a"),
         F.expr("split(text, chr(10))").alias("lines"),
         _count_occ(F.col("text"), "#").alias("n_hash"),
@@ -279,6 +282,7 @@ def gopher_quality_for(docs: DataFrame) -> DataFrame:
     stop_hits = F.size(F.expr(f"filter(a, x -> x IN ({stop_list}))"))
     m = base.select(
         "doc_id",
+        *carry,
         "n_hash",
         "n_ell",
         F.size("a").cast("long").alias("n_words"),
@@ -329,6 +333,7 @@ def gopher_quality_for(docs: DataFrame) -> DataFrame:
     zero = F.lit(0.0)
     return m.select(
         F.col("doc_id").cast("long").alias("doc_id"),
+        *carry,
         "n_words",
         F.round(F.when(nz, mwl).otherwise(zero), 3).alias("mean_word_len"),
         F.round(F.when(nz, hashr).otherwise(zero), 4).alias("hash_ratio"),
@@ -460,9 +465,10 @@ def c4_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c4_quality_for(_read(spark, sf_dir, "documents"))
 
 
-def c4_quality_for(docs: DataFrame) -> DataFrame:
+def c4_quality_for(docs: DataFrame, carry: Sequence[str] = ()) -> DataFrame:
     """Core of :func:`c4_quality` over an arbitrary ``(doc_id, text)``
-    frame (constructed-input test surface)."""
+    frame (constructed-input test surface). The ``carry`` columns of
+    ``docs`` pass through after ``doc_id``."""
     terms = ", ".join(f"'{t}'" for t in C4_TERMINALS)
     policy = " OR ".join(
         f"contains(lower(x), '{p}')" for p in C4_POLICY_SUBSTRINGS
@@ -477,6 +483,7 @@ def c4_quality_for(docs: DataFrame) -> DataFrame:
     )
     base = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
+        *carry,
         F.expr("size(split(text, chr(10)))").cast("long").alias("n_lines"),
         F.expr(f"array_join({kept}, chr(10))").alias("cleaned_text"),
         F.expr(f"size({kept})").cast("long").alias("n_kept_lines"),
@@ -492,6 +499,7 @@ def c4_quality_for(docs: DataFrame) -> DataFrame:
     )
     return base.select(
         "doc_id",
+        *carry,
         "n_lines",
         "n_kept_lines",
         n_sent.cast("long").alias("n_sentences"),
@@ -581,14 +589,16 @@ def fineweb_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fineweb_quality_for(_read(spark, sf_dir, "documents"))
 
 
-def fineweb_quality_for(docs: DataFrame) -> DataFrame:
+def fineweb_quality_for(docs: DataFrame, carry: Sequence[str] = ()) -> DataFrame:
     """Core of :func:`fineweb_quality` over an arbitrary
-    ``(doc_id, text)`` frame (constructed-input test surface)."""
+    ``(doc_id, text)`` frame (constructed-input test surface). The
+    ``carry`` columns of ``docs`` pass through after ``doc_id``."""
     terms = ", ".join(
         f"'{t.replace(chr(39), chr(39) * 2)}'" for t in FINEWEB_TERMINALS
     )
     base = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
+        *carry,
         F.expr("filter(split(text, chr(10)), x -> trim(x) <> '')").alias(
             "lines"
         ),
@@ -609,6 +619,7 @@ def fineweb_quality_for(docs: DataFrame) -> DataFrame:
     )
     m = base.select(
         "doc_id",
+        *carry,
         "n_newlines",
         "n_words",
         "nchars",
@@ -639,6 +650,7 @@ def fineweb_quality_for(docs: DataFrame) -> DataFrame:
     zero = F.lit(0.0)
     return m.select(
         "doc_id",
+        *carry,
         "n_lines",
         F.round(F.when(nz, punct).otherwise(zero), 4).alias(
             "line_punct_ratio"
@@ -991,7 +1003,8 @@ def gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory is bounded by the largest document, not the corpus; only
     a single-split input is spread across the cores first
     (:func:`~pdftotext_spark.operators.materialize.spread`)."""
-    return gopher_repetition_for(_read(spark, sf_dir, "documents"))
+    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    return gopher_repetition_for(spread(docs, "doc_id"))
 
 
 # the integer n-gram signature per document: t<n> top-n-gram chars,
@@ -1036,17 +1049,15 @@ def repetition_signature(df: DataFrame, keys: list[str]) -> DataFrame:
     return map_rows(df, keys, ["a"], schema, repetition_counts)
 
 
-def gopher_repetition_for(docs: DataFrame) -> DataFrame:
+def gopher_repetition_for(docs: DataFrame, carry: Sequence[str] = ()) -> DataFrame:
     """Core of :func:`gopher_repetition` over an arbitrary
-    ``(doc_id, text)`` frame (constructed-input test surface)."""
-    # the row function fans out up to 9 grams per word, so a one-split
-    # input would count the whole corpus on one core
-    docs = spread(
-        docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text"),
-        "doc_id",
-    )
+    ``(doc_id, text)`` frame (constructed-input test surface). The
+    ``carry`` columns of ``docs`` ride through the row function as
+    keys and come out after ``doc_id``. A caller spreads a
+    single-split input first (:func:`gopher_repetition` does)."""
     base = docs.select(
-        "doc_id",
+        F.col("doc_id").cast("long").alias("doc_id"),
+        *carry,
         F.length("text").cast("long").alias("tchars"),
         F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("a"),
         F.expr("split(text, chr(10))").alias("lines"),
@@ -1055,6 +1066,7 @@ def gopher_repetition_for(docs: DataFrame) -> DataFrame:
     # line/paragraph rules: per-row lambdas bounded by block count
     lineside = base.select(
         "doc_id",
+        *carry,
         "tchars",
         F.size("lines").cast("long").alias("n_lines"),
         (F.size("lines") - F.size(F.array_distinct("lines")))
@@ -1098,6 +1110,7 @@ def gopher_repetition_for(docs: DataFrame) -> DataFrame:
         ok_dup = c if ok_dup is None else (ok_dup & c)
     return m.select(
         "doc_id",
+        *carry,
         F.round(line_frac, 4).alias("dup_line_frac"),
         F.round(line_char_frac, 4).alias("dup_line_char_frac"),
         F.round(para_frac, 4).alias("dup_para_frac"),

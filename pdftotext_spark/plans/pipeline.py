@@ -43,6 +43,7 @@ from __future__ import annotations
 from functools import partial
 
 from pyspark import AccumulatorParam, TaskContext
+from pyspark.accumulators import _accumulatorRegistry
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -442,6 +443,10 @@ def run_extraction(
         "append"
     ).parquet(output_path)
     if counter is not None:
+        # every task's update is merged (a blocking call into the
+        # driver's accumulator server) before the write returns; the
+        # registry would otherwise keep one accumulator per run
+        _accumulatorRegistry.pop(counter.aid)
         write_manifest(spark, counter.value, run_id, metrics_path)
     return spark.read.schema(COMMITTED_SCHEMA).parquet(output_path)
 

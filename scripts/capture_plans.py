@@ -37,7 +37,7 @@ PICKS = {
     "training_order": "Training order (r6): corpus row_number window PARTITIONED by the 256-value hash-prefix bucket; the only SinglePartition exchange is above the 256-row count aggregate; offsets join back broadcast",
     "top_duplicated_spans": "Boilerplate report (r6): the ExactSubstr single-scan island subtree (one Generate) + join back to text + TakeOrderedAndProject on total_dup_chars",
     "fineweb_quality": "FineWeb panel (r6s3): zero-shuffle narrow map — every line-shape signal is an array expression inside one WholeStageCodegen scan (the whole panel family shares this shape; c4/gopher_quality/encoding/text_normalize/strip_repeated_lines pinned identical by test)",
-    "quality_vote": "Five-policy vote (r6s3): each panel is its own pruned scan; verdicts join on slim (doc_id, flag) frames — gopher_repetition is the only subtree with an exchange",
+    "quality_vote": "Five-policy vote: ONE pruned scan spread once (the only exchange), the four Catalyst panels' keeps as columns of that stream, then the one repetition MapInPandas carrying them as keys — no join",
     "ngram_decontamination": "Token-13-gram decontamination (r6s3): ONE window explode over the training side, benchmark gram set distinct-bounded and joined left-semi (AQE broadcasts while small), per-doc counts from one partial-agg groupBy; the window-total side is a narrow pruned re-scan, not a second explode",
     "boilerplate_lines": "Boilerplate miner (r6s4): ONE posexplode of the prose frame, df + example via one aggregate on the line hash, TakeOrderedAndProject on (df, line) — no self-join",
     "paragraph_dedup_newline": "Real-segmenter CCNet (r6s4): ONE posexplode, ONE exchange, first-copy keep via a min-struct window on md5(seg_text) — no groupBy+join-back of the corpus-sized segment frame",

@@ -24,6 +24,7 @@ from __future__ import annotations
 import datetime
 import json
 import multiprocessing as mp
+import os
 import subprocess
 import sys
 import time
@@ -149,9 +150,10 @@ def main() -> None:
         f"over {ROUNDS} rounds, best-of per level (external tenant noise on this",
         "shared host otherwise biases whichever level lands in a noise window).",
         "Hardware ceiling =",
-        "tight-loop multiprocessing scaling at the same level pair — this host has 32",
-        "SMT threads on 16 physical cores, so 8→32 is hardware-capped below 1.0;",
-        "2→8 stays within physical cores and is the clean executor-scaling analog",
+        "tight-loop multiprocessing scaling at the same level pair — this host reports",
+        f"{os.cpu_count()} logical CPUs (`os.cpu_count()`); a pair whose upper level exceeds",
+        "that count time-shares the CPUs and is hardware-capped below 1.0, so there the",
+        "normalized column is the executor-scaling evidence",
         "(north_rule N→4N criterion evidenced via parallelism levels; BASELINE.md).",
     ]
     header = ""

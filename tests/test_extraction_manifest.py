@@ -77,6 +77,22 @@ def test_resumed_manifest_equals_metrics_manifest(spark, transcripts_dir, tmp_pa
     assert sum(r["turns_parsed"] for r in r2) == 200 - n_first
 
 
+def test_run_extraction_drops_its_accumulator(spark, transcripts_dir, tmp_path):
+    """Each run's ``PartitionSums`` leaves PySpark's driver-side
+    accumulator registry once its manifest is written, so the registry
+    does not grow across runs, and the manifests still count every
+    turn."""
+    from pyspark.accumulators import _accumulatorRegistry
+
+    src = f"{transcripts_dir}/transcripts.parquet"
+    before = dict(_accumulatorRegistry)
+    for run in ("r1", "r2"):
+        run_extraction(spark, src, str(tmp_path / run), str(tmp_path / f"m{run}"), run_id=run)
+        assert _accumulatorRegistry == before
+        rows = _assert_manifest_is_oracle(spark, str(tmp_path / run), str(tmp_path / f"m{run}"), run)
+        assert sum(r["turns_parsed"] for r in rows) == 200
+
+
 _RETRY_SCRIPT = """
 import json, os, sys
 sys.path.insert(0, {repo!r})

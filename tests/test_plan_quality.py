@@ -471,6 +471,20 @@ def test_gopher_repetition_one_row_function(spark, monkeypatch):
     assert not one_row_function(_plan(textstats.gopher_repetition(spark, SF)))
 
 
+def test_quality_vote_one_scan_no_join(spark):
+    """The five-panel vote is one row-wise chain over one corpus scan:
+    no Join, one parquet scan and one MapInPandas (the repetition row
+    function, which carries the other four keeps as keys). The pin
+    fails on a vote that runs each panel as its own scan and joins
+    the verdicts on doc_id."""
+    from pdftotext_spark.operators import curation
+
+    plan = _plan(curation.quality_vote(spark, SF))
+    assert "Join" not in plan
+    assert plan.count("Scan parquet") == 1
+    assert plan.count("MapInPandas") == 1
+
+
 def _subtree(lines, i):
     """Plan lines of the node on ``lines[i]`` and everything below it."""
     depth = len(lines[i]) - len(lines[i].lstrip(" :+-"))
@@ -886,15 +900,15 @@ def test_curation_funnel_single_pass(spark):
     """curation_funnel (r7 rewrite): per-doc stage flags in ONE pass +
     a single cumulative-AND aggregate — NOT a union of seven chained
     semi/anti-join counts whose detector subtrees re-plan per branch
-    (Spark shares no lineage across union branches).  Corpus scans:
-    flags base (1) + quality_vote panels (5) + exact digests (1) +
-    LSH shingles (1) + decontamination (2) = 10, each detector
-    exactly once."""
+    (Spark shares no lineage across union branches).  Parquet scans:
+    flags base (1) + the quality vote's one spread scan (1) + exact
+    digests (1) = 3, each exactly once; the LSH and decontamination
+    detectors read the one materialized shingle cut."""
     from pdftotext_spark.operators import curation
 
     plan = _plan(curation.curation_funnel(spark, SF))
     assert "Union" not in plan
-    assert plan.count("Scan parquet") <= 10
+    assert plan.count("Scan parquet") == 3
 
 
 def test_perplexity_rank_window_is_tie_bounded(spark):

@@ -228,3 +228,51 @@ def test_curation_pipeline_unanimous_is_intersection(spark, sf_dir):
     }
     assert got == base & keep_all
     assert 0 < len(got) < len(base)  # the vote actually cuts
+
+
+def test_quality_vote_prose_frame_matches_standalone_panels(spark, sf_dir):
+    """Differential twin of the five-panel vote on the prose frame:
+    every flag of ``quality_vote_for`` equals the standalone core's
+    ``keep`` (the shallow predicate for ``keep_shallow``) row by row,
+    also on a null-text, an empty-text and a repetitive row, and each
+    flag takes both values. On the raw corpus C4 and FineWeb reject every
+    document, so only this frame tells ``keep_c4`` from
+    ``keep_fineweb``. A repeated input row comes out once per copy:
+    the vote is one row per input row, not a join on ``doc_id``."""
+    from pdftotext_spark.operators import curation
+    from pdftotext_spark.operators import textstats as ts
+
+    pf = prose.prose_frame(
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+    ).select("doc_id", "text")
+    # the prose frame repeats no n-gram enough to fail the repetition
+    # panel, so one planted row does
+    extra = spark.createDataFrame(
+        [(10**9, None), (10**9 + 1, ""),
+         (10**9 + 2, "Buy one now and save more today.\n" * 20)],
+        "doc_id long, text string",
+    )
+    pf = pf.unionByName(extra).unionByName(pf.orderBy("doc_id").limit(1))
+    n_rows = pf.count()
+    vote = curation.quality_vote_for(pf).collect()
+    assert len(vote) == n_rows
+    got = {r.doc_id: r for r in vote}
+    assert len(got) == n_rows - 1
+    want = {
+        "keep_shallow": {
+            r.doc_id: r.k
+            for r in pf.select(
+                "doc_id", ts.qf_keep_predicate().alias("k")
+            ).collect()
+        }
+    }
+    for flag, core in (
+        ("keep_gopher_quality", ts.gopher_quality_for),
+        ("keep_gopher_repetition", ts.gopher_repetition_for),
+        ("keep_c4", ts.c4_quality_for),
+        ("keep_fineweb", ts.fineweb_quality_for),
+    ):
+        want[flag] = {r.doc_id: r.keep for r in core(pf).collect()}
+    for flag, keep in want.items():
+        assert {d: r[flag] for d, r in got.items()} == keep, flag
+        assert {True, False} <= set(keep.values()), flag
